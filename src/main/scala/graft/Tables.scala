@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.Published
+
 /** Loaders for the driver-generated parquet fixture tables
   * (see TESTDATA.md / FIXTURES.md §B). All reads go through here so
   * schema expectations and scan options live in one place.
@@ -19,38 +21,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized per session+path: repeated loads of the same table
-  // otherwise re-list files and re-read parquet footers on every
-  // query — measurable fixed cost when a suite runs 50 queries
-  // against the same ten tables. The outer map holds sessions WEAKLY,
-  // and the inner map sits behind a SoftReference: cached DataFrames
-  // strongly reference their SparkSession (via QueryExecution), so a
-  // strongly-held value would pin its own WeakHashMap key forever —
-  // the soft indirection breaks that cycle, letting a stopped,
-  // otherwise-unreferenced session (and its plans) be reclaimed under
-  // memory pressure. Entries assume the fixture files are immutable
-  // for the session lifetime — call invalidate() after rewriting a
-  // table path in-session.
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]]())
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = cache.synchronized {
-      val ref = cache.get(spark)
-      val existing = if (ref == null) null else ref.get()
-      if (existing == null) {
-        val m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        cache.put(spark, new java.lang.ref.SoftReference(m))
-        m
-      } else existing
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
-  }
-
-  /** Drop memoized frames (needed only if a fixture path is rewritten
-    * within a live session). */
-  def invalidate(): Unit = cache.synchronized(cache.clear())
+  /** `dir/name.parquet`, read once per session and table file
+    * inventory ([[graft.state.Published]]): repeated loads of the same
+    * table otherwise re-list files and re-read parquet footers on
+    * every query — measurable fixed cost when a suite runs 50 queries
+    * against the same ten tables — and a table rewritten in place is
+    * re-read. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    Published(spark, s"tables.$name", dir, Published.inventory(dir, name))(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

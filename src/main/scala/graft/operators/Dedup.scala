@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.state.Published
 import graft.syntax._
 
 /** Near-duplicate detection for the training-data pipeline: shingling,
@@ -1402,10 +1403,10 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
-  /** The q62 component labels WITHOUT the cluster-size join-back —
+  /** The q62 component labels WITHOUT the cluster-size window —
     * (doc_id, lbl) for every pair endpoint. q103 consumes this
-    * directly (it never needs sizes, and the size join would be the
-    * only non-broadcast join in its plan). */
+    * directly (it never needs sizes, and the size window's exchange
+    * and sort would be dead work in its plan). */
   private[graft] def clusterLabels(pairs: DataFrame): DataFrame = {
     // materialize the pair set BEFORE symmetrizing: the union
     // references `pairs` twice, and a deep pair plan (the LSH verify
@@ -1602,8 +1603,8 @@ object Dedup {
   // ---------------------------------------------------------------
 
   def dedupKeepCorpus(spark: SparkSession, dir: String): DataFrame =
-    // r17: label-only CC — the keep never reads cluster_size, so the
-    // q62 size join-back + presentation sort were dead work here
+    // r17: label-only CC — the keep never reads cluster_size, so
+    // q62's size window count + presentation sort are dead work here
     // (q62's own row still prices the full component table).
     dedupKeepCorpusFrom(Tables.documents(spark, dir),
       clusterLabels(lshNearDupPairs(spark, dir).select($"doc_a", $"doc_b"))
@@ -1712,28 +1713,12 @@ object Dedup {
     (fps, bands, cand, verified)
   }
 
-  /** Stored prev-snapshot indexes memoized per corpus dir — the
-    * q50/q54 codebook discipline applied to the dedup index:
-    * production builds the index once per snapshot publish and every
-    * maintenance run LOADS it, so the named query's steady-state cost
-    * is the maintenance, not the build. Invalidation = the
-    * documents.parquet file inventory (the codebook caveat about mtime
-    * granularity applies); checkpointed frames are session-bound, so
-    * the SparkContext's applicationId (unique per context — an
-    * identity hashCode could collide across a stop/start) is folded
-    * into the fingerprint and a new session rebuilds. One live entry
-    * per dir — a replaced entry's frames become unreachable and the
-    * ContextCleaner unpersists their checkpoint blocks on GC (the
-    * jaccardPairsOver discipline), so stale indexes don't accumulate
-    * storage. */
-  private val indexes = scala.collection.concurrent.TrieMap
-    .empty[String, (String, StoredIndex)]
-
   /** The stored index of the previous snapshot PLUS the PUBLISHED
     * maintained tables of the current one — the publish-once-per-
-    * snapshot discipline (the `pqState`/`vecIndexState` shape applied
-    * to the dedup index): a nightly pipeline maintains the index ONCE
-    * (q89's dirty-slice machinery) and every derived artifact — the
+    * snapshot discipline (the `pqIndexState`/`vecIndexState` shape
+    * applied to the dedup index): a nightly pipeline maintains the
+    * index ONCE (q89's dirty-slice machinery) and every derived
+    * artifact — the
     * quality-canonical keep (q104), the containment refresh (q107),
     * the cross-source matrix (q111) — READS the published tables
     * instead of re-running signing/banding/verification. q89 itself
@@ -1831,19 +1816,6 @@ object Dedup {
         Some(prefixDf), Some(prefixSz)).localCheckpoint(true)
   }
 
-  /** Shared by the q88/q89/q91/q92 stored-state memos (the q50
-    * codebook invalidation rule applied to documents.parquet). */
-  private[operators] def docsFingerprint(spark: SparkSession, dir: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(s"$dir/documents.parquet")
-    (spark.sparkContext.applicationId +:
-      walk(root).sortBy(_.getPath)
-        .map(f => s"${f.getPath}:${f.lastModified}:${f.length}"))
-      .mkString("\n")
-  }
-
   /** q89 stays the MAINTAINER: it runs the dirty-slice machinery on
     * every call (its bench row prices the nightly maintenance job),
     * while q104/q107/q111 read the [[StoredIndex]]'s published
@@ -1878,22 +1850,17 @@ object Dedup {
       idx.labels.select($"doc_id", $"lbl".as("cluster_id")))
   }
 
-  /** The memoized stored index + published maintained tables for
-    * `dir` (one per corpus dir, invalidated by the fixture
-    * fingerprint). The diff is stored state too: q84's job publishes
-    * it when the crawl lands, and every maintenance consumer reads
-    * that table. */
+  /** The published stored index + maintained tables for `dir` — the
+    * q50/q54 codebook discipline applied to the dedup index:
+    * production builds the index once per snapshot publish and every
+    * maintenance run LOADS it, so the named query's steady-state cost
+    * is the maintenance, not the build. The diff is stored state too:
+    * q84's job publishes it when the crawl lands, and every
+    * maintenance consumer reads that table. */
   private[operators] def storedIndexFor(spark: SparkSession, dir: String,
-      docs: DataFrame): StoredIndex = {
-    val fp = docsFingerprint(spark, dir)
-    indexes.get(dir) match {
-      case Some((`fp`, idx)) => idx
-      case _ =>
-        val idx = new StoredIndex(docs)
-        indexes.put(dir, (fp, idx))
-        idx
-    }
-  }
+      docs: DataFrame): StoredIndex =
+    Published(spark, "dedup.index", dir,
+      Published.inventory(dir, "documents"))(new StoredIndex(docs))
 
   // ---------------------------------------------------------------
   // q107 — incremental CONTAINMENT maintenance: the q90 output (subset
@@ -1970,8 +1937,8 @@ object Dedup {
                               curDocs: DataFrame,
                               diff: DataFrame): DataFrame =
     // r17: label-only CC ([[clusterLabels]]) — the keep never reads
-    // cluster_size, so [[dedupClustersFrom]]'s size join-back and
-    // presentation sort were dead work here (q137's shape).
+    // cluster_size, so [[dedupClustersFrom]]'s size window count and
+    // presentation sort are dead work here (q137's shape).
     dedupKeepCorpusFrom(curDocs, clusterLabels(
       maintainedVerifiedPairs(prevFps, prevBands, prevCand, prevVerified,
         curDocs, diff))
@@ -2710,25 +2677,17 @@ object Dedup {
   // the small-dirty premise, not a defect).
   // ---------------------------------------------------------------
 
-  /** Memoized stored span state per corpus dir: the prev snapshot's
+  /** Published stored span state per corpus dir: the prev snapshot's
     * span table, its published q113 output, and the q84 diff. */
-  private val spanStates = scala.collection.concurrent.TrieMap
-    .empty[String, (String, (DataFrame, DataFrame, DataFrame))]
-
   private def spanStateFor(spark: SparkSession, dir: String,
-      docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val fp = docsFingerprint(spark, dir)
-    spanStates.get(dir) match {
-      case Some((`fp`, st)) => st
-      case _ =>
-        val prev = Corpus.snapshotPrev(docs)
-        val st = (spansOf(spanToksFrom(prev)).localCheckpoint(true),
-          spanDedupFrom(prev).localCheckpoint(true),
-          Corpus.snapshotDiffDerived(docs).localCheckpoint(true))
-        spanStates.put(dir, (fp, st))
-        st
+      docs: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    Published(spark, "dedup.spans", dir,
+        Published.inventory(dir, "documents")) {
+      val prev = Corpus.snapshotPrev(docs)
+      (spansOf(spanToksFrom(prev)).localCheckpoint(true),
+        spanDedupFrom(prev).localCheckpoint(true),
+        Corpus.snapshotDiffDerived(docs).localCheckpoint(true))
     }
-  }
 
   def incrementalSpanDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -2873,14 +2832,6 @@ object Dedup {
   // sources² rows at most.
   // ---------------------------------------------------------------
 
-  /** The published full-corpus q47 pair table, memoized per corpus
-    * fingerprint — its OWN memo rather than a StoredIndex member so a
-    * cold q99 call does not eagerly build the unrelated prev-snapshot
-    * LSH maintenance state (the StoredIndex constructor materializes
-    * fps/bands/cand/verified + the diff up front). */
-  private val fullPairTables = scala.collection.concurrent.TrieMap
-    .empty[String, (String, DataFrame)]
-
   def crossSourceDups(spark: SparkSession, dir: String): DataFrame = {
     // q99 is a REPORT over q47's verdicts, not a maintainer — it
     // reads the PUBLISHED full-corpus pair table (the q101/q104/q107
@@ -2888,18 +2839,18 @@ object Dedup {
     // stored artifact, and q47's bench row keeps pricing the fresh
     // chain). Re-running the whole signing/banding/verification chain
     // per report call is what regressed the r15 bench row
-    // (0.29 → 1.44 s, VERDICT r15 item 3).
-    val fp = docsFingerprint(spark, dir)
-    val pairs = fullPairTables.get(dir) match {
-      case Some((`fp`, t)) => t
-      case _ =>
-        val t = lshNearDupPairsFrom(
-            shingleFps(spark, dir).localCheckpoint(true),
-            eagerBands = true)
-          .select($"doc_a", $"doc_b")
-          .localCheckpoint(true)
-        fullPairTables.put(dir, (fp, t))
-        t
+    // (0.29 → 1.44 s, VERDICT r15 item 3). The pair table is its
+    // OWN entry rather than a StoredIndex member so a cold q99 call
+    // does not eagerly build the unrelated prev-snapshot LSH
+    // maintenance state (the StoredIndex constructor materializes
+    // fps/bands/cand/verified + the diff up front).
+    val pairs = Published(spark, "dedup.fullPairs", dir,
+        Published.inventory(dir, "documents")) {
+      lshNearDupPairsFrom(
+          shingleFps(spark, dir).localCheckpoint(true),
+          eagerBands = true)
+        .select($"doc_a", $"doc_b")
+        .localCheckpoint(true)
     }
     crossSourceDupsFrom(Tables.documents(spark, dir), pairs)
   }
@@ -3082,8 +3033,7 @@ object Dedup {
     * per exact-Jaccard component. */
   def prefixKeepCorpus(spark: SparkSession, dir: String): DataFrame =
     // r17: label-only CC — the keep never reads cluster_size, so
-    // dedupClustersFrom's size join-back + sort were dead work
-    // (measured 2.96 vs q137's 1.74 s for the same pair pipeline).
+    // dedupClustersFrom's size window count + sort are dead work.
     dedupKeepCorpusFrom(Tables.documents(spark, dir),
       clusterLabels(
         prefixJaccardPairsOver(shingleFps(spark, dir), "fp",

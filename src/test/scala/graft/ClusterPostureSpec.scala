@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.state.Published
 
 /** The cluster-deployment configuration smoke: Bench documents that a
   * real deployment flips `SPARK_GRAFT_AQE=true` and a shuffle
@@ -12,7 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Sessions share the JVM/SparkContext (`newSession`), so this also
   * exercises config isolation: both postures execute interleaved
-  * against the same context.
+  * against the same context. Published state is session-scoped, so
+  * the posture session builds its own stored tables, models and
+  * codebooks under AQE + 64 partitions instead of reading the base
+  * session's — the suite asserts that through the store's inventory.
   */
 class ClusterPostureSpec extends AnyFunSuite {
   import TestSpark.sf
@@ -23,6 +29,16 @@ class ClusterPostureSpec extends AnyFunSuite {
     * row-for-row (the same discipline the DuckDB hash gate enforces
     * at 32-vs-1 threads). */
   private val RowsOnly = Set("q30_forecast_ml")
+
+  /** Every stored-state entry the query set publishes per corpus. */
+  private val StateNames = Set(
+    "dedup.index", "dedup.spans", "dedup.fullPairs",
+    "classify.nbModel", "classify.nbState", "classify.nbMaintained",
+    "vector.codebook", "vector.pairs", "vector.index",
+    "vector.pqCodebook", "vector.pqIndex",
+    "corpus.bigramModel", "corpus.bigramState", "corpus.bpeMerges",
+    "corpus.scores", "corpus.tf", "corpus.tfidf", "corpus.logProbScores",
+    "corpus.decontam", "corpus.chunks", "corpus.verdicts")
 
   test("every query is posture-invariant under AQE + 64 shuffle partitions") {
     val base = TestSpark.spark
@@ -40,5 +56,9 @@ class ClusterPostureSpec extends AnyFunSuite {
         else Some(s"$name: results differ under cluster posture")
     }
     assert(failures.isEmpty, failures.mkString("; "))
+    def built(s: SparkSession): Set[String] =
+      Published.entries(s).collect { case (name, `sf`, _) => name }.toSet
+    assert(StateNames -- built(posture) === Set.empty,
+      "state the posture session read without building it")
   }
 }
