@@ -47,13 +47,19 @@ final class ResultCache(ttlMs: Long, maxEntries: Int = 64,
 
   /** The cached result for `key` if younger than the TTL, else the
     * result of `load` (materialized, stored, returned). The returned
-    * frame is a local relation over the snapshot — immutable, cheap to
-    * re-serve, independent of the source tables' later churn (exactly
-    * the dashboard contract: panels may lag the store by ≤ ttl).
+    * frame is a local relation over the snapshot — immutable,
+    * independent of the source tables' later churn (exactly the
+    * dashboard contract: panels may lag the store by ≤ ttl).
+    *
+    * A hit runs no Spark job: the lookup is a map read, and actions on
+    * the returned local relation fold at plan time — including
+    * `WeatherApi.toJsonRows` over it and its `collect()`. What a hit
+    * still pays is driver-side planning of whatever the caller runs on
+    * the snapshot.
     *
     * The monitor guards only map access — `load` and its `collect()`
-    * (a full Spark job, possibly seconds) run OUTSIDE the lock, so one
-    * key's recompute never blocks other panels' sub-millisecond hits.
+    * (Spark jobs, possibly seconds) run OUTSIDE the lock, so one key's
+    * recompute never blocks other panels' hits.
     * Two threads missing the same key concurrently may both compute
     * (last put wins, both results identical for a deterministic query)
     * — the standard memo race, bounded by the panel count. */

@@ -1423,9 +1423,13 @@ object Dedup {
     // and exchange-FREE, and the seed aggregate needs no exchange
     // either. The old shape re-exchanged the edge set inside every
     // round (rounds are latency-bound; one fewer stage per round).
+    // The partition count is pinned to the session's shuffle count (the
+    // count the aggregates use): AQE may coalesce an unpinned
+    // repartition, which would break the co-partitioning and bring the
+    // per-round exchange back.
     val edges = p.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .union(p.select($"doc_b".as("src"), $"doc_a".as("dst")))
-      .repartition($"src")
+      .repartition(p.sparkSession.sessionState.conf.numShufflePartitions, $"src")
       .localCheckpoint(false) // every round re-reads the edge set; lazy
                               // so its job folds into the seed's
     // Each round references `labels` twice (propagation + identity), so

@@ -35,6 +35,16 @@ class WeatherApiSpec extends AnyFunSuite {
     val silverNoClick = silver.filter(col("site") =!= "click")
     val rows = WeatherApi.recentHours(bronze, silverNoClick, "click", 24)
     assert(rows.count() === 0) // 200 + empty, like the reference
+    val m = WeatherApi.metrics(bronze, silverNoClick, "click").collect()(0)
+    assert(m.getLong(1) > 0 && m.getLong(2) === 0L)
+    assert(m.getDouble(3) === 0.0 && m.getLong(4) === m.getLong(1))
+    // and Silver rows of a site absent from a non-empty Bronze prove
+    // nothing: still the 404
+    val bronzeNoClick = bronze.filter(col("site") =!= "click")
+    assert(silver.filter(col("site") === "click").count() > 0, "fixture sanity")
+    intercept[WeatherApi.UnknownSiteException] {
+      WeatherApi.recentHours(bronzeNoClick, silver, "click", 24)
+    }
   }
 
   test("summary: empty filter yields (0, null, null)") {
@@ -52,10 +62,18 @@ class WeatherApiSpec extends AnyFunSuite {
   }
 
   test("metrics: kept_pct consistent with row counts") {
-    val m = WeatherApi.metrics(bronze, silver, "click").collect()(0)
+    val df = WeatherApi.metrics(bronze, silver, "click")
+    val m = df.collect()(0)
     val raw = m.getLong(1); val kept = m.getLong(2)
     assert(m.getDouble(3) === kept.toDouble / raw * 100)
     assert(m.getLong(4) === math.max(raw - kept, 0L))
+    import org.apache.spark.sql.types._
+    assert(df.schema === StructType(Seq(
+      StructField("site", StringType, nullable = false),
+      StructField("raw_rows", LongType, nullable = false),
+      StructField("fact_rows", LongType, nullable = false),
+      StructField("kept_pct", DoubleType, nullable = true),
+      StructField("dropped_rows", LongType, nullable = false))))
   }
 
   test("toJsonRows: Python-isoformat timestamps in JSON output") {
@@ -69,6 +87,89 @@ class WeatherApiSpec extends AnyFunSuite {
       .toDF("ts")
     val js2 = WeatherApi.toJsonRows(frac).collect()(0)
     assert(js2.contains("\"2024-01-01T01:02:03.040500+00:00\""), s"got $js2")
+  }
+
+  test("toJsonRows: the same bytes as Dataset.toJSON on every JSON-relevant type") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("dec", DecimalType(38, 18)), StructField("dec2", DecimalType(10, 2)),
+      StructField("s", StringType), StructField("b", BooleanType),
+      StructField("arr", ArrayType(DoubleType)),
+      StructField("m", MapType(StringType, IntegerType)),
+      StructField("st", StructType(Seq(
+        StructField("x", StringType), StructField("y", DoubleType)))),
+      StructField("day", DateType), StructField("ts", TimestampType)))
+    val doubles = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.1 + 0.2, 1e-300, 12345678.9, Double.MaxValue)
+    val floats = Seq(Float.NaN, -0.0f, Float.MaxValue, 0.1f)
+    val decimals = Seq("-12345678901234567890.123456789012345678",
+      "0.000000000000000001", "0", "1E+5").map(new java.math.BigDecimal(_))
+    val strings = Seq("", "quote\" back\\slash /slash",
+      "line\nfeed\r\ttab\u0001\u001f\u007f", "unicode é 日本 😀 \u2028\u2029")
+    val days = Seq("1900-01-01", "1970-01-01", "2024-02-29").map(java.sql.Date.valueOf)
+    val stamps = Seq("2024-01-01 01:02:03.000004", "2024-01-01 01:02:03",
+      "1969-12-31 23:59:59.999999").map(java.sql.Timestamp.valueOf)
+    val rows = Row.fromSeq(Seq.fill(schema.length)(null)) +:
+      doubles.indices.map { k =>
+        def at[A](xs: Seq[A]) = xs(k % xs.length)
+        Row(k, Long.MinValue / (k + 1), at(doubles), at(floats),
+          at(decimals), new java.math.BigDecimal("-1.10"), at(strings), k % 2 == 0,
+          Seq(at(doubles), null, 1.0), Map("a" -> k, "\"é\n" -> null),
+          Row(at(strings), at(doubles)), at(days), at(stamps))
+      }
+    val df = spark.createDataFrame(rows.asJava, schema)
+    // a local relation (the ResultCache case) and a distributed frame
+    for (frame <- Seq(df, df.repartition(3))) {
+      val got = WeatherApi.toJsonRows(frame).collect().toSeq
+      assert(got.length === rows.length)
+      assert(got.sorted === WeatherApi.isoTimestamps(frame).toJSON.collect().toSeq.sorted)
+    }
+    val first = WeatherApi.toJsonRows(df).collect()
+    assert(first(0) === "{}", "null fields are omitted, as toJSON does")
+    assert(first(1).contains("\"ts\":\"2024-01-01T01:02:03.000004+00:00\""), first(1))
+    assert(first(1).contains("\"d\":\"NaN\""), first(1))
+  }
+
+  /** The endpoints in the bench posture (AQE off, 8 shuffle partitions;
+    * AQE runs each shuffle stage as its own job), on the fixture. */
+  private lazy val benchSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
+  }
+
+  test("job budgets: one job per endpoint call (hourly at most two), none to serialize a snapshot") {
+    val bench = benchSession
+    val b = Weather.bronze(bench, sf)
+    val s = Weather.cleanToHourly(b)
+    def jobs(f: => Any): Int = org.apache.spark.JobCount(bench.sparkContext)(f)._2
+    assert(jobs(WeatherApi.sites(b).collect()) === 1, "sites")
+    assert(jobs(WeatherApi.summary(s, Some("click")).collect()) === 1, "summary")
+    assert(jobs(WeatherApi.metrics(b, s, "click").collect()) === 1, "metrics")
+    assert(jobs(WeatherApi.recentRaw(b, "click", 24).collect().length) === 1, "raw")
+    assert(jobs(WeatherApi.recentHours(b, s, "click", 24).collect()) <= 2, "hourly")
+    val cache = new ResultCache(ttlMs = 60000)
+    val miss = cache(bench, "hourly:click")(WeatherApi.recentHours(b, s, "click", 24))
+    val hit = cache(bench, "hourly:click")(fail("a hit must not load"))
+    for (snapshot <- Seq(miss, hit)) {
+      val (json, n) = org.apache.spark.JobCount(bench.sparkContext)(
+        WeatherApi.toJsonRows(snapshot).collect())
+      assert(json.nonEmpty && n === 0, s"toJsonRows over a snapshot ran $n jobs")
+    }
+  }
+
+  test("an empty Bronze is no 404: zero metrics, empty hourly and raw") {
+    val none = bronze.filter(lit(false))
+    val m = WeatherApi.metrics(none, Weather.cleanToHourly(none), "click").collect()
+    assert(m.toSeq === Seq(org.apache.spark.sql.Row("click", 0L, 0L, null, 0L)))
+    assert(WeatherApi.recentHours(none, Weather.cleanToHourly(none), "click", 24)
+      .collect().isEmpty)
+    assert(WeatherApi.recentRaw(none, "click", 24).collect().isEmpty)
   }
 
   test("ingestWindows: 7-day chunks, inclusive remainder, validation") {
