@@ -7,12 +7,11 @@ import java.time.format.DateTimeFormatter
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.{Weather, WeatherApi}
 import graft.sources.{NasaIngest, UpsertWriter}
-import graft.streaming.StreamingClean
+import graft.streaming.{Drain, StreamingClean}
 import graft.syntax._
 
 /** The reference's two CLIs composed into one end-to-end callable
@@ -266,20 +265,12 @@ object Pipeline {
     * trigger is the live path — nothing else changes. */
   def runStreaming(spark: SparkSession, eventsPath: String, wh: Warehouse,
                    maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val checkpoint =
-      java.nio.file.Files.createTempDirectory("graft-pipe-ckpt-").toString
     val raw = StreamingClean.readEventsStream(spark, eventsPath,
       maxFilesPerTrigger)
-    val query = Weather.bronzeFromEvents(raw).writeStream
-      .queryName("graft_streaming_pipeline")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        microBatchStep(batch, wh)
-      }
-      .start()
-    try query.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(Weather.bronzeFromEvents(raw),
+        "graft_streaming_pipeline_") { (batch, _) =>
+      microBatchStep(batch, wh)
+    }
   }
 
   /** The NASA payload rows projected to the Bronze store schema —
@@ -341,20 +332,11 @@ object Pipeline {
     }
     val payloadSchema = StructType(Seq(
       StructField("site", StringType), StructField("payload", StringType)))
-    val checkpoint =
-      java.nio.file.Files.createTempDirectory("graft-nasa-ckpt-").toString
-    val query = spark.readStream.schema(payloadSchema)
+    val payloads = spark.readStream.schema(payloadSchema)
       .option("maxFilesPerTrigger", 1).json(stageDir)
-      .writeStream
-      .queryName("graft_streaming_nasa_ingest")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (payloads: DataFrame, _: Long) =>
-        microBatchStep(nasaBronzeRows(payloads, fetchedAt), wh)
-      }
-      .start()
-    try query.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(payloads, "graft_streaming_nasa_ingest_") {
+      (batch, _) => microBatchStep(nasaBronzeRows(batch, fetchedAt), wh)
+    }
     staged
   }
 
@@ -367,10 +349,8 @@ object Pipeline {
     * re-cleans, three mart refreshes) publishes exactly what the
     * one-shot batch kernel computes: q38's gate at streaming parity. */
   def pipelineSilverStreaming(spark: SparkSession, sfDir: String): DataFrame = {
-    val staged = StreamingClean.trackedTempDir("graft-whs-in-") + "/events"
-    spark.read.parquet(s"$sfDir/events.parquet")
-      .repartitionByRange(3, $"ts")
-      .write.parquet(staged)
+    val staged = Drain.stageRanged(
+      spark.read.parquet(s"$sfDir/events.parquet"), "ts", 3)
     val wh = Warehouse(StreamingClean.trackedTempDir("graft-whs-") + "/wh")
     runStreaming(spark, staged, wh, maxFilesPerTrigger = Some(1))
     spark.read.parquet(wh.silver)

@@ -1389,7 +1389,21 @@ object Dedup {
       lshNearDupPairs(spark, dir).select($"doc_a", $"doc_b"))
 
   /** Connected components over any (doc_a, doc_b) pair frame; returns
-    * (doc_id, cluster_id, cluster_size) for every doc in a pair. */
+    * (doc_id, cluster_id, cluster_size) for every doc in a pair.
+    *
+    * Premise: `cluster_size` is `count over Window.partitionBy(lbl)`,
+    * so every row of one component goes to one task, whose window
+    * buffer holds them all (16 bytes a row; it spills to disk past
+    * `spark.sql.windowExec.buffer.spill.threshold`). That is cheap
+    * while components stay small, and nothing in this operator keeps
+    * them small: the pair frame does. For q62's LSH pairs,
+    * [[MaxBucketDocs]] skips any band bucket above 64 docs, so a doc
+    * pairs with at most 4 bands × 63 = 252 others and a mass of
+    * identical copies yields no pair clique (exact copies are q44's
+    * job); verified near-dup clusters are a few copies each. A long
+    * chain of distinct docs, each within the threshold of the next, is
+    * not bounded: such a component lands on one task, as a skewed
+    * partition, not as a failure. */
   def dedupClustersFrom(pairs: DataFrame): DataFrame = {
     val labels = clusterLabels(pairs)
     // r18 (guide §2.4): cluster_size as ONE window count over the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.syntax._
@@ -31,9 +31,6 @@ import graft.syntax._
   */
 object StreamingCorpus {
 
-  /** Monotonic suffix for per-call memory-sink table names. */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** documents.parquet raw schema for the streaming reader. */
   val documentsRawSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType),
@@ -42,24 +39,10 @@ object StreamingCorpus {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Streaming reader over a documents parquet file or directory
-    * (single files staged via symlink, as the events reader does). */
+  /** Streaming reader over a documents parquet file or directory. */
   def readDocumentsStream(spark: SparkSession, docsPath: String,
-                          maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val src = java.nio.file.Paths.get(docsPath)
-    val inputDir =
-      if (java.nio.file.Files.isDirectory(src)) docsPath
-      else {
-        val d = java.nio.file.Paths.get(
-          StreamingClean.trackedTempDir("graft-docs-in-"))
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val reader = spark.readStream.schema(documentsRawSchema)
-    maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
-  }
+                          maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Drain.files(spark, docsPath, documentsRawSchema, maxFilesPerTrigger)
 
   case class FpDoc(fp: String, doc_id: Long)
   case class FpState(fp: String, keeper_doc_id: Long, n_copies: Long)
@@ -95,37 +78,11 @@ object StreamingCorpus {
     val changelog = fps.groupByKey(_.fp)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(updater)
-    // unique per CALL, not per path: hex avoids abs(Int.MinValue) < 0
-    // producing a junk identifier, and the monotonic suffix keeps two
-    // concurrent dedupStream calls (same or colliding paths) from
-    // clobbering each other's memory-sink table
-    val name = "graft_corpus_dedup_" +
-      Integer.toHexString(docsPath.hashCode) + "_" +
-      sinkSeq.incrementAndGet()
-    val checkpoint = StreamingClean.trackedTempDir("graft-cd-ckpt-")
-    val q = changelog.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
-    // Materialize the folded result EAGERLY (small: one row per
-    // distinct doc) and drop the memory-sink table before returning —
-    // otherwise every call would leak its full changelog into the
-    // session catalog for the JVM's lifetime (the per-call unique
-    // query name makes the tables accumulate, not replace). The
-    // checkpoint pins only the folded rows; its blocks free with the
-    // returned plan.
-    val result = spark.table(name)
-      .groupBy($"fp")
-      .agg(min($"keeper_doc_id").as("keeper_doc_id"),
-           max($"n_copies").as("n_copies"))
-      .orderBy($"keeper_doc_id")
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    result
+    Drain.memory(changelog, "graft_corpus_dedup_", OutputMode.Update)(
+      _.groupBy($"fp")
+        .agg(min($"keeper_doc_id").as("keeper_doc_id"),
+             max($"n_copies").as("n_copies"))
+        .orderBy($"keeper_doc_id"))
   }
 
   /** q68 — streaming-vs-batch dedup parity: the full stateful pipeline
@@ -267,18 +224,10 @@ object StreamingCorpus {
   def nearDupStream(spark: SparkSession, docsPath: String,
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-lsh-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-nd-ckpt-")
-    val q = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft_streaming_near_dups_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processNearDupBatch(batch, root)
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(readDocumentsStream(spark, docsPath, maxFilesPerTrigger),
+        "graft_streaming_near_dups_") { (batch, _) =>
+      processNearDupBatch(batch, root)
+    }
     resolveKeptCorpus(spark, root)
   }
 
@@ -289,8 +238,7 @@ object StreamingCorpus {
     * the batch q70 SQL: the streamed keeper set must equal what the
     * one-shot q47→q62→q70 chain computes. */
   def nearDupViaStreaming(spark: SparkSession, sfDir: String): DataFrame =
-    nearDupStream(spark, stageRangedDocs(spark, sfDir, "graft-nd-in-"),
-      maxFilesPerTrigger = Some(1))
+    nearDupStream(spark, stageDocs(spark, sfDir), maxFilesPerTrigger = Some(1))
 
   // ---------------------------------------------------------------
   // q134 — streaming EXACT near-dup pairs: the arrival-time twin of
@@ -534,18 +482,10 @@ object StreamingCorpus {
                              measure: (SparkSession, String) => DataFrame)
       : DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-xpair-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-xp-ckpt-")
-    val q = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft_streaming_prefix_pairs_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processPrefixPairBatch(batch, root)
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(readDocumentsStream(spark, docsPath, maxFilesPerTrigger),
+        "graft_streaming_prefix_pairs_") { (batch, _) =>
+      processPrefixPairBatch(batch, root)
+    }
     measure(spark, root)
   }
 
@@ -560,30 +500,20 @@ object StreamingCorpus {
     exactPairDrain(spark, docsPath, maxFilesPerTrigger,
       resolvePrefixContain)
 
-  private def stageRangedDocs(spark: SparkSession, sfDir: String,
-                              prefix: String): String = {
-    val staged = StreamingClean.trackedTempDir(prefix) + "/docs"
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .repartitionByRange(4, $"doc_id")
-      .write.mode("overwrite").parquet(staged)
-    staged
-  }
-
   /** q134 — streaming-vs-batch EXACT pair parity: staged as four
     * doc_id-ranged files drained one per micro-batch, so pair
     * discovery genuinely crosses batch boundaries. Oracle = the
     * batch q130 SQL. */
   def prefixPairsViaStreaming(spark: SparkSession,
                               sfDir: String): DataFrame =
-    prefixPairStream(spark, stageRangedDocs(spark, sfDir, "graft-xp-in-"),
+    prefixPairStream(spark, stageDocs(spark, sfDir),
       maxFilesPerTrigger = Some(1))
 
   /** q135 — the containment twin of q134 over the same staged drain.
     * Oracle = the batch q131 SQL. */
   def prefixContainViaStreaming(spark: SparkSession,
                                 sfDir: String): DataFrame =
-    prefixContainStream(spark,
-      stageRangedDocs(spark, sfDir, "graft-xc-in-"),
+    prefixContainStream(spark, stageDocs(spark, sfDir),
       maxFilesPerTrigger = Some(1))
 
   // ---------------------------------------------------------------
@@ -687,22 +617,10 @@ object StreamingCorpus {
         spark.implicits.newIntEncoder)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(updater)
-    val name = prefix + sinkSeq.incrementAndGet()
-    val checkpoint = StreamingClean.trackedTempDir("graft-ss-ckpt-")
-    val q = changelog.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"shard").orderBy($"version".desc)
-    val finalState = spark.table(name)
-      .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
+    val finalState = Drain.memory(changelog, prefix, OutputMode.Update)(
+      _.withColumn("rn", row_number().over(w)).filter($"rn" === 1))
     val candidates = finalState
       .select(explode($"entries").as("e"))
       .select($"e.token".as("token"), $"e.cnt".as("cnt"),
@@ -730,24 +648,8 @@ object StreamingCorpus {
         spark.implicits.newStringEncoder)
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(updater)
-    val name = prefix + sinkSeq.incrementAndGet()
-    val checkpoint = StreamingClean.trackedTempDir("graft-hh-ckpt-")
-    val q = changelog.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
-    // eager-checkpoint the fold and drop the sink table (the
-    // dedupStream hygiene: per-call names would otherwise accumulate
-    // changelogs in the catalog for the JVM's lifetime)
-    val result = spark.table(name)
-      .groupBy($"key").agg(max($"cnt").as("cnt"))
-      .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    result
+    Drain.memory(changelog, prefix, OutputMode.Update)(
+      _.groupBy($"key").agg(max($"cnt").as("cnt")))
   }
 
   /** Drain `docsPath` through both bounded summaries and compose the
@@ -800,13 +702,9 @@ object StreamingCorpus {
   /** q87 — streaming-vs-batch heavy-hitter parity: the fixture corpus
     * drained one doc_id-ranged file per micro-batch through both
     * counter states. Oracle = the batch q86 SQL. */
-  def heavyHittersViaStreaming(spark: SparkSession, sfDir: String): DataFrame = {
-    val staged = StreamingClean.trackedTempDir("graft-hh-in-") + "/docs"
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .repartitionByRange(4, $"doc_id")
-      .write.mode("overwrite").parquet(staged)
-    heavyHitterStream(spark, staged, maxFilesPerTrigger = Some(1))
-  }
+  def heavyHittersViaStreaming(spark: SparkSession, sfDir: String): DataFrame =
+    heavyHitterStream(spark, stageDocs(spark, sfDir),
+      maxFilesPerTrigger = Some(1))
 
   // ---------------------------------------------------------------
   // q106 — streaming SEMANTIC dedup (VERDICT r9 item 3): ingest-time
@@ -841,24 +739,10 @@ object StreamingCorpus {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** Streaming reader over an embeddings parquet file or directory
-    * (single files staged via symlink, as the documents reader). */
+  /** Streaming reader over an embeddings parquet file or directory. */
   def readEmbeddingsStream(spark: SparkSession, embPath: String,
-                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val src = java.nio.file.Paths.get(embPath)
-    val inputDir =
-      if (java.nio.file.Files.isDirectory(src)) embPath
-      else {
-        val d = java.nio.file.Paths.get(
-          StreamingClean.trackedTempDir("graft-emb-in-"))
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val reader = spark.readStream.schema(embeddingsRawSchema)
-    maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(inputDir)
-  }
+                           maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Drain.files(spark, embPath, embeddingsRawSchema, maxFilesPerTrigger)
 
   private val vecAssignSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("cell_id", LongType)))
@@ -931,18 +815,10 @@ object StreamingCorpus {
                           codebook: Array[(Long, Seq[Double])],
                           maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-sem-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-sd-ckpt-")
-    val q = readEmbeddingsStream(spark, embPath, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft_streaming_semdedup_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processSemanticBatch(batch, root, codebook)
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(readEmbeddingsStream(spark, embPath, maxFilesPerTrigger),
+        "graft_streaming_semdedup_") { (batch, _) =>
+      processSemanticBatch(batch, root, codebook)
+    }
     resolveSemanticKeep(spark, root)
   }
 
@@ -954,11 +830,8 @@ object StreamingCorpus {
   def semanticDedupViaStreaming(spark: SparkSession,
                                 sfDir: String): DataFrame = {
     val cb = graft.operators.VectorOps.codebookRowsFor(spark, sfDir)
-    val staged = StreamingClean.trackedTempDir("graft-sd-in-") + "/embs"
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .repartitionByRange(4, $"vec_id")
-      .write.mode("overwrite").parquet(staged)
-    semanticDedupStream(spark, staged, cb, maxFilesPerTrigger = Some(1))
+    semanticDedupStream(spark, stageEmbeddings(spark, sfDir), cb,
+      maxFilesPerTrigger = Some(1))
   }
 
   // ---------------------------------------------------------------
@@ -1015,18 +888,10 @@ object StreamingCorpus {
                      cents: Array[(Long, Seq[Double])],
                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-pq-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-pq-ckpt-")
-    val q = readEmbeddingsStream(spark, embPath, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft_streaming_pq_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processVectorBatch(batch, root, books, cents)
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(readEmbeddingsStream(spark, embPath, maxFilesPerTrigger),
+        "graft_streaming_pq_") { (batch, _) =>
+      processVectorBatch(batch, root, books, cents)
+    }
     resolveVectorCodes(spark, root)
   }
 
@@ -1039,11 +904,8 @@ object StreamingCorpus {
     import graft.operators.VectorOps
     val books = VectorOps.pqCodebookRowsFor(spark, sfDir)
     val cents = VectorOps.codebookRowsFor(spark, sfDir)
-    val staged = StreamingClean.trackedTempDir("graft-pq-in-") + "/embs"
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .repartitionByRange(4, $"vec_id")
-      .write.mode("overwrite").parquet(staged)
-    pqEncodeStream(spark, staged, books, cents, maxFilesPerTrigger = Some(1))
+    pqEncodeStream(spark, stageEmbeddings(spark, sfDir), books, cents,
+      maxFilesPerTrigger = Some(1))
   }
 
   // ---------------------------------------------------------------
@@ -1079,32 +941,23 @@ object StreamingCorpus {
                      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import graft.operators.Corpus
     val root = StreamingClean.trackedTempDir("graft-dc-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-dc-ckpt-")
-    val q = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
+    val docs = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
       .filter($"doc_id" >= Corpus.BenchmarkMaxDocId)
-      .writeStream
-      .queryName("graft_streaming_decontam_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.functions.TextExpressions.register(batch.sparkSession)
-        val fps = batch.select($"doc_id",
-            expr(s"graft_shingle_fps(text, ${Corpus.DecontamK})").as("fp"))
-          .localCheckpoint(false)
-        val totals = fps.groupBy($"doc_id")
-          .agg(count(lit(1)).as("total_ngrams"))
-        val shared = fps.join(broadcast(bench), Seq("fp"))
-          .groupBy($"doc_id").agg(count(lit(1)).as("shared_ngrams"))
-        shared.join(totals, Seq("doc_id"))
-          .select($"doc_id", $"shared_ngrams", $"total_ngrams",
-            round($"shared_ngrams" * lit(1.0) / $"total_ngrams", 6)
-              .as("contamination"))
-          .write.mode("append").parquet(s"$root/out")
-        ()
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(docs, "graft_streaming_decontam_") { (batch, _) =>
+      graft.functions.TextExpressions.register(batch.sparkSession)
+      val fps = batch.select($"doc_id",
+          expr(s"graft_shingle_fps(text, ${Corpus.DecontamK})").as("fp"))
+        .localCheckpoint(false)
+      val totals = fps.groupBy($"doc_id")
+        .agg(count(lit(1)).as("total_ngrams"))
+      val shared = fps.join(broadcast(bench), Seq("fp"))
+        .groupBy($"doc_id").agg(count(lit(1)).as("shared_ngrams"))
+      shared.join(totals, Seq("doc_id"))
+        .select($"doc_id", $"shared_ngrams", $"total_ngrams",
+          round($"shared_ngrams" * lit(1.0) / $"total_ngrams", 6)
+            .as("contamination"))
+        .write.mode("append").parquet(s"$root/out")
+    }
     readLog(spark, s"$root/out", decontamOutSchema)
       .dropDuplicates("doc_id")
       .orderBy($"doc_id")
@@ -1139,20 +992,11 @@ object StreamingCorpus {
                     maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     import graft.operators.Classify
     val root = StreamingClean.trackedTempDir("graft-nb-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-nb-ckpt-")
-    val q = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
-      .writeStream
-      .queryName("graft_streaming_nb_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Classify.nbScore(batch, Classify.docTf(batch), model)
-          .write.mode("append").parquet(s"$root/out")
-        ()
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(readDocumentsStream(spark, docsPath, maxFilesPerTrigger),
+        "graft_streaming_nb_") { (batch, _) =>
+      Classify.nbScore(batch, Classify.docTf(batch), model)
+        .write.mode("append").parquet(s"$root/out")
+    }
     readLog(spark, s"$root/out", nbOutSchema)
       .dropDuplicates("doc_id")
       .orderBy($"doc_id")
@@ -1165,21 +1009,21 @@ object StreamingCorpus {
   def nbViaStreaming(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Classify
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    nbScoreStream(spark, stageDocs(spark, sfDir, "graft-nb-in-"),
+    nbScoreStream(spark, stageDocs(spark, sfDir),
       Classify.nbModelFrom(Classify.trainSlice(docs)),
       maxFilesPerTrigger = Some(1))
   }
 
-  /** Stage the fixture corpus as four doc_id-ranged files (one per
-    * micro-batch) — shared by the streaming-parity harnesses. */
-  private def stageDocs(spark: SparkSession, sfDir: String,
-                        prefix: String): String = {
-    val staged = StreamingClean.trackedTempDir(prefix) + "/docs"
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .repartitionByRange(4, $"doc_id")
-      .write.mode("overwrite").parquet(staged)
-    staged
-  }
+  /** Stage the fixture corpus / embeddings as four id-ranged files
+    * (one per micro-batch) — shared by the streaming-parity
+    * harnesses. */
+  private def stageDocs(spark: SparkSession, sfDir: String): String =
+    Drain.stageRanged(spark.read.parquet(s"$sfDir/documents.parquet"),
+      "doc_id", 4)
+
+  private def stageEmbeddings(spark: SparkSession, sfDir: String): String =
+    Drain.stageRanged(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+      "vec_id", 4)
 
   /** q119 — streaming-vs-batch decontamination parity: fixture corpus
     * staged as four ranged files, one per micro-batch; the benchmark
@@ -1192,7 +1036,7 @@ object StreamingCorpus {
     val bench = docs.filter($"doc_id" < Corpus.BenchmarkMaxDocId)
       .select(expr(s"graft_shingle_fps(text, ${Corpus.DecontamK})").as("fp"))
       .distinct().localCheckpoint(true)
-    decontamStream(spark, stageDocs(spark, sfDir, "graft-dc-in-"), bench,
+    decontamStream(spark, stageDocs(spark, sfDir), bench,
       maxFilesPerTrigger = Some(1))
   }
 
@@ -1339,22 +1183,12 @@ object StreamingCorpus {
                       prevScores: DataFrame,
                       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-dg-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-dg-ckpt-")
     initDriftGateRoot(prevVocab, root)
-    val reader = spark.readStream.schema(diffFeedSchema)
-    val q = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(feedPath)
-      .writeStream
-      .queryName("graft_streaming_driftgate_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processDriftGateBatch(batch, id, root, prevTf); ()
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(
+        Drain.files(spark, feedPath, diffFeedSchema, maxFilesPerTrigger),
+        "graft_streaming_driftgate_") { (batch, id) =>
+      processDriftGateBatch(batch, id, root, prevTf)
+    }
     resolveDriftGate(spark, root, prevTf, prevScores)
   }
 
@@ -1371,10 +1205,8 @@ object StreamingCorpus {
     val feed = diff.filter($"status" =!= "unchanged")
       .join(cur.select($"doc_id", $"text"), Seq("doc_id"), "left")
       .select($"doc_id", $"status", $"text")
-    val staged = StreamingClean.trackedTempDir("graft-dg-in-") + "/feed"
-    feed.repartitionByRange(4, $"doc_id")
-      .write.mode("overwrite").parquet(staged)
-    driftGateStream(spark, staged, prevTf, prevVocab,
+    driftGateStream(spark, Drain.stageRanged(feed, "doc_id", 4), prevTf,
+      prevVocab,
       Corpus.storedLogProbScores(spark, sfDir), maxFilesPerTrigger = Some(1))
   }
 
@@ -1507,21 +1339,11 @@ object StreamingCorpus {
       prevAssign: DataFrame, baseline: Double,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val root = StreamingClean.trackedTempDir("graft-vg-state-")
-    val checkpoint = StreamingClean.trackedTempDir("graft-vg-ckpt-")
-    val reader = spark.readStream.schema(vecFeedSchema)
-    val q = maxFilesPerTrigger.fold(reader)(n =>
-        reader.option("maxFilesPerTrigger", n))
-      .parquet(feedPath)
-      .writeStream
-      .queryName("graft_streaming_vecgate_" + sinkSeq.incrementAndGet())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processVecGateBatch(batch, id, root, cbRows, baseline); ()
-      }
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
+    Drain.foreachBatch(
+        Drain.files(spark, feedPath, vecFeedSchema, maxFilesPerTrigger),
+        "graft_streaming_vecgate_") { (batch, id) =>
+      processVecGateBatch(batch, id, root, cbRows, baseline)
+    }
     resolveVecGate(spark, root, prevVecs, prevAssign,
       spark.createDataFrame(cbRows.toIndexedSeq).toDF("centroid_id", "cv"))
   }
@@ -1543,10 +1365,8 @@ object StreamingCorpus {
       .join(graft.Tables.embeddings(spark, sfDir)
         .select($"vec_id", $"embedding"), Seq("vec_id"), "left")
       .select($"vec_id", $"status", $"embedding")
-    val staged = StreamingClean.trackedTempDir("graft-vg-in-") + "/feed"
-    feed.repartitionByRange(4, $"vec_id")
-      .write.mode("overwrite").parquet(staged)
-    vecGateStream(spark, staged, cbRows, VectorOps.vecSnapshotPrev(all),
-      prevAssign, baseline, maxFilesPerTrigger = Some(1))
+    vecGateStream(spark, Drain.stageRanged(feed, "vec_id", 4), cbRows,
+      VectorOps.vecSnapshotPrev(all), prevAssign, baseline,
+      maxFilesPerTrigger = Some(1))
   }
 }

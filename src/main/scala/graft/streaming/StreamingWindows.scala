@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Weather
 import graft.syntax._
@@ -39,17 +37,7 @@ object StreamingWindows {
       .agg(count(lit(1)).as("n"),
            round(avg($"ghi_wm2"), 6).as("ghi_mean"))
       .select($"window.start".as("ts_hour"), $"site", $"n", $"ghi_mean")
-    val name = "graft_hourly_" + math.abs(eventsPath.hashCode).toString
-    val checkpoint = Files.createTempDirectory("graft-wm-").toString
-    val q = agg.writeStream
-      .outputMode(mode)
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
-    spark.table(name)
+    Drain.memory(agg, "graft_hourly_", mode)(identity)
   }
 
   case class KeyedRow(site: String, tsHour: Long, ghi: Double,
@@ -89,24 +77,14 @@ object StreamingWindows {
       .groupByKey(r => (r.site, r.tsHour))
       .flatMapGroupsWithState(
         OutputMode.Update, GroupStateTimeout.NoTimeout)(updater)
-    val name = "graft_dedup_" + math.abs(eventsPath.hashCode).toString
-    val checkpoint = Files.createTempDirectory("graft-st-").toString
-    val q = deduped.writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory").queryName(name)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally StreamingClean.rmTree(checkpoint)
     // The memory sink holds the UPDATE CHANGELOG (one row per winner
     // change per batch); reduce it to the final winner per key so
     // multi-batch inputs don't surface superseded rows.
     val wFinal = org.apache.spark.sql.expressions.Window
       .partitionBy($"site", $"tsHour")
       .orderBy($"version".desc, $"seq".desc)
-    spark.table(name)
-      .withColumn("rn", row_number().over(wFinal))
-      .filter($"rn" === 1).drop("rn")
+    Drain.memory(deduped, "graft_dedup_", OutputMode.Update)(
+      _.withColumn("rn", row_number().over(wFinal))
+        .filter($"rn" === 1).drop("rn"))
   }
 }
