@@ -1,15 +1,14 @@
 package graft
 
-import java.net.URI
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.{Weather, WeatherApi}
+import graft.schema.Schemas
 import graft.sources.{NasaIngest, UpsertWriter}
 import graft.streaming.{Drain, StreamingClean}
 import graft.syntax._
@@ -26,7 +25,9 @@ import graft.syntax._
   * `<root>/gold/mart_{features,kpis}` — every fact store
   * `partitionBy("ds")` (the UTC date of ts_utc) and merged via
   * [[UpsertWriter.upsertPartitioned]], so a day's ingest rewrites a
-  * day's partitions, not the table (the 100 TB shape). The clean
+  * day's partitions, not the table (the 100 TB shape). Each store's
+  * layout is declared in [[Schemas]] (`bronzeStore`, `silverStore`,
+  * `mart*Store`): writes conform to it and reads declare it. The clean
   * stage's (site, hour) LWW groups never span a `ds` boundary, so a
   * partition-bounded re-clean is self-contained — `refineSilver`'s
   * `sinceDs` prunes the Bronze scan to the touched dates and the
@@ -47,6 +48,12 @@ object Pipeline {
     val martKpis: String = s"$root/gold/mart_kpis"
   }
 
+  private def readBronze(spark: SparkSession, wh: Warehouse): DataFrame =
+    UpsertWriter.readStore(spark, wh.bronze, Schemas.bronzeStore)
+
+  private def readSilver(spark: SparkSession, wh: Warehouse): DataFrame =
+    UpsertWriter.readStore(spark, wh.silver, Schemas.silverStore)
+
   /** Published-store row counts after a [[run]] (a zero-column
     * count(*) scan — cheap: column pruning drops every data page,
     * though vanilla Spark still launches the job; flip
@@ -61,24 +68,28 @@ object Pipeline {
     * §7.4-1), so the store preserves the full event-grain relation and
     * re-ingesting any window is a no-op; hour-level last-write-wins is
     * the CLEAN stage's job, exactly as in the reference (raw_weather
-    * keeps every fetched row, silver_clean.py:99-101 dedups). */
+    * keeps every fetched row, silver_clean.py:99-101 dedups). Returns
+    * the `ds` partitions the rows touched. */
   def ingestBronze(spark: SparkSession, bronzeRows: DataFrame,
-                   wh: Warehouse): Unit = {
+                   wh: Warehouse): Seq[java.sql.Date] = {
     val withBlob =
       if (bronzeRows.columns.contains("raw_json")) bronzeRows
       else bronzeRows.withColumn("raw_json", lit(null).cast(StringType))
     UpsertWriter.upsertPartitioned(spark, wh.bronze,
-      withBlob.withColumn("ds", to_date($"ts_utc")),
+      Schemas.conform(withBlob.withColumn("ds", to_date($"ts_utc")),
+        Schemas.bronzeStore),
       keys = Seq("site", "ts_utc", "ingest_seq"),
       versionCols = Seq("ingested_at"),
-      partitionCol = "ds")
+      partitionCol = "ds").map(_.asInstanceOf[java.sql.Date])
   }
 
   /** Stage 1, events-source flavor: the driver fixture's events table
     * is the stand-in data feed (same Bronze mapping the whole engine
     * uses); one call ingests the full fixture window. */
-  def ingestEvents(spark: SparkSession, sfDir: String, wh: Warehouse): Unit =
+  def ingestEvents(spark: SparkSession, sfDir: String, wh: Warehouse): Unit = {
     ingestBronze(spark, Weather.bronze(spark, sfDir), wh)
+    ()
+  }
 
   final case class Site(name: String, lat: Double, lon: Double)
 
@@ -86,15 +97,17 @@ object Pipeline {
     * split [start, end] into ≤7-day windows (S2), GET each site's
     * payload through `transport` (fixture-JSON in tests, HTTP in
     * production; a failed window aborts the run like
-    * raise_for_status), relationalize with [[NasaIngest.ingest]], and
-    * merge into the Bronze store. `fetchedAt` is the run's ingest
-    * stamp (the reference's NOW() made explicit so runs are
-    * replayable); `ingest_seq` derives from (site, ts) so a re-fetch
-    * of the same window collapses onto the same keys.
+    * raise_for_status), relationalize with [[NasaIngest.ingest]] on
+    * the driver that holds the bodies, and merge into the Bronze
+    * store. `fetchedAt` is the run's ingest stamp (the reference's
+    * NOW() made explicit so runs are replayable); `ingest_seq` derives
+    * from (site, ts) so a re-fetch of the same window collapses onto
+    * the same keys.
     *
-    * The fetch loop is driver-side (as in the reference) — one small
-    * string per (site, window); the parse/align/merge below it is
-    * fully distributed. Returns the number of payloads ingested. */
+    * The fetch loop and the parse are driver-side (as in the
+    * reference) — one small string per (site, window), parsed into a
+    * local relation; the merge below it is distributed. Returns the
+    * number of payloads ingested. */
   def runNasaIngest(spark: SparkSession, sites: Seq[Site],
                     start: LocalDate, end: LocalDate, wh: Warehouse,
                     fetchedAt: java.sql.Timestamp,
@@ -113,8 +126,8 @@ object Pipeline {
           throw new java.io.IOException(s"run_ingest: $err")
       }
     }
-    val payloads = spark.createDataFrame(fetched).toDF("site", "payload")
-    ingestBronze(spark, nasaBronzeRows(payloads, fetchedAt), wh)
+    ingestBronze(spark,
+      nasaBronzeRows(NasaIngest.ingest(spark, fetched), fetchedAt), wh)
     fetched.size
   }
 
@@ -129,7 +142,7 @@ object Pipeline {
     * re-clean (the reference CLI's default). */
   def refineSilver(spark: SparkSession, wh: Warehouse,
                    sinceDs: Option[LocalDate] = None): Unit = {
-    val bronzeStore = sinceDs.foldLeft(spark.read.parquet(wh.bronze)) {
+    val bronzeStore = sinceDs.foldLeft(readBronze(spark, wh)) {
       (df, d) => df.filter($"ds" >= lit(java.sql.Date.valueOf(d)))
     }
     refineSilverSlice(spark, wh, bronzeStore)
@@ -147,7 +160,7 @@ object Pipeline {
                              touched: Seq[java.sql.Date]): Unit =
     if (touched.nonEmpty)
       refineSilverSlice(spark, wh,
-        spark.read.parquet(wh.bronze).filter($"ds".isin(touched: _*)))
+        readBronze(spark, wh).filter($"ds".isin(touched: _*)))
 
   private def refineSilverSlice(spark: SparkSession, wh: Warehouse,
                                 bronzeSlice: DataFrame): Unit = {
@@ -155,58 +168,52 @@ object Pipeline {
       $"site", $"ts_utc", $"ingest_seq",
       $"ghi_wm2", $"t2m_c", $"ws10_mps", $"ingested_at"))
     UpsertWriter.upsertPartitioned(spark, wh.silver,
-      cleaned.withColumn("ds", to_date($"ts_utc")),
+      Schemas.conform(cleaned.withColumn("ds", to_date($"ts_utc")),
+        Schemas.silverStore),
       keys = Seq("site", "ts_utc"),
       versionCols = Seq("ingested_at", "ingest_seq"),
       partitionCol = "ds",
-      checks = graft.schema.Schemas.factWeatherChecks,
+      checks = Schemas.factWeatherChecks,
       table = "fact_weather")
+    ()
   }
+
+  /** A mart frame with its `ds` date, in the store's declared layout. */
+  private def martRows(mart: DataFrame, store: StructType): DataFrame =
+    Schemas.conform(mart.withColumn("ds", to_date($"ts_utc")), store)
 
   /** Stage 3 — gold marts from the PUBLISHED Silver store (derived
     * data: rebuilt wholesale, the reference's INSERT..SELECT shape;
     * the marts stay `partitionBy("ds")` so downstream readers prune). */
   def buildMarts(spark: SparkSession, wh: Warehouse): Unit = {
-    val silverStore = spark.read.parquet(wh.silver)
-    Weather.goldFeaturesFromAudit(silverStore)
-      .withColumn("ds", to_date($"ts_utc"))
+    val silverStore = readSilver(spark, wh)
+    martRows(Weather.goldFeaturesFromAudit(silverStore), Schemas.martFeaturesStore)
       .write.mode("overwrite").partitionBy("ds").parquet(wh.martFeatures)
-    Weather.martKpisFromAudit(silverStore)
-      .withColumn("ds", to_date($"ts_utc"))
+    martRows(Weather.martKpisFromAudit(silverStore), Schemas.martKpisStore)
       .write.mode("overwrite").partitionBy("ds").parquet(wh.martKpis)
   }
 
   /** Incremental gold-mart maintenance (VERDICT r6 item 7): rebuild
     * ONLY the given `ds` partitions of both marts, via a
-    * partition-pruned Silver read and a dynamic-partition-overwrite
-    * write. Exact, not approximate: both marts are row-local over
-    * Silver — features and hourly KPIs are per-(site, ts_utc) maps
-    * with no window crossing a date — so a mart partition depends only
-    * on its own Silver partition. Untouched `ds` partitions are
+    * partition-pruned Silver read and one staged write per mart whose
+    * partitions are swapped in by rename
+    * ([[UpsertWriter.publishPartitions]]). Exact, not approximate: both
+    * marts are row-local over Silver — features and hourly KPIs are
+    * per-(site, ts_utc) maps with no window crossing a date — so a
+    * mart partition depends only on its own Silver partition. Untouched `ds` partitions are
     * neither read nor rewritten (PipelineSpec pins file-level
     * byte-identity), which is what keeps a trickle of late data from
     * re-publishing a 100 TB mart. */
   def refreshMarts(spark: SparkSession, wh: Warehouse,
                    touched: Seq[java.sql.Date]): Unit = {
     if (touched.isEmpty) return
-    val silverSlice = spark.read.parquet(wh.silver)
-      .filter($"ds".isin(touched: _*))
-    def publish(mart: DataFrame, path: String): Unit = {
-      val fs = FileSystem.get(new URI(path),
-        spark.sparkContext.hadoopConfiguration)
-      val df = mart.withColumn("ds", to_date($"ts_utc"))
-      if (!fs.exists(new Path(path)))
-        df.write.partitionBy("ds").parquet(path)
-      else
-        df.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ds").parquet(path)
-      // dynamic overwrite replaced files under the touched partitions;
-      // drop the session's stale file listing for the store
-      spark.catalog.refreshByPath(path)
-    }
-    publish(Weather.goldFeaturesFromAudit(silverSlice), wh.martFeatures)
-    publish(Weather.martKpisFromAudit(silverSlice), wh.martKpis)
+    val silverSlice = readSilver(spark, wh).filter($"ds".isin(touched: _*))
+    UpsertWriter.publishPartitions(spark,
+      martRows(Weather.goldFeaturesFromAudit(silverSlice), Schemas.martFeaturesStore),
+      wh.martFeatures, "ds")
+    UpsertWriter.publishPartitions(spark,
+      martRows(Weather.martKpisFromAudit(silverSlice), Schemas.martKpisStore),
+      wh.martKpis, "ds")
   }
 
   /** The one callable: fixture feed → Bronze store → Silver store →
@@ -218,10 +225,12 @@ object Pipeline {
     refineSilver(spark, wh)
     buildMarts(spark, wh)
     Report(
-      bronzeRows = spark.read.parquet(wh.bronze).count(),
-      silverRows = spark.read.parquet(wh.silver).count(),
-      featureRows = spark.read.parquet(wh.martFeatures).count(),
-      kpiRows = spark.read.parquet(wh.martKpis).count())
+      bronzeRows = readBronze(spark, wh).count(),
+      silverRows = readSilver(spark, wh).count(),
+      featureRows = UpsertWriter.readStore(spark, wh.martFeatures,
+        Schemas.martFeaturesStore).count(),
+      kpiRows = UpsertWriter.readStore(spark, wh.martKpis,
+        Schemas.martKpisStore).count())
   }
 
   // ---------------------------------------------------------------
@@ -237,25 +246,17 @@ object Pipeline {
 
   /** One micro-batch of the composed streaming pipeline: upsert the
     * Bronze-shaped batch into the Bronze store, then cumulative
-    * re-clean and mart refresh bounded to the batch's `ds` partitions.
+    * re-clean and mart refresh bounded to the `ds` partitions the
+    * Bronze upsert reports as touched (an empty batch touches none).
     * The re-clean reads the PUBLISHED Bronze partitions (not just the
     * batch), so rows of one (site, hour) split across micro-batches
     * converge identically to the batch clean — and the driver only
     * ever sees the touched date list, never data. */
-  private def microBatchStep(bronzeBatch: DataFrame, wh: Warehouse): Unit = {
+  private[graft] def microBatchStep(bronzeBatch: DataFrame, wh: Warehouse): Unit = {
     val sp = bronzeBatch.sparkSession
-    // consumed by the Bronze upsert AND the touched-ds listing: persist
-    // once so the file-stream source isn't re-read per consumer
-    val batch = bronzeBatch.cache()
-    try {
-      if (!batch.isEmpty) {
-        ingestBronze(sp, batch, wh)
-        val touched = batch.select(to_date(col("ts_utc")).as("ds"))
-          .distinct().collect().map(_.getDate(0)).toSeq
-        refineSilverPartitions(sp, wh, touched)
-        refreshMarts(sp, wh, touched)
-      }
-    } finally { batch.unpersist(); () }
+    val touched = ingestBronze(sp, bronzeBatch, wh)
+    refineSilverPartitions(sp, wh, touched)
+    refreshMarts(sp, wh, touched)
   }
 
   /** [[run]]'s streaming mirror, events-source flavor: file-stream the
@@ -273,14 +274,14 @@ object Pipeline {
     }
   }
 
-  /** The NASA payload rows projected to the Bronze store schema —
-    * shared by the batch ([[runNasaIngest]]) and streaming
-    * ([[runNasaIngestStreaming]]) ingest flavors. `ingest_seq`
-    * derives from (site, ts) so a re-fetch of the same window
-    * collapses onto the same keys. */
-  private def nasaBronzeRows(payloads: DataFrame,
+  /** Parsed NASA rows ([[NasaIngest.ingest]]) projected to the Bronze
+    * store schema — shared by the batch ([[runNasaIngest]]) and
+    * streaming ([[runNasaIngestStreaming]]) ingest flavors.
+    * `ingest_seq` derives from (site, ts) so a re-fetch of the same
+    * window collapses onto the same keys. */
+  private def nasaBronzeRows(parsed: DataFrame,
                              fetchedAt: java.sql.Timestamp): DataFrame =
-    NasaIngest.ingest(payloads)
+    parsed
       .select($"site", $"ts".as("ts_utc"),
         xxhash64($"site", $"ts").as("ingest_seq"),
         $"ghi_wm2", $"t2m_c", $"ws10_mps",
@@ -335,7 +336,8 @@ object Pipeline {
     val payloads = spark.readStream.schema(payloadSchema)
       .option("maxFilesPerTrigger", 1).json(stageDir)
     Drain.foreachBatch(payloads, "graft_streaming_nasa_ingest_") {
-      (batch, _) => microBatchStep(nasaBronzeRows(batch, fetchedAt), wh)
+      (batch, _) =>
+        microBatchStep(nasaBronzeRows(NasaIngest.ingest(batch), fetchedAt), wh)
     }
     staged
   }
@@ -353,7 +355,7 @@ object Pipeline {
       spark.read.parquet(s"$sfDir/events.parquet"), "ts", 3)
     val wh = Warehouse(StreamingClean.trackedTempDir("graft-whs-") + "/wh")
     runStreaming(spark, staged, wh, maxFilesPerTrigger = Some(1))
-    spark.read.parquet(wh.silver)
+    readSilver(spark, wh)
       .select($"site", $"ts_utc", $"ghi_wm2", $"temp_c", $"wind_mps")
       .orderBy($"site", $"ts_utc")
   }
@@ -401,7 +403,7 @@ object Pipeline {
     // belongs in the per-call driver-contract cost.
     ingestEvents(spark, sfDir, wh)
     refineSilver(spark, wh)
-    spark.read.parquet(wh.silver)
+    readSilver(spark, wh)
       .select($"site", $"ts_utc", $"ghi_wm2", $"temp_c", $"wind_mps")
       .orderBy($"site", $"ts_utc")
   }

@@ -62,6 +62,53 @@ object Schemas {
     StructField("wind_cf", DoubleType, nullable = false),
     StructField("computed_at", TimestampType, nullable = false)))
 
+  // The Pipeline's parquet stores as they lie on disk: the table
+  // columns plus the version columns the merges arbitrate on and the
+  // `ds` partition date (the last column). Every store read declares
+  // one of these, so no read infers a schema.
+
+  /** Bronze store `<root>/bronze/raw_weather`: raw_weather with its
+    * insertion order `ingest_seq` (SURVEY §7.4-1). */
+  val bronzeStore: StructType = StructType(Seq(
+    StructField("site", StringType),
+    StructField("ts_utc", TimestampType),
+    StructField("ingest_seq", LongType),
+    StructField("ghi_wm2", DoubleType),
+    StructField("t2m_c", DoubleType),
+    StructField("ws10_mps", DoubleType),
+    StructField("ingested_at", TimestampType),
+    StructField("raw_json", StringType),
+    StructField("ds", DateType)))
+
+  /** Silver store `<root>/silver/fact_weather`: the cleaned measures
+    * with the winning Bronze row's (ingested_at, ingest_seq). */
+  val silverStore: StructType = StructType(Seq(
+    StructField("site", StringType),
+    StructField("ts_utc", TimestampType),
+    StructField("ghi_wm2", DoubleType),
+    StructField("temp_c", DoubleType),
+    StructField("wind_mps", DoubleType),
+    StructField("ingested_at", TimestampType),
+    StructField("ingest_seq", LongType),
+    StructField("ds", DateType)))
+
+  val martFeaturesStore: StructType = martFeatures.add("ds", DateType)
+
+  val martKpisStore: StructType = martKpis.add("ds", DateType)
+
+  /** `df` projected to a store layout, columns in the declared order.
+    * A missing column or a type that differs from the declaration
+    * fails here, before anything is written. */
+  def conform(df: DataFrame, store: StructType): DataFrame = {
+    val out = df.select(store.fieldNames.toSeq.map(col): _*)
+    val clash = store.fields.zip(out.schema.fields)
+      .filter { case (d, a) => d.dataType != a.dataType }
+    require(clash.isEmpty, "store layout mismatch: " + clash.map { case (d, a) =>
+      s"${d.name} is ${a.dataType.simpleString}, declared ${d.dataType.simpleString}"
+    }.mkString(", "))
+    out
+  }
+
   /** One declarative constraint = (name, violation predicate). */
   final case class Check(name: String, violation: Column)
 

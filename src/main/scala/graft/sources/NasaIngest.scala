@@ -1,8 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.{Instant, LocalDate, LocalDateTime, ZoneId}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException}
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.syntax._
 
@@ -15,11 +25,11 @@ import graft.syntax._
   * then full-outer-aligned on the hour axis with one column per
   * parameter and a traceability `raw_json` blob (S7, nasa.py:106).
   *
-  * The HTTP fetch stays a thin driver-side concern (as in the
-  * reference); the parser is a pure DataFrame plan testable from JSON
-  * strings, and scales by splitting payloads across partitions — each
-  * payload explodes independently, no shuffle until the final
-  * per-(site, ts) pivot.
+  * As in the reference, one process fetches and parses: the driver
+  * that holds the bodies parses them row by row with the Jackson that
+  * ships with Spark and hands the rows on as a local relation, so no
+  * parse plan, shuffle or sort runs. Payloads that already live in a
+  * DataFrame reach the same parser through one typed `flatMap`.
   */
 object NasaIngest {
 
@@ -95,67 +105,158 @@ object NasaIngest {
       case Right((code, _)) => Left(HttpStatusError(url, code))
     }
 
-  /** Raw payload schema: parameter values captured as raw JSON text so
-    * each series can be re-parsed per its own encoding. */
-  private val payloadSchema = StructType(Seq(
-    StructField("properties", StructType(Seq(
-      StructField("parameter", MapType(StringType, StringType)))))))
+  /** One hour of one site, aligned across the three parameters (J3):
+    * a measure is None where its parameter has no entry for the hour
+    * or its entry is null. */
+  final case class Reading(site: String, ts: Instant,
+                           ghi_wm2: Option[Double], t2m_c: Option[Double],
+                           ws10_mps: Option[Double])
 
-  /** (site, payload_json) → one row per (site, param, ts, value).
-    * J1: dual-format normalization + malformed-key skip. */
-  def parseSeries(payloads: DataFrame): DataFrame = {
-    val entries = payloads
-      .select($"site",
-        explode(from_json($"payload", payloadSchema)
-          .getField("properties").getField("parameter"))
-          .as(Seq("param", "series_json")))
-      .filter($"param".isin(Params: _*)) // J2 projection
-      .select($"site", $"param",
-        explode(from_json($"series_json", MapType(StringType, StringType)))
-          .as(Seq("key", "val_str")))
-    val listForm = entries
-      .filter($"val_str".startsWith("["))
-      .select($"site", $"param",
-        try_to_timestamp($"key", lit("yyyyMMdd")).as("day_ts"),
-        posexplode(from_json($"val_str", ArrayType(DoubleType)))
-          .as(Seq("pos", "value")))
-      .select($"site", $"param",
-        expr("timestampadd(HOUR, pos, day_ts)").as("ts"), $"value")
-    val scalarForm = entries
-      .filter(!$"val_str".startsWith("["))
-      .select($"site", $"param",
-        try_to_timestamp(substring($"key", 1, 10), lit("yyyyMMddHH")).as("ts"),
-        $"val_str".cast(DoubleType).as("value"))
-    listForm.unionByName(scalarForm)
-      .filter($"ts".isNotNull) // malformed keys skipped (nasa.py:71-74)
+  /** Spark's own JSON reading options (`from_json`'s defaults): single
+    * quotes and the NaN/Infinity tokens are accepted. */
+  private lazy val json = new ObjectMapper(new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS)
+    .build())
+
+  private def tree(text: String): Option[JsonNode] =
+    try Option(json.readTree(text)) catch { case _: JsonProcessingException => None }
+
+  /** A parameter's series or a list-form value may arrive as a JSON
+    * string that holds the JSON: it is read as that JSON. */
+  private def unwrap(v: JsonNode): Option[JsonNode] =
+    if (v.isTextual) tree(v.asText) else Some(v)
+
+  /** A `YYYYMMDD` or `YYYYMMDDHH` key of ASCII digits as a local
+    * date-time, if it names a valid day (and hour). */
+  private def keyTime(k: String): Option[LocalDateTime] =
+    if (k.length != 8 && k.length != 10 || !k.forall(c => c >= '0' && c <= '9')) None
+    else try {
+      val day = LocalDate.of(k.take(4).toInt, k.slice(4, 6).toInt, k.slice(6, 8).toInt)
+      Some(if (k.length == 8) day.atStartOfDay else day.atTime(k.drop(8).toInt, 0))
+    } catch { case _: java.time.DateTimeException => None }
+
+  /** A list-form element: a number, null, or one of the NaN/Infinity
+    * strings; anything else voids the whole list, as `from_json` to
+    * `array<double>` does. */
+  private def listElement(e: JsonNode): Option[Option[Double]] =
+    if (e.isNumber) Some(Some(e.doubleValue))
+    else if (e.isNull) Some(None)
+    else if (!e.isTextual) None
+    else e.asText match {
+      case "NaN" => Some(Some(Double.NaN))
+      case "+INF" | "+Infinity" | "Infinity" => Some(Some(Double.PositiveInfinity))
+      case "-INF" | "-Infinity" => Some(Some(Double.NegativeInfinity))
+      case _ => None
+    }
+
+  /** The entries of one series key as (hour, value, list form?).
+    * J1: `"YYYYMMDD": [..]` puts element i at hour i of that day (a
+    * null element keeps its hour); `"YYYYMMDDHH": v` reads the first
+    * ten characters of the key, drops a null v, and casts any other v
+    * from its text with Spark's string-to-double cast under `mode` — a
+    * non-numeric scalar fails the call under ANSI and is a null
+    * measure otherwise. A key that names no valid day or hour is
+    * skipped (nasa.py:71-74). */
+  private def entries(key: String, v: JsonNode, zone: ZoneId, mode: EvalMode.Value)
+      : Seq[(Instant, Option[Double], Boolean)] = {
+    if (v.isNull) Nil
+    else if (v.isArray || v.isTextual && v.asText.startsWith("[")) (for {
+      day <- if (key.length == 8) keyTime(key) else None
+      arr <- unwrap(v).filter(_.isArray)
+      values <- arr.elements.asScala.foldLeft(Option(Vector.empty[Option[Double]])) {
+        (acc, e) => acc.flatMap(a => listElement(e).map(a :+ _))
+      }
+    } yield {
+      val midnight = day.atZone(zone).toInstant
+      values.zipWithIndex.map { case (x, h) => (midnight.plusSeconds(3600L * h), x, true) }
+    }).getOrElse(Nil)
+    else (if (key.length >= 10) keyTime(key.take(10)) else None).toSeq.map { hour =>
+      val x = if (v.isNumber) Some(v.doubleValue) else {
+        val text = if (v.isTextual) v.asText else v.toString
+        Option(Cast(Literal(text), DoubleType, None, mode).eval())
+          .map(_.asInstanceOf[Double])
+      }
+      (hour.atZone(zone).toInstant, x, false)
+    }
   }
 
-  /** J3: align the per-parameter series on the hour axis (full outer —
-    * absent parameters surface as nulls), project to the Bronze
-    * column names, and attach the S7 raw_json blob. */
-  def alignToBronze(series: DataFrame): DataFrame =
-    series
-      .groupBy($"site", $"ts")
-      .pivot("param", Params)
-      .agg(first($"value"))
-      .withColumnRenamed("ALLSKY_SFC_SW_DWN", "ghi_wm2")
-      .withColumnRenamed("T2M", "t2m_c")
-      .withColumnRenamed("WS10M", "ws10_mps")
-      .withColumn("raw_json", to_json(struct(
-        lit("NASA_POWER").as("source"),
-        $"ghi_wm2", $"t2m_c", $"ws10_mps")))
-      .orderBy($"site", $"ts")
+  /** The relationalization of `(site, payload body)` pairs into aligned
+    * Bronze readings (J1–J3), with timestamps in `zone`.
+    *   - J2: only [[Params]] are read; a body that is not JSON, or has
+    *     no `properties.parameter` object, yields nothing.
+    *   - J3: one reading per (site, hour) that any parameter has an
+    *     entry for; per-parameter gaps stay None.
+    *   - Several entries for one (site, hour, parameter): a list-form
+    *     entry wins over a scalar one, then the earlier payload and
+    *     key. Within one JSON object a repeated key keeps its last
+    *     value. */
+  private def readings(payloads: Iterator[(String, String)], zone: ZoneId,
+                       mode: EvalMode.Value): Iterator[Reading] = {
+    val n = Params.size
+    // per (site, hour): slot p holds parameter p's first list-form
+    // entry, slot n + p its first scalar-form entry
+    val hours = mutable.LinkedHashMap.empty[(String, Instant), Array[Option[Option[Double]]]]
+    for {
+      (site, body) <- payloads
+      parameter <- tree(body).map(_.path("properties").path("parameter")).filter(_.isObject)
+      field <- parameter.properties.asScala
+      p = Params.indexOf(field.getKey) if p >= 0
+      series <- unwrap(field.getValue).filter(_.isObject)
+      entry <- series.properties.asScala
+      (ts, x, list) <- entries(entry.getKey, entry.getValue, zone, mode)
+    } {
+      val slots = hours.getOrElseUpdate((site, ts), Array.fill(2 * n)(None))
+      val i = if (list) p else n + p
+      if (slots(i).isEmpty) slots(i) = Some(x)
+    }
+    hours.iterator.map { case ((site, ts), s) =>
+      def m(p: Int) = s(p).orElse(s(n + p)).flatten
+      Reading(site, ts, m(0), m(1), m(2))
+    }
+  }
 
-  /** End-to-end: payload rows → Bronze-shaped rows (entry point 1 of
-    * SURVEY §3.1, stages 4–5). */
-  def ingest(payloads: DataFrame): DataFrame =
-    alignToBronze(parseSeries(payloads))
+  /** The session's time zone and cast mode, which the parse follows as
+    * `try_to_timestamp` and `cast` do. */
+  private def parseContext(spark: SparkSession): (ZoneId, EvalMode.Value) = {
+    val conf = spark.sessionState.conf
+    (DateTimeUtils.getZoneId(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))
+  }
+
+  /** Readings as Bronze-shaped rows with the S7 `raw_json` blob
+    * (nasa.py:106). */
+  private def withRawJson(readings: Dataset[Reading]): DataFrame =
+    readings.toDF().withColumn("raw_json", to_json(struct(
+      lit("NASA_POWER").as("source"),
+      $"ghi_wm2", $"t2m_c", $"ws10_mps")))
+
+  /** Payloads the driver holds → Bronze-shaped rows (entry point 1 of
+    * SURVEY §3.1, stages 4–5). The parse runs here, on the driver, and
+    * the rows come back as a local relation: no Spark job runs until
+    * the caller writes them. */
+  def ingest(spark: SparkSession, payloads: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    val (zone, mode) = parseContext(spark)
+    withRawJson(readings(payloads.iterator, zone, mode).toSeq.toDS())
+  }
+
+  /** The same parse over payload rows `(site, payload)` held in a
+    * DataFrame (q35, the streaming ingest): each payload is parsed on
+    * its own in one typed `flatMap`, so payloads must not share a
+    * (site, hour) — the ≤7-day windows never do. */
+  def ingest(payloads: DataFrame): DataFrame = {
+    val spark = payloads.sparkSession
+    import spark.implicits._
+    val (zone, mode) = parseContext(spark)
+    withRawJson(payloads.select(col("site"), col("payload")).as[(String, String)]
+      .flatMap(p => readings(Iterator.single(p), zone, mode)))
+  }
 
   /** q35 — round-trip demonstration on fixture data: build scalar-form
     * NASA payloads from hourly event aggregates, parse + align them
-    * back, and return the Bronze rows. Validates the full J1→J2→J3
-    * path inside the driver contract (rows-only check — the payload
-    * construction isn't mirrored in SQL).
+    * back, and return the Bronze rows in (site, ts) order. Validates
+    * the full J1→J2→J3 path inside the driver contract (rows-only
+    * check — the payload construction isn't mirrored in SQL).
     *
     * Payloads are chunked per (site, 7-day window), mirroring the
     * reference's ≤7-day request windows (nasa.py:160-177): a payload
@@ -164,7 +265,7 @@ object NasaIngest {
     * at 100× — a site's multi-year series in ONE row — cannot
     * arise; the same chunk arithmetic as WeatherApi.ingestWindows). */
   def roundTrip(spark: SparkSession, dir: String): DataFrame =
-    ingest(roundTripPayloads(spark, dir))
+    ingest(roundTripPayloads(spark, dir)).orderBy($"site", $"ts")
 
   /** The payload-construction stage of [[roundTrip]], exposed so the
     * chunk-width invariant (≤168 hourly keys per payload row) is

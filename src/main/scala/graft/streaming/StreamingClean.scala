@@ -70,14 +70,15 @@ object StreamingClean {
       // few partitions, never the table (hour groups can't span a
       // date boundary, so the bounded merge is self-contained)
       UpsertWriter.upsertPartitioned(batch.sparkSession, outPath,
-        cleaned.withColumn("ds", to_date(col("ts_utc"))),
+        graft.schema.Schemas.conform(cleaned.withColumn("ds", to_date(col("ts_utc"))),
+          graft.schema.Schemas.silverStore),
         keys = Seq("site", "ts_utc"),
         versionCols = Seq("ingested_at", "ingest_seq"),
         partitionCol = "ds",
         checks = graft.schema.Schemas.factWeatherChecks,
         table = "fact_weather")
     }
-    spark.read.parquet(outPath)
+    UpsertWriter.readStore(spark, outPath, graft.schema.Schemas.silverStore)
   }
 
   /** q34 — streaming-vs-batch parity: the full streaming pipeline on

@@ -349,9 +349,9 @@ object StreamingCorpus {
     // maintained df AFTER this batch = stored counts of the touched
     // buckets + the batch's delta, ONE tagged-union aggregate (the
     // q132 delta shape) — vocabulary-bounded, never stream-length.
-    // Eagerly checkpointed: the dynamic-partition overwrite below
-    // must never read the files it replaces, and the hot cutoff
-    // reads it twice.
+    // Eagerly checkpointed: the partition publish below swaps out
+    // the files it was computed from, and the hot cutoff reads it
+    // twice.
     val newDf = readLog(spark, s"$root/df", dfTableSchema)
       .filter($"b".isin(touched.map(Integer.valueOf): _*))
       .select($"fp", $"df", $"b")
@@ -391,10 +391,7 @@ object StreamingCorpus {
       .write.mode("append").partitionBy("b").parquet(s"$root/fps")
     fresh.select($"doc_id").distinct()
       .write.mode("append").parquet(s"$root/docs")
-    newDf.repartition($"b")
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("b").parquet(s"$root/df")
+    graft.sources.UpsertWriter.publishPartitions(spark, newDf, s"$root/df", "b")
   }
 
   /** The r16 full-recount batch shape, kept VERBATIM as the
