@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{DecimalNode, ObjectNode}
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with total + per-query
@@ -36,30 +37,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .appName("graft-bench")
-      // Small-SF local-mode posture: at sub-GB inputs AQE's per-stage
-      // re-optimization barriers and wide shuffles are pure overhead
-      // (measured: AQE on + 32 partitions costs ~60% extra across the
-      // suite). A cluster deployment at real scale flips both via env
-      // (SPARK_GRAFT_AQE=true, SPARK_GRAFT_SHUFFLE=<2-3x cores>).
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the warehouse layout below produces many small files; keep one
-      // task per ~file so scans actually parallelize (defaults would
-      // bin-pack them back into one partition)
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     // The ContextCleaner races late task-end accumulator updates from
     // localCheckpoint'd stages: DAGScheduler logs a harmless
@@ -111,85 +89,82 @@ object Bench {
     // (SURVEY S6; sources/Layout.scala): data lands once, split into
     // enough files that scans saturate the cluster. Reproduce that
     // here: rewrite each table into defaultParallelism splits under
-    // /tmp and point the queries at the result. Disable with
-    // SPARK_GRAFT_PREP=false to read the raw fixtures directly.
-    val queryDir =
-      if (sys.env.get("SPARK_GRAFT_PREP").contains("false")) sfDir
-      else {
-        val srcDir = new java.io.File(sfDir).getAbsoluteFile
-        // invalidation key: source identity + file inventory + mtimes +
-        // sizes + table list — regenerated fixtures, a different dir
-        // with the same basename, or a new table all force a rewrite
-        val fingerprint = (srcDir.getPath +: Tables.all.map { t =>
-          val f = new java.io.File(srcDir, s"$t.parquet")
-          s"$t:${f.exists()}:${f.lastModified()}:${f.length()}"
-        }).mkString("\n")
-        val dest = new java.io.File(
-          s"/tmp/graft_wh_${srcDir.getName}_${Integer.toHexString(fingerprint.hashCode)}")
-        val marker = new java.io.File(dest, "_READY")
-        val fresh = marker.exists() &&
-          new String(java.nio.file.Files.readAllBytes(marker.toPath),
-            "UTF-8") == fingerprint
-        if (!fresh) {
-          // Build in a run-unique staging dir and atomically rename into
-          // place (the UpsertWriter publish pattern): a concurrent bench
-          // run with the same fingerprint either wins the rename or
-          // finds the winner's complete tree — never a half-written
-          // warehouse. Stale fingerprint-keyed siblings of this source
-          // basename (regenerated fixtures) and orphaned staging dirs
-          // from crashed runs are pruned so /tmp doesn't accumulate
-          // dead copies forever.
-          def rmTree(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rmTree))
-            f.delete()
-          }
-          val stage = new java.io.File(
-            s"${dest.getPath}.tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
-          val n = spark.sparkContext.defaultParallelism
-          Tables.all.foreach { t =>
-            val src = new java.io.File(srcDir, s"$t.parquet")
-            if (src.exists())
-              // events.ts round-trips losslessly under either fixture
-              // encoding (see Tables.normalizeEventsTs): TIMESTAMP
-              // NANOS surfaces as a plain int64 under nanosAsLong;
-              // micros-NTZ reads and rewrites as TIMESTAMP_NTZ
-              spark.read.parquet(src.toString).repartition(n)
-                .write.mode("overwrite").parquet(s"$stage/${t}.parquet")
-          }
-          stage.mkdirs() // no-op if a table was written; real if none were
-          java.nio.file.Files.write(
-            new java.io.File(stage, "_READY").toPath,
-            fingerprint.getBytes("UTF-8"))
-          if (!stage.renameTo(dest)) {
-            // rename failed: either a concurrent winner published the
-            // same fingerprint (keep theirs) or a stale dest is in the
-            // way (replace it wholesale)
-            val winnerOk = marker.exists() &&
-              new String(java.nio.file.Files.readAllBytes(marker.toPath),
-                "UTF-8") == fingerprint
-            if (winnerOk) rmTree(stage)
-            else {
-              rmTree(dest)
-              if (!stage.renameTo(dest))
-                throw new java.io.IOException(
-                  s"warehouse publish failed: $stage -> $dest")
-            }
-          }
-          val prefix = s"graft_wh_${srcDir.getName}_"
-          val staleAge = System.currentTimeMillis() - 6 * 3600 * 1000L
-          Option(new java.io.File("/tmp").listFiles()).foreach(_.foreach { f =>
-            val isSibling = f.getName.startsWith(prefix) &&
-              f.getPath != dest.getPath
-            // age-gate EVERY sibling, published or staging: a published
-            // dir with a different fingerprint younger than 6h may be
-            // the live warehouse of a concurrent run against
-            // regenerated fixtures — deleting it mid-scan would fail
-            // that run. Older than 6h it's a dead copy either way.
-            if (isSibling && f.lastModified() < staleAge) rmTree(f)
-          })
+    // /tmp and point the queries at the result.
+    val queryDir = {
+      val srcDir = new java.io.File(sfDir).getAbsoluteFile
+      // invalidation key: source identity + file inventory + mtimes +
+      // sizes + table list — regenerated fixtures, a different dir
+      // with the same basename, or a new table all force a rewrite
+      val fingerprint = (srcDir.getPath +: Tables.all.map { t =>
+        val f = new java.io.File(srcDir, s"$t.parquet")
+        s"$t:${f.exists()}:${f.lastModified()}:${f.length()}"
+      }).mkString("\n")
+      val dest = new java.io.File(
+        s"/tmp/graft_wh_${srcDir.getName}_${Integer.toHexString(fingerprint.hashCode)}")
+      val marker = new java.io.File(dest, "_READY")
+      val fresh = marker.exists() &&
+        new String(java.nio.file.Files.readAllBytes(marker.toPath),
+          "UTF-8") == fingerprint
+      if (!fresh) {
+        // Build in a run-unique staging dir and atomically rename into
+        // place (the UpsertWriter publish pattern): a concurrent bench
+        // run with the same fingerprint either wins the rename or
+        // finds the winner's complete tree — never a half-written
+        // warehouse. Stale fingerprint-keyed siblings of this source
+        // basename (regenerated fixtures) and orphaned staging dirs
+        // from crashed runs are pruned so /tmp doesn't accumulate
+        // dead copies forever.
+        def rmTree(f: java.io.File): Unit = {
+          Option(f.listFiles()).foreach(_.foreach(rmTree))
+          f.delete()
         }
-        dest.toString
+        val stage = new java.io.File(
+          s"${dest.getPath}.tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
+        val n = spark.sparkContext.defaultParallelism
+        Tables.all.foreach { t =>
+          val src = new java.io.File(srcDir, s"$t.parquet")
+          if (src.exists())
+            // events.ts round-trips losslessly under either fixture
+            // encoding (see Tables.normalizeEventsTs): TIMESTAMP
+            // NANOS surfaces as a plain int64 under nanosAsLong;
+            // micros-NTZ reads and rewrites as TIMESTAMP_NTZ
+            spark.read.parquet(src.toString).repartition(n)
+              .write.mode("overwrite").parquet(s"$stage/${t}.parquet")
+        }
+        stage.mkdirs() // no-op if a table was written; real if none were
+        java.nio.file.Files.write(
+          new java.io.File(stage, "_READY").toPath,
+          fingerprint.getBytes("UTF-8"))
+        if (!stage.renameTo(dest)) {
+          // rename failed: either a concurrent winner published the
+          // same fingerprint (keep theirs) or a stale dest is in the
+          // way (replace it wholesale)
+          val winnerOk = marker.exists() &&
+            new String(java.nio.file.Files.readAllBytes(marker.toPath),
+              "UTF-8") == fingerprint
+          if (winnerOk) rmTree(stage)
+          else {
+            rmTree(dest)
+            if (!stage.renameTo(dest))
+              throw new java.io.IOException(
+                s"warehouse publish failed: $stage -> $dest")
+          }
+        }
+        val prefix = s"graft_wh_${srcDir.getName}_"
+        val staleAge = System.currentTimeMillis() - 6 * 3600 * 1000L
+        Option(new java.io.File("/tmp").listFiles()).foreach(_.foreach { f =>
+          val isSibling = f.getName.startsWith(prefix) &&
+            f.getPath != dest.getPath
+          // age-gate EVERY sibling, published or staging: a published
+          // dir with a different fingerprint younger than 6h may be
+          // the live warehouse of a concurrent run against
+          // regenerated fixtures — deleting it mid-scan would fail
+          // that run. Older than 6h it's a dead copy either way.
+          if (isSibling && f.lastModified() < staleAge) rmTree(f)
+        })
       }
+      dest.toString
+    }
 
     // warmup: session init + codegen of a trivial plan
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -199,9 +174,9 @@ object Bench {
     // files were cold — every scan paid real disk I/O that no later
     // pass pays, and the convergence check reads that as co-load.
     // Stream every input byte once, untimed, before pass 1: the
-    // fixture dir too, since the PREP rewrite reads it but a PREP
-    // cache hit skips that read. Disable with SPARK_GRAFT_WARM=false.
-    if (!sys.env.get("SPARK_GRAFT_WARM").contains("false")) {
+    // fixture dir too, since the re-layout reads it but a re-layout
+    // cache hit skips that read.
+    locally {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
         else Seq(f)
@@ -310,26 +285,11 @@ object Bench {
       val vs = passes.toSeq.map(_(k))
       k -> (if (vs.exists(_ < 0)) -1.0 else vs.min)
     }
-    val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
-    // The gate compares against DuckDB running SparkEntry.oracleSql —
-    // queries with no oracle twin (rows-only checks) have no DuckDB
-    // counterpart, so including them makes the headline division
-    // apples-to-oranges. Emit the oracle-subset total alongside so the
-    // gate ratio is one clean division over the shared query set.
-    val oracleTotal = results
-      .collect { case (k, v) if v >= 0 && SparkEntry.oracleSql.contains(k) => v }
-      .sum
-    // a failed oracle-twinned query would silently shrink the numerator
-    // while the DuckDB denominator keeps its SQL — flag it loudly so
-    // the gate division is never quietly apples-to-oranges
-    val oracleFailed = results
-      .collect { case (k, v) if v < 0 && SparkEntry.oracleSql.contains(k) => k }
-    if (oracleFailed.nonEmpty)
+    val failed = oracleFailed(results)
+    if (failed.nonEmpty)
       System.err.println(
         s"[bench] ORACLE QUERIES FAILED (subset total is incomplete): " +
-          oracleFailed.mkString(", "))
+          failed.mkString(", "))
     val passTotals = passes.toSeq.map(_.values.filter(_ >= 0).sum)
     // the reported spread matches the convergence criterion: pass 1 is
     // the JIT/codegen warmup (excluded there too), so including it made
@@ -339,104 +299,8 @@ object Bench {
       case s if s > 1e6 => -1.0 // a broken pass, not a measured spread
       case s => s
     }
-    val passJson = passTotals.map(v => f"$v%.3f").mkString("[", ",", "]")
-    val loadJson = loads.map(v => f"$v%.2f").mkString("[", ",", "]")
-    val waitJson = quiesceWaits.map(v => f"$v%.0f").mkString("[", ",", "]")
-    val skippedJson = skip.toSeq.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Publish-once rows, named in the artifact (ADVICE r16): these
-    // queries read a fingerprint-memoized published artifact (NB
-    // model, bigram LM, cross-source pair table, maintained q116
-    // model), so their best-of-N rows price scoring against the
-    // published state — the per-snapshot fit/derivation is priced by
-    // the first pass and by the maintainer queries' own rows
-    // (q109/q47-chain etc.), exactly the posture a nightly deployment
-    // runs.
-    val publishOnceJson = Seq("q99_cross_source_dups",
-        "q101_incremental_corpus",
-        "q108_bigram_logprob", "q114_nb_classifier", "q116_incremental_nb")
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val publishOnceNote =
-      "best-of-N rows measure scoring against a fingerprint-memoized " +
-        "published model/pair table; the per-snapshot fit/derivation " +
-        "is priced once per corpus fingerprint (the nightly-publish " +
-        "posture), and the maintainer queries price the fresh build " +
-        "in their own rows (r18: q101 composes the published stage " +
-        "verdicts — q88/q92/q102's maintained tables, the chunk carry, " +
-        "the dedup keep ids — its maintainers still rescore per call " +
-        "in their own rows)"
-    // the artifact names its own posture (VERDICT r6 "What's missing"
-    // #3): a bench.json and a bench_cluster.json are self-describing
-    // without cross-referencing the env the run happened to use
-    val postureJson =
-      s"""{"aqe":${spark.conf.get("spark.sql.adaptive.enabled")},""" +
-        s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-        s""""cores":$cpus}"""
-    // the artifact documents its own gate math (VERDICT r12 item 7):
-    // the denominator for value_oracle_subset is the DuckDB total over
-    // the same timed oracle SQLs at the same sf. The engine cannot run
-    // DuckDB itself (driver-side only), so the hint carries the last
-    // judge-measured numbers with their provenance (VERDICT r13
-    // item 2: BOTH the full-suite total and the total excluding the
-    // three DuckDB-hostile r13 queries, so the headline is honest
-    // about what carries it); override when a fresher measurement
-    // exists.
-    val defaultDuckdbHint =
-      """{"value":461.1,"unit":"sec","source":"judge r16 best-of-3 per query over the full 122-query timed subset (451.1 s, sf0.1, 32 threads, one coherent rerun incl. the CTE trio) + builder r17 best-of-3 for the new q136/q137 (3.03/3.14) and q140/q141/q142 (0.45/2.90/0.50 via scripts/oracle_time.py), 127 timed queries","ex_new_trio_value":129.2,"ex_new_trio_note":"excluding q126/q128/q129, whose DuckDB oracles (unrolled BPE merge rounds, recursive-CTE reachability) pay 30.1/121.0/180.7 s where Spark pays ~1.4/2.7/0.3 s"}"""
-    // a malformed override would corrupt the artifact line and break
-    // the driver's tail JSON parse (ADVICE r13) — validate with a real
-    // JSON parse (jackson ships with Spark), not brace counting, which
-    // rejected valid overrides containing '{' inside quoted strings
-    // and accepted brace-balanced garbage (ADVICE r14): the override
-    // must be a one-line JSON OBJECT whose top-level "value" is a
-    // number. A rejected override is logged, never silently replaced.
-    val duckdbHint = sys.env.get("SPARK_GRAFT_DUCKDB_SUBSET_HINT")
-      .map(_.trim)
-      .flatMap { h =>
-        val ok = !h.exists(c => c == '\n' || c == '\r') &&
-          (try {
-            // FAIL_ON_TRAILING_TOKENS: readTree otherwise accepts
-            // '{...}garbage' (parses the leading object, ignores the
-            // rest), and the raw string — trailing garbage included —
-            // is what gets spliced into the artifact line
-            val node = new com.fasterxml.jackson.databind.ObjectMapper()
-              .enable(com.fasterxml.jackson.databind
-                .DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
-              .readTree(h)
-            node != null && node.isObject &&
-              node.get("value") != null && node.get("value").isNumber
-          } catch { case _: Throwable => false })
-        if (!ok) System.err.println(
-          "[bench] SPARK_GRAFT_DUCKDB_SUBSET_HINT rejected (not a " +
-            "one-line JSON object with a numeric top-level \"value\") " +
-            "— falling back to the committed default hint")
-        if (ok) Some(h) else None
-      }
-      .getOrElse(defaultDuckdbHint)
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","value_oracle_subset":$oracleTotal%.3f,"oracle_failed":${oracleFailed.size},"duckdb_subset_hint":$duckdbHint,"queries":$qs,"sf":"$sfDir","posture":$postureJson,"pass_totals":$passJson,"loadavg_at_pass_start":$loadJson,"quiesce_wait_s":$waitJson,"pass_spread":$spread%.2f,"publish_once":$publishOnceJson,"publish_once_note":"$publishOnceNote","skipped":$skippedJson,"skipped_reason":"$skipReason"}"""
-    // The driver parses the LAST JSON line it finds in a bounded TAIL
-    // of stdout (~2 KB): BENCH_r01 lost the line under sbt log
-    // prefixes, and BENCH_r07 lost it again when the full-name queries
-    // map grew past the tail window (the line was emitted, but its
-    // head — "metric", "value" — was truncated away → "parsed": null).
-    // So stdout gets a COMPACT twin that stays well inside the window:
-    // qNN short keys, 2-decimal seconds, no skip list / per-pass
-    // diagnostics (those live in bench.json — cwd = repo root under
-    // `sbt run`; override via SPARK_GRAFT_BENCH_OUT). A hard size
-    // guard keeps the line under 1.5 KB FOREVER (ADVICE r8: it grows
-    // ~12 bytes per query): if the suite outgrows the budget, the
-    // per-query map is dropped from stdout rather than silently
-    // truncating the line's head out of the driver's tail window.
-    def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val qsShort = results
-      .map { case (k, v) => "\"" + shortKey(k) + f"\":$v%.2f" }
-      .mkString("{", ",", "}")
-    val compactHead =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","value_oracle_subset":$oracleTotal%.3f,"oracle_failed":${oracleFailed.size},"duckdb_subset_hint":$duckdbHint,"sf":"$sfDir","posture":$postureJson,"pass_spread":$spread%.2f,"skipped_n":${skip.size},"detail":"bench.json""""
-    val withQueries = compactHead + s""","queries":$qsShort}"""
-    val compact = if (withQueries.length <= 1536) withQueries
-                  else compactHead + "}"
+    val (line, compact) = artifact(results, passTotals, loads.toSeq,
+      quiesceWaits.toSeq, spread, sfDir, Session.posture, Session.cpus)
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
     try java.nio.file.Files.writeString(outPath, line + "\n")
@@ -450,5 +314,129 @@ object Bench {
     spark.stop()
     println(compact)
     System.out.flush()
+  }
+
+  /** Longest compact line the driver's ~2 KB stdout tail is sure to hold. */
+  val CompactMaxBytes = 1536
+
+  private val mapper = new ObjectMapper()
+
+  // Publish-once rows, named in the artifact (ADVICE r16): these
+  // queries read a fingerprint-memoized published artifact (NB
+  // model, bigram LM, cross-source pair table, maintained q116
+  // model), so their best-of-N rows price scoring against the
+  // published state — the per-snapshot fit/derivation is priced by
+  // the first pass and by the maintainer queries' own rows
+  // (q109/q47-chain etc.), exactly the posture a nightly deployment
+  // runs.
+  private val publishOnce = Seq("q99_cross_source_dups",
+    "q101_incremental_corpus",
+    "q108_bigram_logprob", "q114_nb_classifier", "q116_incremental_nb")
+  private val publishOnceNote =
+    "best-of-N rows measure scoring against a fingerprint-memoized " +
+      "published model/pair table; the per-snapshot fit/derivation " +
+      "is priced once per corpus fingerprint (the nightly-publish " +
+      "posture), and the maintainer queries price the fresh build " +
+      "in their own rows (r18: q101 composes the published stage " +
+      "verdicts — q88/q92/q102's maintained tables, the chunk carry, " +
+      "the dedup keep ids — its maintainers still rescore per call " +
+      "in their own rows)"
+
+  // the artifact documents its own gate math (VERDICT r12 item 7):
+  // the denominator for value_oracle_subset is the DuckDB total over
+  // the same timed oracle SQLs at the same sf. The engine cannot run
+  // DuckDB itself (driver-side only), so the hint carries the last
+  // judge-measured numbers with their provenance (VERDICT r13
+  // item 2: BOTH the full-suite total and the total excluding the
+  // three DuckDB-hostile r13 queries, so the headline is honest
+  // about what carries it).
+  private val duckdbHint: JsonNode = mapper.readTree(
+    """{"value":461.1,"unit":"sec","source":"judge r16 best-of-3 per query over the full 122-query timed subset (451.1 s, sf0.1, 32 threads, one coherent rerun incl. the CTE trio) + builder r17 best-of-3 for the new q136/q137 (3.03/3.14) and q140/q141/q142 (0.45/2.90/0.50 via scripts/oracle_time.py), 127 timed queries","ex_new_trio_value":129.2,"ex_new_trio_note":"excluding q126/q128/q129, whose DuckDB oracles (unrolled BPE merge rounds, recursive-CTE reachability) pay 30.1/121.0/180.7 s where Spark pays ~1.4/2.7/0.3 s"}""")
+
+  /** Oracle-twinned queries that failed (-1) in `results`: a failure
+    * would silently shrink the subset numerator while the DuckDB
+    * denominator keeps its SQL. */
+  private def oracleFailed(results: Seq[(String, Double)]): Seq[String] =
+    results.collect { case (k, v) if v < 0 && SparkEntry.oracleSql.contains(k) => k }
+
+  /** The run's two JSON lines: the full `bench.json` artifact and its
+    * compact stdout twin. `results` holds each query's best seconds
+    * (-1 for a failure); `passTotals`, `loads` and `waits` hold one
+    * value per pass; `posture` is the session's SQL settings
+    * (`Session.posture`). Seconds keep 3 decimals (2 in the compact
+    * per-query map), load averages and the spread 2, waits none. */
+  def artifact(results: Seq[(String, Double)], passTotals: Seq[Double],
+      loads: Seq[Double], waits: Seq[Double], spread: Double, sf: String,
+      posture: Map[String, String], cores: Int): (String, String) = {
+    val f = mapper.getNodeFactory
+    def num(v: Double, places: Int): JsonNode = DecimalNode.valueOf(
+      java.math.BigDecimal.valueOf(v)
+        .setScale(places, java.math.RoundingMode.HALF_UP))
+    def nums(vs: Seq[Double], places: Int): JsonNode =
+      vs.foldLeft(f.arrayNode())((a, v) => a.add(num(v, places)))
+    def obj(fields: (String, JsonNode)*): ObjectNode =
+      fields.foldLeft(f.objectNode())((o, kv) => o.set[ObjectNode](kv._1, kv._2))
+    val total = results.map(_._2).filter(_ >= 0).sum
+    // The gate compares against DuckDB running SparkEntry.oracleSql —
+    // queries with no oracle twin (rows-only checks) have no DuckDB
+    // counterpart, so including them makes the headline division
+    // apples-to-oranges. Emit the oracle-subset total alongside so the
+    // gate ratio is one clean division over the shared query set.
+    val oracleTotal = results
+      .collect { case (k, v) if v >= 0 && SparkEntry.oracleSql.contains(k) => v }
+      .sum
+    val head = Seq(
+      "metric" -> f.textNode("total"),
+      "value" -> num(total, 3),
+      "unit" -> f.textNode("sec"),
+      "value_oracle_subset" -> num(oracleTotal, 3),
+      "oracle_failed" -> f.numberNode(oracleFailed(results).size),
+      "duckdb_subset_hint" -> duckdbHint)
+    // the artifact names its own posture (VERDICT r6 "What's missing"
+    // #3): a bench.json and a bench_cluster.json are self-describing
+    // without cross-referencing the env the run happened to use
+    val run = Seq(
+      "sf" -> f.textNode(sf),
+      "posture" -> obj(
+        "aqe" -> f.booleanNode(posture("spark.sql.adaptive.enabled").toBoolean),
+        "shuffle_partitions" ->
+          f.numberNode(posture("spark.sql.shuffle.partitions").toInt),
+        "cores" -> f.numberNode(cores)))
+    val full = obj(head ++
+      Seq("queries" -> obj(results.map { case (k, v) => k -> num(v, 3) }: _*)) ++
+      run ++ Seq(
+      "pass_totals" -> nums(passTotals, 3),
+      "loadavg_at_pass_start" -> nums(loads, 2),
+      "quiesce_wait_s" -> nums(waits, 0),
+      "pass_spread" -> num(spread, 2),
+      "publish_once" -> mapper.valueToTree[JsonNode](publishOnce.toArray),
+      "publish_once_note" -> f.textNode(publishOnceNote),
+      "skipped" -> mapper.valueToTree[JsonNode](skip.toSeq.sorted.toArray),
+      "skipped_reason" -> f.textNode(skipReason)): _*)
+    // The driver parses the LAST JSON line it finds in a bounded TAIL
+    // of stdout (~2 KB): BENCH_r01 lost the line under sbt log
+    // prefixes, and BENCH_r07 lost it again when the full-name queries
+    // map grew past the tail window (the line was emitted, but its
+    // head — "metric", "value" — was truncated away → "parsed": null).
+    // So stdout gets a COMPACT twin that stays well inside the window:
+    // qNN short keys, 2-decimal seconds, no skip list / per-pass
+    // diagnostics (those live in bench.json — cwd = repo root under
+    // `sbt run`; override via SPARK_GRAFT_BENCH_OUT). A hard size
+    // guard keeps the line under 1.5 KB FOREVER (ADVICE r8: it grows
+    // ~12 bytes per query): if the suite outgrows the budget, the
+    // per-query map is dropped from stdout rather than silently
+    // truncating the line's head out of the driver's tail window.
+    val compact = head ++ run ++ Seq(
+      "pass_spread" -> num(spread, 2),
+      "skipped_n" -> f.numberNode(skip.size),
+      "detail" -> f.textNode("bench.json"))
+    val shortQueries =
+      obj(results.map { case (k, v) => k.takeWhile(_ != '_') -> num(v, 2) }: _*)
+    val withQueries =
+      mapper.writeValueAsString(obj(compact :+ ("queries" -> shortQueries): _*))
+    val line =
+      if (withQueries.getBytes("UTF-8").length <= CompactMaxBytes) withQueries
+      else mapper.writeValueAsString(obj(compact: _*))
+    (mapper.writeValueAsString(full), line)
   }
 }

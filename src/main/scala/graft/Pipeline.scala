@@ -369,15 +369,7 @@ object Pipeline {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val root = args.lift(1).getOrElse(
       StreamingClean.trackedTempDir("graft-wh-cli-") + "/wh")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     val report = run(spark, sfDir, root)
     println(s"[pipeline] warehouse: $root")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -110,14 +109,4 @@ object MediaExpressions {
         intLit("graft_frames", "frameChars", exprs(1)),
         intLit("graft_frames", "stride", exprs(2)))
     })
-
-  /** Idempotent per-session registration (the TextExpressions shape). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -275,17 +274,4 @@ object TextExpressions {
         intLit("graft_winnow", "k", exprs(1)),
         intLit("graft_winnow", "w", exprs(2)))
     })
-
-  /** Register the text generators (idempotent, per-session). Existence
-    * is checked PER NAME — one name present (e.g. from a partial or
-    * user registration) must not skip the others, which would surface
-    * later as unresolved-function errors far from the cause. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-  }
 }

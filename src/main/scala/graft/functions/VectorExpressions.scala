@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -399,20 +398,4 @@ object VectorExpressions {
         NearestCells(exprs.head, ids.toIndexedSeq,
           cvs.map(_.toIndexedSeq).toIndexedSeq, probes)
       })
-
-  /** Register the kernels as SQL functions (idempotent, per-session).
-    * Callers then use `expr("graft_dot(a, b)")` — the registry route
-    * works across the Spark 4 Column API without touching internals. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotency without a proxy name: existence is checked PER
-    // function (re-registering an existing one emitted a WARN and
-    // rebuilt the builder closure; skipping the whole set because one
-    // name exists would leave the rest unregistered)
-    builders.foreach { case (name, b) =>
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-  }
 }

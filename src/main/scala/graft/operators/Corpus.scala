@@ -97,7 +97,7 @@ object Corpus {
     decontaminateFrom(Tables.documents(spark, dir))
 
   def decontaminateFrom(docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     val fps = docs.select($"doc_id",
       expr(s"graft_shingle_fps(text, $DecontamK)").as("fp"))
     // benchmark n-gram set: tiny (an eval suite), distinct + broadcast
@@ -3029,7 +3029,7 @@ object Corpus {
 
   /** (doc_id, fp) — distinct k-gram fingerprints, the q59 derivation. */
   private def decontamFps(docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     docs.select($"doc_id",
       expr(s"graft_shingle_fps(text, $DecontamK)").as("fp"))
   }

@@ -43,7 +43,7 @@ object Dedup {
     * DISTINCT shingles in one tight loop, so no distinct exchange
     * exists anywhere in the shingle pipelines. */
   def shinglesFrom(docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     docs.select($"doc_id", expr("graft_shingles(text, 3)").as("s"))
   }
 
@@ -59,7 +59,7 @@ object Dedup {
     shingleFpsFrom(Tables.documents(spark, dir).filter($"doc_id" < maxDocId))
 
   def shingleFpsFrom(docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     docs.select($"doc_id", expr("graft_shingle_fps(text, 3)").as("fp"))
   }
 
@@ -2433,7 +2433,7 @@ object Dedup {
     * in a single tight loop — no per-character explode rows, no window
     * exchange+sort, no distinct shuffle (VERDICT r1 item 1b). */
   def winnowFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     Tables.documents(spark, dir)
       .select($"doc_id",
         regexp_replace(lower(trim($"text")), "\\s+", " ").as("norm"))
@@ -2494,7 +2494,7 @@ object Dedup {
     * ordered by doc_id; docs too short for one span keep with
     * shared_frac 0. */
   def repeatedSpansFrom(docs: DataFrame): DataFrame = {
-    graft.functions.TextExpressions.register(docs.sparkSession)
+    graft.GraftExtensions.register(docs.sparkSession)
     val fps = docs.select($"doc_id",
       expr(s"graft_shingle_fps(text, $SpanK)").as("fp"))
     // the Generator dedups within doc, so count(*) = distinct docs

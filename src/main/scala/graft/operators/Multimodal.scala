@@ -64,7 +64,7 @@ object StubCodec extends MediaCodec {
   }
 
   def frames(media: DataFrame, frameChars: Int, stride: Int): DataFrame = {
-    graft.functions.MediaExpressions.register(media.sparkSession)
+    graft.GraftExtensions.register(media.sparkSession)
     media
       .select($"doc_id",
         expr(s"graft_frames(payload, $frameChars, $stride)")

@@ -57,7 +57,7 @@ object VectorOps {
   /** (vec_id, v, nrm) over any embeddings-shaped frame — the shared
     * corpus normalization, public for specs/dev amplification. */
   def vecsFrom(embeddings: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(embeddings.sparkSession)
+    graft.GraftExtensions.register(embeddings.sparkSession)
     embeddings
       .select($"vec_id", vecD("embedding").as("v"))
       .withColumn("nrm", l2norm("v"))
@@ -548,7 +548,7 @@ object VectorOps {
   /** (vec_id, label, n_label, cos_centroid, coherent) over any
     * embeddings-shaped frame, ordered by vec_id. */
   def labelCoherenceFrom(embeddings: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(embeddings.sparkSession)
+    graft.GraftExtensions.register(embeddings.sparkSession)
     val all = embeddings
       .select($"vec_id", $"label", vecD("embedding").as("v"))
       .withColumn("nrm", l2norm("v"))

@@ -941,7 +941,7 @@ object StreamingCorpus {
     val docs = readDocumentsStream(spark, docsPath, maxFilesPerTrigger)
       .filter($"doc_id" >= Corpus.BenchmarkMaxDocId)
     Drain.foreachBatch(docs, "graft_streaming_decontam_") { (batch, _) =>
-      graft.functions.TextExpressions.register(batch.sparkSession)
+      graft.GraftExtensions.register(batch.sparkSession)
       val fps = batch.select($"doc_id",
           expr(s"graft_shingle_fps(text, ${Corpus.DecontamK})").as("fp"))
         .localCheckpoint(false)
@@ -1028,7 +1028,7 @@ object StreamingCorpus {
     * batch q59 SQL. */
   def decontamViaStreaming(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Corpus
-    graft.functions.TextExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val bench = docs.filter($"doc_id" < Corpus.BenchmarkMaxDocId)
       .select(expr(s"graft_shingle_fps(text, ${Corpus.DecontamK})").as("fp"))

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Dev tool (r17/r18 optimization rounds): dump `.explain("formatted")`
   * for the named queries to `plans/<round>/<query>_<suffix>.txt`, under
-  * the bench posture (AQE off, 8 shuffle partitions), so before/after
+  * the measured posture (`graft.Session`), so before/after
   * plan claims in OPTIMIZATION_r*.md are checkable files. Round dir via
   * SPARK_GRAFT_PLANS_DIR (default plans/r18).
   *
@@ -21,15 +19,7 @@ object DumpPlans {
     val suffix = args.head
     val names = args.tail.toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("graft-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     val out = new java.io.File(
       sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Classify, Corpus, Dedup, VectorOps, Weather}
@@ -15,12 +15,7 @@ object ScaleStress {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("graft-scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.syntax._
 
@@ -225,7 +220,6 @@ object ScaleStress {
     // per-side min, ratio of mins — the q89lowdirty protocol. Arg:
     // "q91deep".
     if (args.contains("q91deep")) {
-      graft.functions.VectorExpressions.register(spark)
       val mul = reps * 5
       val corpus = graft.Tables.embeddings(spark, dir)
         .withColumn("rep", explode(sequence(lit(0), lit(mul - 1))))
@@ -294,7 +288,6 @@ object ScaleStress {
     //                   operator exists for.
     if (args.contains("q93deep") || args.contains("q93lowdirty")) {
       val lowDirty = args.contains("q93lowdirty")
-      graft.functions.VectorExpressions.register(spark)
       val emb10 = graft.Tables.embeddings(spark, dir)
         .withColumn("rep", explode(sequence(lit(0), lit(reps - 1))))
         .withColumn("vec_id", $"vec_id" * reps + $"rep")
@@ -614,7 +607,6 @@ object ScaleStress {
     // measured region). Args: "<dir> <reps> driftgate".
     if (args.contains("driftgate")) {
       import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      graft.functions.VectorExpressions.register(spark)
       def secs[T](f: => T): Double = {
         val t0 = System.nanoTime(); f
         (System.nanoTime() - t0) / 1e9
@@ -991,7 +983,6 @@ object ScaleStress {
         .count()
       println(s"vec_ids over MaxDocsPerVec=${Multimodal.MaxDocsPerVec}: " +
         s"$skipped (guard fires iff > 0)")
-      graft.functions.VectorExpressions.register(spark)
       var pairs: DataFrame = null
       time("vec pair table fit+build (offline write path, not charged)") {
         val corpus = VectorOps.vecsFrom(emb10).localCheckpoint(true)
@@ -1028,7 +1019,6 @@ object ScaleStress {
         val t0 = System.nanoTime(); val n = f
         ((System.nanoTime() - t0) / 1e9, n)
       }
-      graft.functions.VectorExpressions.register(spark)
       val emb10 = graft.Tables.embeddings(spark, dir)
         .withColumn("rep", explode(sequence(lit(0), lit(reps - 1))))
         .withColumn("vec_id", $"vec_id" * reps + $"rep")
@@ -1255,7 +1245,6 @@ object ScaleStress {
     // min-struct argmin (and with it every graft_sqdist) off the
     // full-encode side, the q115 trap. Arg: "q125lowdirty".
     if (args.contains("q125lowdirty")) {
-      graft.functions.VectorExpressions.register(spark)
       val mul = reps * 5
       val emb50 = graft.Tables.embeddings(spark, dir)
         .withColumn("rep", explode(sequence(lit(0), lit(mul - 1))))
@@ -1469,7 +1458,6 @@ object ScaleStress {
     println(s"embeddings rows: ${emb.count()}")
     time("q78 label coherence")(
       VectorOps.labelCoherenceFrom(emb).count())
-    graft.functions.VectorExpressions.register(spark)
     val vecs = emb
       .select($"vec_id", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
       .withColumn("nrm", expr("graft_l2norm(v)"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time one driver-contract query (or a comma-separated
   * list — r17: amortizes JVM start across an iteration loop) for a few
   * passes under the bench posture — for the sink/publish queries Bench
@@ -13,21 +11,7 @@ object TimeQuery {
     val names = args(0).split(',').toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench's file-split posture so timing a query against the
-      // re-laid warehouse dir (/tmp/graft_wh_*) parallelizes the same
-      // way the committed bench numbers do
-      .config("spark.sql.files.maxPartitionBytes", "524288")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("graft-time-query")
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000).selectExpr("sum(id)").collect() // codegen warmup
     val best = scala.collection.mutable.Map.empty[String, Double]

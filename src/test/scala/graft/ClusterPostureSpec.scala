@@ -19,6 +19,10 @@ import graft.state.Published
   * the posture session builds its own stored tables, models and
   * codebooks under AQE + 64 partitions instead of reading the base
   * session's — the suite asserts that through the store's inventory.
+  *
+  * A third sibling runs `Session.posture`, the settings every main and
+  * the benchmark run with; `Verify` checks that posture against the
+  * DuckDB oracle, so oracle == measured posture == cluster posture.
   */
 class ClusterPostureSpec extends AnyFunSuite {
   import TestSpark.sf
@@ -45,20 +49,28 @@ class ClusterPostureSpec extends AnyFunSuite {
     val posture = base.newSession()
     posture.conf.set("spark.sql.adaptive.enabled", "true")
     posture.conf.set("spark.sql.shuffle.partitions", "64")
+    // the posture every main runs and the benchmark measures
+    val measured = base.newSession()
+    Session.posture.foreach { case (k, v) => measured.conf.set(k, v) }
+    val postures = Seq("cluster" -> posture, "measured" -> measured)
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, q) =>
         val expect = q(base, sf).collect()
-        val got = q(posture, sf).collect()
-        if (RowsOnly(name)) {
-          if (got.length == expect.length) None
-          else Some(s"$name: ${got.length} rows vs ${expect.length}")
-        } else if (got.toSeq == expect.toSeq) None
-        else Some(s"$name: results differ under cluster posture")
+        postures.flatMap { case (label, session) =>
+          val got = q(session, sf).collect()
+          if (RowsOnly(name)) {
+            if (got.length == expect.length) None
+            else Some(s"$name: ${got.length} rows vs ${expect.length} under $label posture")
+          } else if (got.toSeq == expect.toSeq) None
+          else Some(s"$name: results differ under $label posture")
+        }
     }
     assert(failures.isEmpty, failures.mkString("; "))
     def built(s: SparkSession): Set[String] =
       Published.entries(s).collect { case (name, `sf`, _) => name }.toSet
-    assert(StateNames -- built(posture) === Set.empty,
-      "state the posture session read without building it")
+    postures.foreach { case (label, session) =>
+      assert(StateNames -- built(session) === Set.empty,
+        s"state the $label posture session read without building it")
+    }
   }
 }

@@ -121,6 +121,9 @@ class PlanSpec extends AnyFunSuite {
   test("q04 recent-n compiles to TakeOrderedAndProject (no global sort)") {
     val p = plan("q04_recent_n")
     assert(p.contains("TakeOrderedAndProject"), p.take(3000))
+    // the event-type predicate reaches the events parquet scan
+    assert(p.contains("PushedFilters: [IsNotNull(event_type), EqualTo(event_type,click)]"),
+      p.take(3000))
   }
 
   test("q64 shard pack: the doc-level running-sum window is keyed by the pack bucket") {

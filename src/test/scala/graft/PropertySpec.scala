@@ -117,7 +117,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("graft_nearest_cells == brute-force top-k by (round(d2,6), cid) " +
        "on random vectors and codebooks") {
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val caseGen: Gen[(List[List[Double]], List[(Long, List[Double])], Int)] =
       for {
         dim <- Gen.choose(1, 8)

@@ -465,7 +465,7 @@ class TextDedupSpec extends AnyFunSuite {
   test("winnow generator: code-point parity with the declarative plan on non-BMP text") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val docs = Seq(
       (1L, "ab😀cdef ghij 🎉klm nop qrs"), // astral chars
       (2L, "tiny"),                                            // < k code points
@@ -973,7 +973,7 @@ class TextDedupSpec extends AnyFunSuite {
        "to the decimal posexplode mean") {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val all = Tables.embeddings(spark, sf)
       .select($"label", expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
     val fast = all.groupBy($"label")
@@ -1137,7 +1137,7 @@ class TextDedupSpec extends AnyFunSuite {
   test("q91 carries unchanged assignments forward VERBATIM and " +
        "reassigns only the dirty slice") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val codebook = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
       .toDF("centroid_id", "cv")
     // poison the stored assignments with a sentinel cell_id no
@@ -1434,7 +1434,7 @@ class TextDedupSpec extends AnyFunSuite {
   test("q105 verdict: an undrifted codebook carries, a displaced one " +
        "trips refit") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val cur = VectorOps.vecsFrom(Tables.embeddings(spark, sf))
       .localCheckpoint()
     val fresh = VectorOps.fittedCentroids(cur).localCheckpoint()
@@ -1481,7 +1481,7 @@ class TextDedupSpec extends AnyFunSuite {
   test("q105 degenerate corpus: zero quantization error on both sides " +
        "yields a NULL drift that falls to carry in both engines") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     // every vector identical → dist2 is 0 under any fitted codebook →
     // ms = mf = 0 → drift = (0-0)/NULLIF(0,0) = NULL; the verdict CASE
     // must treat NULL as not-refit (Spark three-valued `when` and
@@ -1521,7 +1521,7 @@ class TextDedupSpec extends AnyFunSuite {
   test("q110 carry branch really runs the q91 maintenance: an " +
        "undrifted gate preserves sentinel stored assignments") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
+    graft.GraftExtensions.register(spark)
     val codebook = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
       .toDF("centroid_id", "cv")
     // stored == fresh → carry; the sentinel cell id −77 on unchanged
