@@ -363,8 +363,8 @@ object Bench {
     * compact stdout twin. `results` holds each query's best seconds
     * (-1 for a failure); `passTotals`, `loads` and `waits` hold one
     * value per pass; `posture` is the session's SQL settings
-    * (`Session.posture`). Seconds keep 3 decimals (2 in the compact
-    * per-query map), load averages and the spread 2, waits none. */
+    * (`Session.posture`). Seconds keep 3 decimals, load averages and
+    * the spread 2, waits none. */
   def artifact(results: Seq[(String, Double)], passTotals: Seq[Double],
       loads: Seq[Double], waits: Seq[Double], spread: Double, sf: String,
       posture: Map[String, String], cores: Int): (String, String) = {
@@ -418,25 +418,15 @@ object Bench {
     // prefixes, and BENCH_r07 lost it again when the full-name queries
     // map grew past the tail window (the line was emitted, but its
     // head — "metric", "value" — was truncated away → "parsed": null).
-    // So stdout gets a COMPACT twin that stays well inside the window:
-    // qNN short keys, 2-decimal seconds, no skip list / per-pass
-    // diagnostics (those live in bench.json — cwd = repo root under
-    // `sbt run`; override via SPARK_GRAFT_BENCH_OUT). A hard size
-    // guard keeps the line under 1.5 KB FOREVER (ADVICE r8: it grows
-    // ~12 bytes per query): if the suite outgrows the budget, the
-    // per-query map is dropped from stdout rather than silently
-    // truncating the line's head out of the driver's tail window.
-    val compact = head ++ run ++ Seq(
+    // So stdout gets a COMPACT twin of totals only: no per-query map
+    // (127 short keys alone outgrow the budget), no skip list or
+    // per-pass diagnostics (those live in bench.json — cwd = repo root
+    // under `sbt run`; override via SPARK_GRAFT_BENCH_OUT). BenchSpec
+    // holds it under CompactMaxBytes.
+    val line = mapper.writeValueAsString(obj(head ++ run ++ Seq(
       "pass_spread" -> num(spread, 2),
       "skipped_n" -> f.numberNode(skip.size),
-      "detail" -> f.textNode("bench.json"))
-    val shortQueries =
-      obj(results.map { case (k, v) => k.takeWhile(_ != '_') -> num(v, 2) }: _*)
-    val withQueries =
-      mapper.writeValueAsString(obj(compact :+ ("queries" -> shortQueries): _*))
-    val line =
-      if (withQueries.getBytes("UTF-8").length <= CompactMaxBytes) withQueries
-      else mapper.writeValueAsString(obj(compact: _*))
+      "detail" -> f.textNode("bench.json")): _*))
     (mapper.writeValueAsString(full), line)
   }
 }

@@ -33,7 +33,8 @@ import graft.syntax._
   * one eager vocab-sized word-count job, the score tokenizes the
   * corpus inside its own pipelined pass (measured faster than sharing
   * a checkpointed corpus tf: a corpus-sized write costs more than a
-  * corpus-sized read — the `nbshared` receipt in SCALE.md); training
+  * corpus-sized read — the historical `nbshared` receipt in
+  * SCALE.md); training
   * is one partial-aggregated groupBy per model table (word counts
   * collapse map-side; class totals / priors / vocab size are
   * class- or one-row-sized and broadcast); scoring is the corpus tf
@@ -46,15 +47,6 @@ import graft.syntax._
   * no window sort). No all-pairs, no iteration, no driver-side math.
   */
 object Classify {
-
-  /** Escape hatch for the 'model fits its scorers' premise: set
-    * -Dgraft.nb.broadcastModel=false to score via a (cand, token)-
-    * keyed join instead of broadcasting the word-count table — the
-    * shape a vocab past the 8 GB broadcast limit needs. Read per
-    * call so a long-lived session can flip it. */
-  private[graft] def broadcastModel: Boolean =
-    java.lang.Boolean.parseBoolean(
-      System.getProperty("graft.nb.broadcastModel", "true"))
 
   // ---------------------------------------------------------------
   // q114 — Naive Bayes language classifier: fit P(lang) and
@@ -78,13 +70,13 @@ object Classify {
     val docs = Tables.documents(spark, dir)
     val model = Published(spark, "classify.nbModel", dir,
       Published.inventory(dir, "documents"))(nbModelFrom(trainSlice(docs)))
-    scoreDocs(docs, model, broadcastModel)
+    scoreDocs(docs, model, useBroadcast = true)
   }
 
   /** (doc_id, lang, pred_lang, score, correct) for every document,
     * ordered by doc_id.
     *
-    * Shape (r13, measured — the `nbshared` ScaleStress receipt): the
+    * Shape (r13, measured — the historical `nbshared` receipt): the
     * fit tokenizes the TRAIN slice inside the one vocab-sized wc/
     * stats job, the score tokenizes the corpus inside its own
     * pipelined pass — ~1.75 streaming text passes total and NOTHING
@@ -96,7 +88,7 @@ object Classify {
     * every scale. q116 still stores doc-level tf — there the table
     * is the carry state itself, not a cache. */
   def nbClassifyFrom(docs: DataFrame): DataFrame =
-    nbClassifyFrom(docs, broadcastModel)
+    nbClassifyFrom(docs, useBroadcast = true)
 
   /** Testing seam for the broadcast/keyed-join choice: the spec
     * drives the fallback through this parameter instead of mutating
@@ -222,12 +214,11 @@ object Classify {
 
   /** Score every document against every class; predict the argmax.
     * Kept as the stored-tf entry point (q116, whose tf table is the
-    * carry state itself; streaming q123; the nbshared receipt) —
-    * delegates to [[nbBestOf]] so the scoring arithmetic has exactly
-    * one home. */
+    * carry state itself; streaming q123) — delegates to [[nbBestOf]]
+    * so the scoring arithmetic has exactly one home. */
   private[graft] def nbScore(docs: DataFrame, tf: DataFrame,
                              model: NbModel,
-                             useBroadcast: Boolean = broadcastModel)
+                             useBroadcast: Boolean = true)
       : DataFrame = {
     val best = nbBestOf(tf, Seq("doc_id"), model, useBroadcast)
     presentPrediction(docs.select($"doc_id", $"lang")
@@ -253,11 +244,10 @@ object Classify {
       // docs×classes rows before their exchange.
       // FAILURE MODE of the premise (ADVICE r12): a vocab that
       // outgrows its scorers does not degrade — Spark's 8 GB
-      // broadcast hard limit (or driver memory) aborts the job. An
-      // operator who hits it flips -Dgraft.nb.broadcastModel=false to
-      // trade the row-local lookup for a (cand, token)-keyed shuffle
-      // of the tf stream — correct at any model size, priced at one
-      // corpus-scale exchange.
+      // broadcast hard limit (or driver memory) aborts the job. The
+      // `useBroadcast = false` shape trades the row-local lookup for
+      // a (cand, token)-keyed shuffle of the tf stream — correct at
+      // any model size, priced at one corpus-scale exchange.
       .join(if (useBroadcast)
           broadcast(model.wc.select($"lang".as("cand"), $"token", $"cnt"))
         else model.wc.select($"lang".as("cand"), $"token", $"cnt"),

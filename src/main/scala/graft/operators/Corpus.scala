@@ -1548,7 +1548,7 @@ object Corpus {
     * cheaper — the delta arm's bookkeeping (contains-filter + dual
     * explode + fold union) is a fixed plan cost that a small word
     * table cannot amortize. Calibrated on this box via
-    * `ScaleStress <dir> <V> bpevocab` (5-round delta/recount ratio):
+    * the `bpevocab` receipt (5-round delta/recount ratio):
     * 41 words ≈ 3×, 50k → 1.26×, 200k → 0.84×, 500k → 0.60×,
     * 2M → 0.46× — the crossover sits between 50k and 200k. Both arms
     * produce IDENTICAL merges (delta == recount is spec-pinned per
@@ -1973,7 +1973,7 @@ object Corpus {
     * serving prev with CURRENT text is exact for all rows that survive
     * a carry-forward — only the prev DIGEST is salted
     * ([[snapshotPrevDigests]]). One home for the derivation, shared by
-    * q84/q88/q89 and ScaleStress. */
+    * q84/q88/q89 and the receipts. */
   private[graft] def snapshotPrev(docs: DataFrame): DataFrame =
     docs.filter($"doc_id" % SnapAddedMod =!= SnapAddedRes)
 
@@ -1994,7 +1994,7 @@ object Corpus {
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
     snapshotDiffDerived(Tables.documents(spark, dir))
 
-  /** q84 over any documents-shaped frame (the ScaleStress entry). */
+  /** q84 over any documents-shaped frame (the receipts' entry). */
   private[graft] def snapshotDiffDerived(docs: DataFrame): DataFrame =
     snapshotDiffOf(snapshotPrevDigests(docs), snapshotCurDigests(docs))
 

@@ -234,7 +234,7 @@ object Dedup {
   // 100 TB shape: identical to q45 — the shared [[pairOverlap]]
   // kernel (hot-shingle broadcast anti-join + doc-freq cutoff), and
   // like q45 this is the GROUND-TRUTH BASELINE, not the hot path: the
-  // pair join is output-sensitive (ScaleStress at 10× clone
+  // pair join is output-sensitive (the receipts' 10× sweep with clone
   // amplification measures 17-24 s as every doc becomes a 10-family),
   // so at scale run q90 ([[containmentOverLsh]]) — the same
   // containment kernel over q47's LSH candidates (accepting banded

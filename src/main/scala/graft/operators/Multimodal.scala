@@ -460,7 +460,7 @@ object Multimodal {
   }
 
   /** The deduped video-level edge table (doc_a < doc_b) feeding the
-    * q62 CC — exposed for the ScaleStress receipt (edge counts under
+    * q62 CC — exposed for the `q128deep` receipt (edge counts under
     * amplification probe exactly the [[MaxDocsPerVec]] bound). */
   private[graft] def crossModalEdges(frames: DataFrame,
                                      embeddings: DataFrame,

@@ -733,7 +733,7 @@ object VectorOps {
   }
 
   /** The (vec_id, cell_id, dist2) assignment over any (vec_id, v,
-    * nrm) frame against an explicit codebook — the ScaleStress/spec
+    * nrm) frame against an explicit codebook — the receipts/spec
     * entry to the shared argmin kernel. */
   private[graft] def assignCellsThin(all: DataFrame,
                                      codebook: DataFrame): DataFrame =
@@ -741,7 +741,7 @@ object VectorOps {
 
   /** The rebuild path q91 is measured against: a full q50 reassign of
     * the CURRENT snapshot against the frozen sample codebook (spec
-    * equality + the ScaleStress A/B). */
+    * equality + the `q91` receipt). */
   private[graft] def fullIvfAssignSample(spark: SparkSession,
                                          dir: String): DataFrame = {
     val all = vecs(spark, dir)

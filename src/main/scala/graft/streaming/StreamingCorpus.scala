@@ -274,9 +274,9 @@ object StreamingCorpus {
   //       of re-reading and re-aggregating the FULL accumulated log,
   // so per-batch cost tracks the batch's content (its size + its fps'
   // posting mass + the touched buckets' df slice, which is bounded by
-  // vocabulary), not stream length. The ScaleStress `xpair` grid is
-  // the receipt; the r16 full-recount shape is kept below as its A/B
-  // baseline.
+  // vocabulary), not stream length. The `xpair` receipt
+  // (`tools.Receipts`) is the evidence; the r16 full-recount shape is
+  // kept below as its A/B baseline.
   //
   // Replay idempotence is DOC-granular: Structured Streaming
   // redelivers whole files, so the guard is a broadcast anti-join
@@ -394,8 +394,8 @@ object StreamingCorpus {
     graft.sources.UpsertWriter.publishPartitions(spark, newDf, s"$root/df", "b")
   }
 
-  /** The r16 full-recount batch shape, kept VERBATIM as the
-    * ScaleStress `xpair` A/B baseline: re-reads the whole accumulated
+  /** The r16 full-recount batch shape, kept VERBATIM as the `xpair`
+    * receipt's A/B baseline: re-reads the whole accumulated
     * log and recomputes df per micro-batch — per-batch cost grows
     * with stream length (the defect the maintained path fixes).
     * Writes the same sharded log layout so the two drains compare. */

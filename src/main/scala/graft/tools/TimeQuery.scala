@@ -4,7 +4,9 @@ package graft.tools
   * list — r17: amortizes JVM start across an iteration loop) for a few
   * passes under the bench posture — for the sink/publish queries Bench
   * excludes (q34/q35/q38/q68) and for one-off plan iteration without a
-  * full bench run.
+  * full bench run. Each pass is forced by the full-result hash
+  * ([[Receipts.resultHash]], gridperf `analytics`' forcing), not by
+  * `.count()`, which lets Catalyst prune the output work.
   * Usage: runMain graft.tools.TimeQuery <name>[,<name>...] [sfDir] [passes]. */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -19,11 +21,9 @@ object TimeQuery {
       names.foreach { name =>
         val fn = graft.SparkEntry.queries(name)
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (hash, dt) = Receipts.secs(Receipts.resultHash(fn(spark, sfDir)))
         best(name) = best.get(name).fold(dt)(_ min dt)
-        println(f"[time] $name pass $p: $dt%.2f s ($n rows)")
+        println(f"[time] $name pass $p: $dt%.2f s (hash $hash)")
       }
     }
     names.foreach(n => println(f"[time] BEST $n: ${best(n)}%.2f s"))

@@ -8,16 +8,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * benchmark measures is the one the oracle checks. */
 class SessionSpec extends AnyFunSuite {
 
+  private val root = new java.io.File("src/main/scala")
+  private def walk(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    else Seq(f).filter(_.getName.endsWith(".scala"))
+  private lazy val files = {
+    assert(root.isDirectory, s"run from the project root: $root")
+    walk(root).map(f => f -> Files.readString(f.toPath))
+  }
+  private def code(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
   test("source scan: SparkSession.builder only in Session.scala, and no " +
        "re-layout, warmup or DuckDB-hint switch under src/main/scala") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f).filter(_.getName.endsWith(".scala"))
-    val files = walk(root).map(f => f -> Files.readString(f.toPath))
-    def code(src: String): String =
-      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
     val builders = files.collect {
       case (f, src) if code(src).contains("SparkSession.builder") &&
         !f.getPath.endsWith("graft/Session.scala") => f
@@ -32,5 +35,15 @@ class SessionSpec extends AnyFunSuite {
       if src.contains(k)
     } yield s"$f: $k"
     assert(switched.isEmpty, "removed bench switches: " + switched.mkString(", "))
+  }
+
+  test("source scan: addSparkListener only in the receipts main under " +
+       "src/main/scala") {
+    val listeners = files.collect {
+      case (f, src) if code(src).contains("addSparkListener") &&
+        !f.getPath.endsWith("graft/tools/Receipts.scala") => f
+    }
+    assert(listeners.isEmpty, "count jobs with the receipts' one job " +
+      "counter: " + listeners.mkString(", "))
   }
 }
