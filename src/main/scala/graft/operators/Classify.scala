@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.delta.Delta
 import graft.state.Published
 import graft.syntax._
 
@@ -297,12 +298,11 @@ object Classify {
 
   /** Published stored model state per corpus dir: prev train-slice
     * metadata (doc_id, lang), the prev train tf WITH its class label,
-    * and the prev count tables. The all-docs tf + diff come from
+    * and the prev count tables. The all-docs tf comes from
     * [[Corpus.tfState]] — one stored-state home per corpus. */
   private def nbStateFor(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame,
-         DataFrame) = {
-    val (prevTf, _, _, diff) = Corpus.tfState(spark, dir)
+      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (prevTf, _, _) = Corpus.tfState(spark, dir)
     val (meta, trainTf, wc, cdoc) = Published(spark, "classify.nbState",
         dir, Published.inventory(dir, "documents")) {
       val meta = trainSlice(
@@ -323,7 +323,7 @@ object Classify {
         .agg(count(lit(1)).as("n_docs_c")).localCheckpoint(true)
       (meta, trainTf, wc, cdoc)
     }
-    (prevTf, meta, trainTf, wc, cdoc, diff)
+    (prevTf, meta, trainTf, wc, cdoc)
   }
 
   /** Published MAINTAINED state per corpus dir: the delta-merged tf
@@ -340,18 +340,19 @@ object Classify {
     val curDocs = Corpus.snapshotCur(Tables.documents(spark, dir))
     val (newTf, model) = Published(spark, "classify.nbMaintained", dir,
         Published.inventory(dir, "documents")) {
-      val (prevTf, meta, trainTf, wc, cdoc, diff) = nbStateFor(spark, dir)
-      maintainedNbState(prevTf, meta, trainTf, wc, cdoc, curDocs, diff)
+      val (prevTf, meta, trainTf, wc, cdoc) = nbStateFor(spark, dir)
+      maintainedNbState(prevTf, meta, trainTf, wc, cdoc, curDocs,
+        Delta.documents(spark, dir))
     }
     nbScore(curDocs, newTf, model)
   }
 
   /** The general operator; all `prev*` frames are the previous
-    * snapshot's stored state, `curDocs` the new snapshot, `diff` a
-    * q84-shaped status frame. */
+    * snapshot's stored state, `curDocs` the new snapshot, `diff` the
+    * snapshot delta. */
   def incrementalNbClassifyOf(prevTf: DataFrame, prevTrainMeta: DataFrame,
       prevTrainTf: DataFrame, prevWc: DataFrame, prevCdoc: DataFrame,
-      curDocs: DataFrame, diff: DataFrame): DataFrame = {
+      curDocs: DataFrame, diff: Delta): DataFrame = {
     val (newTf, model) = maintainedNbState(prevTf, prevTrainMeta,
       prevTrainTf, prevWc, prevCdoc, curDocs, diff)
     nbScore(curDocs, newTf, model)
@@ -366,46 +367,30 @@ object Classify {
     * instead of re-running the anti-join ∪ fresh merge. */
   private[graft] def maintainedNbState(prevTf: DataFrame,
       prevTrainMeta: DataFrame, prevTrainTf: DataFrame, prevWc: DataFrame,
-      prevCdoc: DataFrame, curDocs: DataFrame, diff: DataFrame)
+      prevCdoc: DataFrame, curDocs: DataFrame, diff: Delta)
       : (DataFrame, NbModel) = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
     // the ONLY text processing: tf of the fresh slice (two consumers
     // — the tf union and the gained-side model delta)
-    val freshTf = docTf(curDocs.join(broadcast(toTokenize), Seq("doc_id")))
-      .localCheckpoint(false)
-    val newTf = prevTf.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(freshTf)
+    val freshTf = docTf(diff.slice(curDocs)).localCheckpoint(false)
+    val newTf = diff.carry(prevTf).unionByName(freshTf)
     // train-side deltas: fresh rows under the NEW label, lost rows
     // under the STORED (old) label
-    val freshTrainMeta = trainSlice(
-        curDocs.join(broadcast(toTokenize), Seq("doc_id")))
+    val freshTrainMeta = trainSlice(diff.slice(curDocs))
       .select($"doc_id", $"lang")
-    val gainedTf = freshTf.join(broadcast(freshTrainMeta), Seq("doc_id"))
-    val lostTf = prevTrainTf.join(broadcast(dirty), Seq("doc_id"))
-    // signed-delta merge as ONE union + partial-aggregated sum — the
-    // count tables are additive, so (stored +cnt) ∪ (gained +tf) ∪
-    // (lost −tf) collapsing under one groupBy is byte-equal to the
-    // old two-full_outer coalesce chain but pays a single vocab-sized
-    // exchange instead of three (the q114/q116 floor shave, VERDICT
-    // r10 item 2)
-    val newWc = prevWc.select($"lang", $"token", $"cnt")
-      .unionByName(gainedTf.select($"lang", $"token", $"tf".as("cnt")))
-      .unionByName(lostTf.select($"lang", $"token", (-$"tf").as("cnt")))
-      .groupBy($"lang", $"token").agg(sum($"cnt").as("cnt"))
-      .filter($"cnt" > 0)
+    def wc(tf: DataFrame) = tf.select($"lang", $"token", $"tf".as("cnt"))
+    // the count tables are additive: one signed merge, a single
+    // vocab-sized exchange (the q114/q116 floor shave)
+    val newWc = Delta.signed(prevWc.select($"lang", $"token", $"cnt"),
+        wc(diff.lost(prevTrainTf)),
+        wc(freshTf.join(broadcast(freshTrainMeta), Seq("doc_id"))))
       // LAZY: nbModelOf's single stats collect is the first,
       // strictly sequential action — it materializes this leaf (and
       // the upstream freshTf checkpoint) inside the one stats job,
       // so no scoring-plan broadcast can racing-clone the delta merge
       .localCheckpoint(false)
-    val newCdoc = prevCdoc.select($"lang", $"n_docs_c")
-      .unionByName(freshTrainMeta.select($"lang", lit(1L).as("n_docs_c")))
-      .unionByName(prevTrainMeta.join(broadcast(dirty), Seq("doc_id"))
-        .select($"lang", lit(-1L).as("n_docs_c")))
-      .groupBy($"lang").agg(sum($"n_docs_c").as("n_docs_c"))
-      .filter($"n_docs_c" > 0)
+    def cdoc(meta: DataFrame) = meta.select($"lang", lit(1L).as("n_docs_c"))
+    val newCdoc = Delta.signed(prevCdoc.select($"lang", $"n_docs_c"),
+      cdoc(diff.lost(prevTrainMeta)), cdoc(freshTrainMeta))
     (newTf.localCheckpoint(false), nbModelOf(newWc, newCdoc))
   }
 

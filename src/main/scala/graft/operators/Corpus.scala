@@ -1,11 +1,16 @@
 package graft.operators
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.delta.Delta
 import graft.state.Published
 import graft.syntax._
 
@@ -1006,23 +1011,21 @@ object Corpus {
   // rescore-everything-from-text.
   // ---------------------------------------------------------------
 
-  /** Stored prev-snapshot (bigram tf, bigram model) + diff, published
-    * per corpus dir (the tfState discipline). */
+  /** Stored prev-snapshot (bigram tf, bigram model), published per
+    * corpus dir (the tfState discipline). */
   private def bgState(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
+      : (DataFrame, DataFrame) =
     Published(spark, "corpus.bigramState", dir,
         Published.inventory(dir, "documents")) {
-      val docs = Tables.documents(spark, dir)
-      val bgTf = bigramTfFrom(snapshotPrev(docs)).localCheckpoint(true)
-      (bgTf,
-        bigramModelFromTf(bgTf).localCheckpoint(true),
-        snapshotDiffDerived(docs).localCheckpoint(true))
+      val bgTf = bigramTfFrom(snapshotPrev(Tables.documents(spark, dir)))
+        .localCheckpoint(true)
+      (bgTf, bigramModelFromTf(bgTf).localCheckpoint(true))
     }
 
   def incrementalBigramLogProb(spark: SparkSession, dir: String): DataFrame = {
-    val (prevBgTf, prevModel, diff) = bgState(spark, dir)
+    val (prevBgTf, prevModel) = bgState(spark, dir)
     incrementalBigramLogProbOf(prevBgTf, prevModel,
-      snapshotCur(Tables.documents(spark, dir)), diff)
+      snapshotCur(Tables.documents(spark, dir)), Delta.documents(spark, dir))
   }
 
   /** The general operator: `prevBgTf` / `prevModel` = the stored
@@ -1031,22 +1034,15 @@ object Corpus {
     * maintenance never touches the previous snapshot's text. */
   def incrementalBigramLogProbOf(prevBgTf: DataFrame, prevModel: DataFrame,
                                  curDocs: DataFrame,
-                                 diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
+                                 diff: Delta): DataFrame = {
     // the ONLY text processing in the maintenance pass (the q92
     // freshTf discipline: one barrier, several consumers)
-    val freshBg = bigramTfFrom(
-        curDocs.join(broadcast(toTokenize), Seq("doc_id")))
-      .localCheckpoint(false)
-    val newBg = prevBgTf.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(freshBg)
+    val freshBg = bigramTfFrom(diff.slice(curDocs)).localCheckpoint(false)
+    val newBg = diff.carry(prevBgTf).unionByName(freshBg)
     // scoreBigrams checkpoints the model itself (four readers) and
     // its stats collect materializes the freshBg checkpoint too
     val newModel = maintainedBigramModel(prevModel,
-      lost = prevBgTf.join(broadcast(dirty), Seq("doc_id")),
-      gained = freshBg)
+      lost = diff.lost(prevBgTf), gained = freshBg)
     scoreBigrams(newBg, newModel)
   }
 
@@ -1056,14 +1052,9 @@ object Corpus {
   private[graft] def maintainedBigramModel(prevModel: DataFrame,
                                            lost: DataFrame,
                                            gained: DataFrame): DataFrame =
-    // additive counts: one union + partial-aggregated sum instead of
-    // two chained full_outer coalesce joins — a single model-sized
-    // exchange (the q116 floor shave applied to the bigram model)
-    prevModel.select($"w1", $"w2", $"bcnt")
-      .unionByName(gained.select($"w1", $"w2", $"tf".as("bcnt")))
-      .unionByName(lost.select($"w1", $"w2", (-$"tf").as("bcnt")))
-      .groupBy($"w1", $"w2").agg(sum($"bcnt").as("bcnt"))
-      .filter($"bcnt" > 0)
+    Delta.signed(prevModel.select($"w1", $"w2", $"bcnt"),
+      lost.select($"w1", $"w2", $"tf".as("bcnt")),
+      gained.select($"w1", $"w2", $"tf".as("bcnt")))
 
   /** q109's oracle: the FULL q108 recompute over the new snapshot. */
   lazy val incrementalBigramLogProbSql: String = bigramLogProbSqlFrom(
@@ -1215,11 +1206,6 @@ object Corpus {
     // the rest idle. Concurrent actions on one SparkSession are the
     // standard fair-scheduler pattern; results are deterministic
     // because the stages share nothing but the immutable input.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    def thin(df: => DataFrame): Future[DataFrame] =
-      Future(df.localCheckpoint(true))
     val keepersF = thin {
       // r17: label-only CC — the keep never reads cluster_size, so
       // dedupClustersFrom's size window count + sort are dead work on
@@ -1251,7 +1237,8 @@ object Corpus {
     val splitsF = thin(splitAssignFrom(docs).select($"doc_id", $"split"))
     val chunkStatsF = thin(chunkDocsFrom(docs).groupBy($"doc_id")
       .agg(count(lit(1)).as("n_chunks"), sum($"n_tokens").as("n_tokens")))
-    def get(f: Future[DataFrame]): DataFrame = Await.result(f, Duration.Inf)
+    awaitAll(keepersF, repKeepF, lpKeepF, contaminatedF, sampledF, splitsF,
+      chunkStatsF)
     docs.select($"doc_id").filter($"doc_id" >= BenchmarkMaxDocId)
       .join(get(keepersF), Seq("doc_id"))
       .join(get(repKeepF), Seq("doc_id"))
@@ -1262,6 +1249,21 @@ object Corpus {
       .join(get(chunkStatsF), Seq("doc_id"))
       .select($"doc_id", $"source", $"split", $"n_chunks", $"n_tokens")
       .orderBy($"doc_id")
+  }
+
+  /** A concurrent stage: `df` eagerly checkpointed on its own
+    * thread. */
+  private def thin(df: => DataFrame): Future[DataFrame] =
+    Future(df.localCheckpoint(true))
+
+  private def get[A](f: Future[A]): A = Await.result(f, Duration.Inf)
+
+  /** Waits for EVERY future, then rethrows the first failure (in
+    * argument order): a failed stage never returns the call while its
+    * siblings still run jobs. */
+  private[graft] def awaitAll(fs: Future[Any]*): Unit = {
+    fs.foreach(f => Await.ready(f, Duration.Inf))
+    fs.foreach(get(_))
   }
 
   lazy val trainingCorpusSql: String = trainingCorpusSqlFrom("documents")
@@ -1992,28 +1994,28 @@ object Corpus {
       .select($"doc_id", md5($"text".cast(BinaryType)).as("cur_digest"))
 
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    snapshotDiffDerived(Tables.documents(spark, dir))
+    snapshotDiffDerived(Tables.documents(spark, dir)).orderBy($"doc_id")
 
   /** q84 over any documents-shaped frame (the receipts' entry). */
   private[graft] def snapshotDiffDerived(docs: DataFrame): DataFrame =
     snapshotDiffOf(snapshotPrevDigests(docs), snapshotCurDigests(docs))
 
-  /** The general operator: diff any two (doc_id, *_digest) snapshot
-    * frames. Presence is carried by explicit marker columns, NOT by
-    * digest nullness (a legitimately-NULL digest — null text under
-    * md5 — must not read as absence), and the digest compare is
-    * null-safe, mirroring the oracle's doc_id-presence + IS DISTINCT
-    * FROM formulation. */
-  def snapshotDiffOf(prev: DataFrame, cur: DataFrame): DataFrame =
+  /** The general operator: diff any two (`key`, *_digest) snapshot
+    * frames — the one builder of a status frame. Presence is carried
+    * by explicit marker columns, NOT by digest nullness (a
+    * legitimately-NULL digest — null text under md5 — must not read
+    * as absence), and the digest compare is null-safe, mirroring the
+    * oracle's doc_id-presence + IS DISTINCT FROM formulation
+    * ([[Delta.statusOf]]). Unsorted: a stored diff is only filtered
+    * and broadcast; q84's entry sorts for presentation. */
+  def snapshotDiffOf(prev: DataFrame, cur: DataFrame,
+                     key: String = "doc_id"): DataFrame =
     prev.withColumn("in_prev", lit(true))
-      .join(cur.withColumn("in_cur", lit(true)), Seq("doc_id"), "full_outer")
-      .select($"doc_id",
-        when($"in_prev".isNull, lit("added"))
-          .when($"in_cur".isNull, lit("removed"))
-          .when(!($"prev_digest" <=> $"cur_digest"), lit("changed"))
-          .otherwise(lit("unchanged")).as("status"),
+      .join(cur.withColumn("in_cur", lit(true)), Seq(key), "full_outer")
+      .select(col(key),
+        Delta.statusOf($"in_prev", $"in_cur", $"prev_digest", $"cur_digest")
+          .as("status"),
         $"prev_digest", $"cur_digest")
-      .orderBy($"doc_id")
 
   val snapshotDiffSql: String =
     s"""WITH prev AS (
@@ -2066,28 +2068,22 @@ object Corpus {
     val docs = Tables.documents(spark, dir)
     // see snapshotPrev's note on why prev-with-current-text is exact
     // for every row that survives the carry-forward
-    val (prevScores, diff) = Published(spark, "corpus.scores", dir,
+    val prevScores = Published(spark, "corpus.scores", dir,
         Published.inventory(dir, "documents")) {
-      (repetitionStatsFrom(snapshotPrev(docs)).localCheckpoint(true),
-        snapshotDiffDerived(docs).localCheckpoint(true))
+      repetitionStatsFrom(snapshotPrev(docs)).localCheckpoint(true)
     }
-    incrementalScoresOf(prevScores, snapshotCur(docs), diff)
+    incrementalScoresOf(prevScores, snapshotCur(docs),
+      Delta.documents(spark, dir))
   }
 
   /** The general operator: `prevScores` = the stored q73 output for
-    * the previous snapshot, `curDocs` = the new snapshot, `diff` = a
-    * q84-shaped status frame. */
+    * the previous snapshot, `curDocs` = the new snapshot, `diff` =
+    * the snapshot delta. */
   def incrementalScoresOf(prevScores: DataFrame, curDocs: DataFrame,
-                          diff: DataFrame): DataFrame = {
-    // dirty = anything whose stored row must not survive as-is
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toScore = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
-    val carried = prevScores.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-    val fresh = repetitionStatsFrom(
-      curDocs.join(broadcast(toScore), Seq("doc_id")))
-    carried.unionByName(fresh).orderBy($"doc_id")
-  }
+                          diff: Delta): DataFrame =
+    diff.carry(prevScores)
+      .unionByName(repetitionStatsFrom(diff.slice(curDocs)))
+      .orderBy($"doc_id")
 
   lazy val incrementalScoresSql: String = repetitionStatsSqlFrom(
     s"(SELECT * FROM documents WHERE doc_id % $SnapRemovedMod <> $SnapRemovedRes)")
@@ -2245,54 +2241,45 @@ object Corpus {
   // with zero text processing.
   // ---------------------------------------------------------------
 
-  /** Stored prev-snapshot (tf, vocab, CMS counters) + diff, published
-    * per corpus dir (the q88/q89/q91 discipline — production
-    * publishes these with the snapshot; maintenance LOADS them).
-    * Shared by q92 (tf + vocab) and q94 (vocab + counters): one
-    * stored-state home per corpus, not one per consumer. */
+  /** Stored prev-snapshot (tf, vocab, CMS counters), published per
+    * corpus dir (the q88/q89/q91 discipline — production publishes
+    * these with the snapshot; maintenance LOADS them). Shared by q92
+    * (tf + vocab) and q94 (vocab + counters): one stored-state home
+    * per corpus, not one per consumer. */
   private[graft] def tfState(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+      : (DataFrame, DataFrame, DataFrame) =
     Published(spark, "corpus.tf", dir, Published.inventory(dir, "documents")) {
-      val docs = Tables.documents(spark, dir)
-      val tf = tfFrom(snapshotPrev(docs)).localCheckpoint(true)
+      val tf = tfFrom(snapshotPrev(Tables.documents(spark, dir)))
+        .localCheckpoint(true)
       val vocab = vocabFromTf(tf).localCheckpoint(true)
-      (tf, vocab,
-        cmsCountersFrom(vocab).localCheckpoint(true),
-        snapshotDiffDerived(docs).localCheckpoint(true))
+      (tf, vocab, cmsCountersFrom(vocab).localCheckpoint(true))
     }
 
   def incrementalLogProb(spark: SparkSession, dir: String): DataFrame = {
-    val (prevTf, prevVocab, _, diff) = tfState(spark, dir)
+    val (prevTf, prevVocab, _) = tfState(spark, dir)
     incrementalLogProbOf(prevTf, prevVocab,
-      snapshotCur(Tables.documents(spark, dir)), diff)
+      snapshotCur(Tables.documents(spark, dir)), Delta.documents(spark, dir))
   }
 
   /** The general operator: `prevTf` / `prevVocab` = the stored term
     * frequencies and vocabulary of the previous snapshot, `curDocs` =
-    * the new snapshot, `diff` = a q84-shaped status frame. Note the
+    * the new snapshot, `diff` = the snapshot delta. Note the
     * lost-side delta reads the STORED tf rows of changed docs (their
     * old text's counts), never the old text itself — the maintenance
     * needs no access to the previous snapshot's documents. */
   def incrementalLogProbOf(prevTf: DataFrame, prevVocab: DataFrame,
-                           curDocs: DataFrame, diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
+                           curDocs: DataFrame, diff: Delta): DataFrame = {
     // The ONLY text processing in the whole maintenance pass — lazily
     // checkpointed because two consumers read it (the tf union and
     // the gained-side vocab delta) and the vocab is read twice again
     // inside scoreTf: without the barrier the tokenize subtree is
     // cloned into every consumer (measured: 3 Generate subtrees in
     // the plan; the q89 deltaFps discipline).
-    val freshTf = tfFrom(curDocs.join(broadcast(toTokenize), Seq("doc_id")))
-      .localCheckpoint(false)
-    val newTf = prevTf.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(freshTf)
+    val freshTf = tfFrom(diff.slice(curDocs)).localCheckpoint(false)
     val newVocab = maintainedVocab(prevVocab,
-      lost = prevTf.join(broadcast(dirty), Seq("doc_id")),
-      gained = freshTf)
+      lost = diff.lost(prevTf), gained = freshTf)
       .localCheckpoint(false) // scoreTf reads it twice (total + join)
-    scoreTf(newTf, newVocab)
+    scoreTf(diff.carry(prevTf).unionByName(freshTf), newVocab)
   }
 
   /** vocab' = vocab + Σ gained − Σ lost, dropping tokens whose count
@@ -2300,14 +2287,9 @@ object Corpus {
     * the vocabulary, exactly as a full recompute would drop it). */
   private[graft] def maintainedVocab(prevVocab: DataFrame, lost: DataFrame,
                                      gained: DataFrame): DataFrame =
-    // additive counts: one union + partial-aggregated sum instead of
-    // two chained full_outer coalesce joins — one vocab-sized
-    // exchange (the q116 floor shave)
-    prevVocab.select($"token", $"cnt")
-      .unionByName(gained.select($"token", $"tf".as("cnt")))
-      .unionByName(lost.select($"token", (-$"tf").as("cnt")))
-      .groupBy($"token").agg(sum($"cnt").as("cnt"))
-      .filter($"cnt" > 0)
+    Delta.signed(prevVocab.select($"token", $"cnt"),
+      lost.select($"token", $"tf".as("cnt")),
+      gained.select($"token", $"tf".as("cnt")))
 
   /** The drift verdict a carry-forward policy would gate on: how far
     * the maintained vocabulary moved from the stored one — changed
@@ -2359,42 +2341,28 @@ object Corpus {
   // ---------------------------------------------------------------
 
   def incrementalHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val (prevTf, prevVocab, prevCounters, diff) = tfState(spark, dir)
+    val (prevTf, prevVocab, prevCounters) = tfState(spark, dir)
     incrementalHeavyHittersOf(prevVocab, prevCounters, prevTf,
-      snapshotCur(Tables.documents(spark, dir)), diff)
+      snapshotCur(Tables.documents(spark, dir)), Delta.documents(spark, dir))
   }
 
   /** The general operator: stored vocabulary + stored CMS counters +
     * stored tf (for the lost-side deltas) against a new snapshot and
-    * its q84 diff. */
+    * its delta. */
   def incrementalHeavyHittersOf(prevVocab: DataFrame,
                                 prevCounters: DataFrame,
                                 prevTf: DataFrame, curDocs: DataFrame,
-                                diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
-    val freshTf = tfFrom(curDocs.join(broadcast(toTokenize), Seq("doc_id")))
+                                diff: Delta): DataFrame = {
+    val freshTf = tfFrom(diff.slice(curDocs))
       .localCheckpoint(false) // read by the vocab merge AND the deltas
-    val lost = prevTf.join(broadcast(dirty), Seq("doc_id"))
-      .localCheckpoint(false)
+    val lost = diff.lost(prevTf).localCheckpoint(false)
     val newVocab = maintainedVocab(prevVocab, lost = lost, gained = freshTf)
       .localCheckpoint(false) // read by topk, probe, and the total
-    // net per-token movement, then folded through the SAME bucket
-    // hash the stored counters were built with
-    val deltas = freshTf.groupBy($"token").agg(sum($"tf").as("d"))
-      .unionByName(lost.groupBy($"token").agg((-sum($"tf")).as("d")))
-      .groupBy($"token").agg(sum($"d").as("d"))
-      .filter($"d" =!= 0)
-    val deltaCells = deltas.select($"token", $"d", cmsRows.as("r"))
-      .select($"r", cmsBucket($"r", $"token").as("b"), $"d")
-      .groupBy($"r", $"b").agg(sum($"d").as("dc"))
-    val newCounters = prevCounters
-      .join(deltaCells, Seq("r", "b"), "full_outer")
-      .select($"r", $"b",
-        (coalesce($"c", lit(0L)) + coalesce($"dc", lit(0L)))
-          .cast(LongType).as("c"))
-      .filter($"c" > 0)
+    // each side folded through the SAME bucket hash the stored
+    // counters were built with, then one signed merge
+    def cells(tf: DataFrame) =
+      cmsCountersFrom(tf.select($"token", $"tf".as("cnt")))
+    val newCounters = Delta.signed(prevCounters, cells(lost), cells(freshTf))
     composeHeavyHittersTotal(newVocab.select($"token", $"cnt"),
       newCounters, newVocab.agg(sum($"cnt").cast(LongType).as("n")))
   }
@@ -2445,8 +2413,8 @@ object Corpus {
     * charged to maintenance), published per corpus dir alongside
     * [[tfState]]. */
   private def tfidfState(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val (prevTf, _, _, diff) = tfState(spark, dir)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val (prevTf, _, _) = tfState(spark, dir)
     val (prevDf, prevN) = Published(spark, "corpus.tfidf", dir,
         Published.inventory(dir, "documents")) {
       (prevTf.groupBy($"token")
@@ -2454,46 +2422,36 @@ object Corpus {
         snapshotPrev(Tables.documents(spark, dir))
           .agg(count(lit(1)).as("n_docs")).localCheckpoint(true))
     }
-    (prevTf, prevDf, prevN, diff)
+    (prevTf, prevDf, prevN)
   }
 
   def incrementalTfidf(spark: SparkSession, dir: String): DataFrame = {
-    val (prevTf, prevDf, prevN, diff) = tfidfState(spark, dir)
+    val (prevTf, prevDf, prevN) = tfidfState(spark, dir)
     incrementalTfidfOf(prevTf, prevDf, prevN,
-      snapshotCur(Tables.documents(spark, dir)), diff)
+      snapshotCur(Tables.documents(spark, dir)), Delta.documents(spark, dir))
   }
 
   /** The general operator: `prevTf`/`prevDf`/`prevN` = the previous
     * snapshot's stored term frequencies, per-token document
     * frequencies, and one-row corpus size; `curDocs` = the new
-    * snapshot; `diff` = a q84-shaped status frame. The lost-side df
-    * delta reads the STORED tf rows of dirty docs — maintenance
-    * needs no access to the previous snapshot's text. */
+    * snapshot; `diff` = the snapshot delta. The lost-side df delta
+    * reads the STORED tf rows of dirty docs — maintenance needs no
+    * access to the previous snapshot's text. */
   def incrementalTfidfOf(prevTf: DataFrame, prevDf: DataFrame,
                          prevN: DataFrame, curDocs: DataFrame,
-                         diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
+                         diff: Delta): DataFrame = {
     // the ONLY text processing in the maintenance pass (the q92
     // barrier discipline: two consumers — the tf union and the
     // gained-side df delta — must not clone the tokenize subtree)
-    val freshTf = tfFrom(curDocs.join(broadcast(toTokenize), Seq("doc_id")))
-      .localCheckpoint(false)
-    val newTf = prevTf.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(freshTf)
+    val freshTf = tfFrom(diff.slice(curDocs)).localCheckpoint(false)
+    val newTf = diff.carry(prevTf).unionByName(freshTf)
     // tf holds one row per (doc, token), so a +1/−1 per row is the
-    // per-token document-count delta on both sides; additive counts
-    // merge as one union + partial-aggregated sum (the q116 floor
-    // shave) instead of two chained full_outer joins
-    val newDf = prevDf.select($"token", $"df")
-      .unionByName(freshTf.select($"token", lit(1L).as("df")))
-      .unionByName(prevTf.join(broadcast(dirty), Seq("doc_id"))
-        .select($"token", lit(-1L).as("df")))
-      .groupBy($"token").agg(sum($"df").as("df"))
-      .filter($"df" > 0)
-    val dN = diff.agg(sum(when($"status" === "added", 1L)
-      .when($"status" === "removed", -1L).otherwise(0L)).as("dn"))
+    // per-token document-count delta on both sides
+    def docs(tf: DataFrame) = tf.select($"token", lit(1L).as("df"))
+    val newDf = Delta.signed(prevDf.select($"token", $"df"),
+      docs(diff.lost(prevTf)), docs(freshTf))
+    val dN = diff.status.agg(sum(when(Delta.added, 1L)
+      .when(Delta.removed, -1L).otherwise(0L)).as("dn"))
     val newN = prevN.crossJoin(broadcast(dN))
       .select(($"n_docs" + coalesce($"dn", lit(0L))).as("n_docs"))
     // q65's scoring arithmetic over the maintained tables; the df
@@ -2541,16 +2499,11 @@ object Corpus {
   val VocabRefitMassShare = 0.10
 
   def vocabDrift(spark: SparkSession, dir: String): DataFrame = {
-    val (prevTf, prevVocab, _, diff) = tfState(spark, dir)
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
-    val freshTf = tfFrom(snapshotCur(Tables.documents(spark, dir))
-      .join(broadcast(toTokenize), Seq("doc_id")))
+    val (prevTf, prevVocab, _) = tfState(spark, dir)
+    val diff = Delta.documents(spark, dir)
+    val freshTf = tfFrom(diff.slice(snapshotCur(Tables.documents(spark, dir))))
     vocabDriftVerdictOf(prevVocab,
-      maintainedVocab(prevVocab,
-        lost = prevTf.join(broadcast(dirty), Seq("doc_id")),
-        gained = freshTf))
+      maintainedVocab(prevVocab, lost = diff.lost(prevTf), gained = freshTf))
   }
 
   /** One verdict row over two (token, cnt) vocabularies. */
@@ -2644,48 +2597,40 @@ object Corpus {
     }
 
   def gatedLogProb(spark: SparkSession, dir: String): DataFrame = {
-    val (prevTf, prevVocab, _, diff) = tfState(spark, dir)
+    val (prevTf, prevVocab, _) = tfState(spark, dir)
     gatedLogProbOf(prevTf, prevVocab, storedLogProbScores(spark, dir),
-      snapshotCur(Tables.documents(spark, dir)), diff)
+      snapshotCur(Tables.documents(spark, dir)), Delta.documents(spark, dir))
   }
 
   def gatedLogProbOf(prevTf: DataFrame, prevVocab: DataFrame,
                      prevScores: DataFrame, curDocs: DataFrame,
-                     diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
-    val freshTf = tfFrom(curDocs.join(broadcast(toTokenize), Seq("doc_id")))
-      .localCheckpoint(false)
+                     diff: Delta): DataFrame = {
+    val freshTf = tfFrom(diff.slice(curDocs)).localCheckpoint(false)
     val newVocab = maintainedVocab(prevVocab,
-      lost = prevTf.join(broadcast(dirty), Seq("doc_id")),
-      gained = freshTf)
+      lost = diff.lost(prevTf), gained = freshTf)
       .localCheckpoint(false)
     gatedLogProbFromParts(prevTf, prevVocab, prevScores,
-      freshTf, dirty, newVocab)
+      freshTf, diff, newVocab)
   }
 
   /** The acting tail shared by batch q118 and the streaming q138
     * drain: gate verdict over (stored, maintained) vocabularies, then
     * the chosen branch. Single-homed so the nightly and ingest-time
-    * paths cannot fork — `freshTf`/`dirty` are the (accumulated)
-    * added+changed tf rows and dirty ids, `newVocab` the maintained
-    * current vocabulary (byte-equal to a fresh recompute by q92's
-    * proof, however it was accumulated). */
+    * paths cannot fork — `freshTf` is the (accumulated) added+changed
+    * tf rows, `diff` the (accumulated) delta, `newVocab` the
+    * maintained current vocabulary (byte-equal to a fresh recompute
+    * by q92's proof, however it was accumulated). */
   private[graft] def gatedLogProbFromParts(
       prevTf: DataFrame, prevVocab: DataFrame, prevScores: DataFrame,
-      freshTf: DataFrame, dirty: DataFrame,
+      freshTf: DataFrame, diff: Delta,
       newVocab: DataFrame): DataFrame = {
     val verdict = vocabDriftVerdictOf(prevVocab, newVocab)
       .select($"verdict").head().getString(0)
     val out =
-      if (verdict == "rescore") {
-        val newTf = prevTf.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-          .unionByName(freshTf)
-        scoreTf(newTf, newVocab)
-      } else
-        prevScores.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-          .unionByName(scoreTf(freshTf, newVocab))
+      if (verdict == "rescore")
+        scoreTf(diff.carry(prevTf).unionByName(freshTf), newVocab)
+      else
+        diff.carry(prevScores).unionByName(scoreTf(freshTf, newVocab))
     out.withColumn("maintenance_path", lit(verdict)).orderBy($"doc_id")
   }
 
@@ -2813,9 +2758,9 @@ object Corpus {
       sum($"n_chars").cast(LongType).as("chars_cur"))
     val s = diff.join(attribution, Seq("doc_id"))
       .groupBy($"source").agg(
-        sum(when($"status" === "added", 1L).otherwise(0L)).as("n_added"),
-        sum(when($"status" === "removed", 1L).otherwise(0L)).as("n_removed"),
-        sum(when($"status" === "changed", 1L).otherwise(0L)).as("n_changed"))
+        sum(when(Delta.added, 1L).otherwise(0L)).as("n_added"),
+        sum(when(Delta.removed, 1L).otherwise(0L)).as("n_removed"),
+        sum(when(Delta.changed, 1L).otherwise(0L)).as("n_changed"))
     p.join(c, Seq("source"), "full_outer")
       .join(s, Seq("source"), "full_outer")
       .select($"source",
@@ -3037,17 +2982,14 @@ object Corpus {
   /** Stored prev-snapshot decontamination state, published per corpus
     * dir (the Dedup stored-index discipline): corpus fp table, per-doc
     * (shared, total) counts — zeros INCLUDED so every corpus doc
-    * carries — the bench fp set, and the diff. */
+    * carries — and the bench fp set. */
   def incrementalDecontam(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val (prevFps, prevCounts, prevBench, diff) = Published(spark,
-        "corpus.decontam", dir, Published.inventory(dir, "documents")) {
-      val (corpus, counts, bench) = decontamStateFrom(snapshotPrev(docs))
-      (corpus, counts, bench,
-        snapshotDiffDerived(docs).localCheckpoint(true))
-    }
+    val (prevFps, prevCounts, prevBench) = Published(spark,
+        "corpus.decontam", dir, Published.inventory(dir, "documents"))(
+      decontamStateFrom(snapshotPrev(docs)))
     incrementalDecontamOf(prevFps, prevCounts, prevBench,
-      snapshotCur(docs), diff)
+      snapshotCur(docs), Delta.documents(spark, dir))
   }
 
   /** The stored tables a snapshot publish writes: corpus fp table,
@@ -3073,14 +3015,11 @@ object Corpus {
 
   /** The general operator: `prevFps` = stored corpus (doc_id, fp),
     * `prevCounts` = stored per-doc (shared, total) with zeros,
-    * `prevBench` = stored bench fp set, against a q84-shaped diff. */
+    * `prevBench` = stored bench fp set, against the snapshot delta. */
   def incrementalDecontamOf(prevFps: DataFrame, prevCounts: DataFrame,
                             prevBench: DataFrame, curDocs: DataFrame,
-                            diff: DataFrame): DataFrame = {
-    val dirtyOut = diff.filter($"status".isin("removed", "changed"))
-      .select($"doc_id").localCheckpoint(true)
-    val deltaIds = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id").localCheckpoint(true)
+                            delta: Delta): DataFrame = {
+    val diff = delta.map(_.localCheckpoint(true))
     // bench side: recomputed outright (eval-suite-sized)
     val benchCur = decontamFps(
       curDocs.filter($"doc_id" < BenchmarkMaxDocId))
@@ -3091,11 +3030,10 @@ object Corpus {
         .withColumn("sign", lit(-1L)))
       .localCheckpoint(true)
     // clean docs: stored counts, shared adjusted by the bench delta
-    val dShared = prevFps.join(broadcast(dirtyOut), Seq("doc_id"), "left_anti")
+    val dShared = diff.carry(prevFps)
       .join(broadcast(benchDelta), Seq("fp"))
       .groupBy($"doc_id").agg(sum($"sign").as("d_shared"))
-    val carried = prevCounts
-      .join(broadcast(dirtyOut), Seq("doc_id"), "left_anti")
+    val carried = diff.carry(prevCounts)
       .join(broadcast(dShared), Seq("doc_id"), "left")
       .select($"doc_id",
         ($"shared_ngrams" + coalesce($"d_shared", lit(0L)))
@@ -3103,8 +3041,7 @@ object Corpus {
         $"total_ngrams")
     // dirty docs: re-shingle the slice, score against the cur bench
     val freshFps = decontamFps(
-      curDocs.join(broadcast(deltaIds), Seq("doc_id"))
-        .filter($"doc_id" >= BenchmarkMaxDocId))
+      diff.slice(curDocs).filter($"doc_id" >= BenchmarkMaxDocId))
       .localCheckpoint(true)
     val fresh = freshFps.groupBy($"doc_id")
       .agg(count(lit(1)).as("total_ngrams"))
@@ -3151,21 +3088,17 @@ object Corpus {
       .agg(count(lit(1)).as("n_chunks"), sum($"n_tokens").as("n_tokens"))
 
   /** Maintained chunk stats over the published prev-snapshot per-doc
-    * chunk aggregate + diff (q88's carry discipline for the doc-local
-    * chunk stats). */
+    * chunk aggregate (q88's carry discipline for the doc-local chunk
+    * stats). */
   def incrementalChunkStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val (prevChunk, diff) = Published(spark, "corpus.chunks", dir,
+    val prevChunk = Published(spark, "corpus.chunks", dir,
         Published.inventory(dir, "documents")) {
-      (chunkAggFrom(snapshotPrev(docs)).localCheckpoint(true),
-        snapshotDiffDerived(docs).localCheckpoint(true))
+      chunkAggFrom(snapshotPrev(docs)).localCheckpoint(true)
     }
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val fresh = chunkAggFrom(snapshotCur(docs).join(
-      broadcast(diff.filter($"status".isin("added", "changed"))
-        .select($"doc_id")), Seq("doc_id")))
-    prevChunk.join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(fresh)
+    val diff = Delta.documents(spark, dir)
+    diff.carry(prevChunk)
+      .unionByName(chunkAggFrom(diff.slice(snapshotCur(docs))))
   }
 
   /** PUBLISHED stage-verdict tables of the CURRENT snapshot — what
@@ -3184,38 +3117,28 @@ object Corpus {
     * ids, chunk stats). */
   private def publishCorpusVerdicts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val keepIdsF = Future(
-      Dedup.publishedKeepCorpus(spark, dir).select($"doc_id")
-        .localCheckpoint(true))
-    val repKeepF = Future(incrementalScores(spark, dir)
-      .filter($"keep").select($"doc_id").localCheckpoint(true))
-    val lpKeepF = Future(incrementalLogProb(spark, dir)
-      .filter($"keep").select($"doc_id").localCheckpoint(true))
-    val contaminatedF = Future(incrementalDecontam(spark, dir)
-      .filter($"contamination" >= DecontamMaxRate).select($"doc_id")
-      .localCheckpoint(true))
-    val chunkStatsF = Future(
-      incrementalChunkStats(spark, dir).localCheckpoint(true))
-    def get(f: Future[DataFrame]) = Await.result(f, Duration.Inf)
+    val keepIdsF = thin(
+      Dedup.publishedKeepCorpus(spark, dir).select($"doc_id"))
+    val repKeepF = thin(incrementalScores(spark, dir)
+      .filter($"keep").select($"doc_id"))
+    val lpKeepF = thin(incrementalLogProb(spark, dir)
+      .filter($"keep").select($"doc_id"))
+    val contaminatedF = thin(incrementalDecontam(spark, dir)
+      .filter($"contamination" >= DecontamMaxRate).select($"doc_id"))
+    val chunkStatsF = thin(incrementalChunkStats(spark, dir))
+    awaitAll(keepIdsF, repKeepF, lpKeepF, contaminatedF, chunkStatsF)
     (get(keepIdsF), get(repKeepF), get(lpKeepF), get(contaminatedF),
       get(chunkStatsF))
   }
 
   def incrementalTrainingCorpus(spark: SparkSession, dir: String)
       : DataFrame = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val cur = snapshotCur(Tables.documents(spark, dir))
     // Sampling/splits stay per-call: pure doc-local hashes over the
     // current snapshot with no stored state to read (q76's
-    // concurrent-stage discipline). They start first, so a cold call
-    // runs them alongside the five publish futures.
-    def thin(df: => DataFrame): Future[DataFrame] =
-      Future(df.localCheckpoint(true))
+    // concurrent-stage discipline). They run alongside the published
+    // verdicts, so a cold call overlaps them with the five publish
+    // futures.
     val sampledF = thin(mixtureSampleFrom(cur, MixtureRates,
       MixtureDefaultRate).filter($"sampled").select($"doc_id", $"source"))
     val splitsF = thin(splitAssignFrom(cur).select($"doc_id", $"split"))
@@ -3224,11 +3147,10 @@ object Corpus {
     // per-call cost was re-running each maintainer's rescore tail
     // (four ~0.5-1.1 s stage checkpoints per call) for verdicts the
     // nightly maintainers publish anyway.
-    val (keepIds, repKeep, lpKeep, contaminated, chunkStats) =
-      Published(spark, "corpus.verdicts", dir,
-        Published.inventory(dir, "documents"))(
-        publishCorpusVerdicts(spark, dir))
-    def get(f: Future[DataFrame]): DataFrame = Await.result(f, Duration.Inf)
+    val verdictsF = Future(Published(spark, "corpus.verdicts", dir,
+      Published.inventory(dir, "documents"))(publishCorpusVerdicts(spark, dir)))
+    awaitAll(sampledF, splitsF, verdictsF)
+    val (keepIds, repKeep, lpKeep, contaminated, chunkStats) = get(verdictsF)
     cur.select($"doc_id").filter($"doc_id" >= BenchmarkMaxDocId)
       .join(keepIds, Seq("doc_id"))
       .join(repKeep, Seq("doc_id"))

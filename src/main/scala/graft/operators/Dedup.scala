@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.delta.Delta
 import graft.state.Published
 import graft.syntax._
 
@@ -742,32 +743,24 @@ object Dedup {
     * (a corpus-cached scan feeding two joins), `flips` (three
     * consumers), `flipDocs` (a corpus-cached scan feeding both dirty
     * sets), and `keptCur` (the corpus-scale kept relation every tail
-    * consumer streams). Trivial filters over stored tables
-    * (`dirtyOut`/`deltaIds`) carry no checkpoint at all — each
-    * broadcast build re-reads the stored diff, which is cheaper than
-    * a barrier. */
-  private case class PrefixMaintFront(keptCur: DataFrame,
-                                      dirtyCur: DataFrame,
-                                      dirtyPrev: DataFrame)
+    * consumer streams). The delta's id sets (trivial filters over the
+    * stored diff) carry no checkpoint at all — each broadcast build
+    * re-reads the stored diff, which is cheaper than a barrier.
+    * `dirty` is the delta widened by the flip-affected docs. */
+  private case class PrefixMaintFront(keptCur: DataFrame, dirty: Delta)
 
   private def prefixMaintFront(prevFps: DataFrame, curDocs: DataFrame,
-                               diff: DataFrame, maxDocFreq: Int,
+                               diff: Delta, maxDocFreq: Int,
                                storedDf: Option[DataFrame])
       : PrefixMaintFront = {
-    val dirtyOut = diff.filter($"status".isin("removed", "changed"))
-      .select($"doc_id")
-    val deltaIds = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
     // sign only the delta (the q89 discipline)
-    val deltaFps = shingleFpsFrom(
-      curDocs.join(broadcast(deltaIds), Seq("doc_id")))
-      .localCheckpoint(false)
+    val deltaFps = shingleFpsFrom(diff.slice(curDocs)).localCheckpoint(false)
     // exact df maintenance on the touched slice: df changes only for
     // fps occurring in outgoing or incoming docs. ONE tagged-union
     // aggregate — fps absent from one side sum to 0 — replaces the
     // r15 dec-agg + inc-agg + full_outer shape (two shuffles and a
     // join level on the construction critical path)
-    val touched = prevFps.join(broadcast(dirtyOut), Seq("doc_id"))
+    val touched = diff.lost(prevFps)
         .select($"fp", lit(1L).as("dec"), lit(0L).as("inc"))
       .unionByName(
         deltaFps.select($"fp", lit(0L).as("dec"), lit(1L).as("inc")))
@@ -790,8 +783,7 @@ object Dedup {
       .select($"fp")
       .localCheckpoint(false) // tiny (empty on every fixture)
     // the new snapshot's raw fps and its hot set (stored hot XOR flips)
-    val curFps = prevFps.join(broadcast(dirtyOut), Seq("doc_id"), "left_anti")
-      .unionByName(deltaFps)
+    val curFps = diff.carry(prevFps).unionByName(deltaFps)
     val hotPrev = prevDf.filter($"df" > maxDocFreq).select($"fp")
     val hotCur = hotPrev.join(broadcast(flips), Seq("fp"), "left_anti")
       .unionByName(flips.join(hotPrev, Seq("fp"), "left_anti"))
@@ -804,27 +796,13 @@ object Dedup {
     val flipDocs = curFps.join(broadcast(flips), Seq("fp"), "left_semi")
       .select($"doc_id")
       .localCheckpoint(false) // corpus-cached scan; both dirty sets
-    // lazy-checkpointed: each is consumed by 2+ broadcast builds, and
-    // an uncheckpointed distinct() re-pays a two-stage shuffle job per
-    // build; concurrent builds dedupe via the block manager's
+    // lazy-checkpointed: each set is consumed by 2+ broadcast builds,
+    // and an uncheckpointed distinct() re-pays a two-stage shuffle job
+    // per build; concurrent builds dedupe via the block manager's
     // per-partition lock, so no eager barrier is needed
-    val dirtyCur = deltaIds.unionByName(flipDocs).distinct()
-      .localCheckpoint(false)
-    val dirtyPrev = dirtyOut.unionByName(flipDocs).distinct()
-      .localCheckpoint(false)
-    PrefixMaintFront(keptCur, dirtyCur, dirtyPrev)
+    PrefixMaintFront(keptCur,
+      diff.map(_.unionByName(flipDocs).distinct().localCheckpoint(false)))
   }
-
-  /** Carried verdicts: stored pairs with both endpoints clean keep
-    * their stored values byte-identically (each clean endpoint's
-    * kept-fp set is unchanged, hence i/na/nb are). */
-  private def prefixCarry(prevPass: DataFrame, dirtyPrev: DataFrame)
-      : DataFrame =
-    prevPass
-      .join(broadcast(dirtyPrev.withColumnRenamed("doc_id", "doc_a")),
-        Seq("doc_a"), "left_anti")
-      .join(broadcast(dirtyPrev.withColumnRenamed("doc_id", "doc_b")),
-        Seq("doc_b"), "left_anti")
 
   /** Fresh pairs of the dirty slice with their EXACT overlap stats:
     * (doc_a, doc_b, i, na, nb) for every new-snapshot pair touching a
@@ -850,7 +828,7 @@ object Dedup {
     * broadcast join; zero corpus-scale exchange. */
   private def maintFreshPairs(front: PrefixMaintFront,
                               prevSz: DataFrame): DataFrame = {
-    val dirtyKept = front.keptCur.join(broadcast(front.dirtyCur),
+    val dirtyKept = front.keptCur.join(broadcast(front.dirty.fresh),
         Seq("doc_id"), "left_semi")
       .localCheckpoint(false) // probe + dirty re-count share it
     val probe = dirtyKept.select($"doc_id".as("doc_p"), $"fp")
@@ -879,8 +857,7 @@ object Dedup {
     // the kept relation, which hung two more ~300 ms corpus-cached
     // scans and two dependency levels off `inter` — stored sizes are
     // a thin 1-row-per-doc stream with no `inter` dependency at all.
-    val szCur = prevSz
-      .join(broadcast(front.dirtyPrev), Seq("doc_id"), "left_anti")
+    val szCur = front.dirty.carry(prevSz)
       .unionByName(
         dirtyKept.groupBy($"doc_id").agg(count(lit(1)).as("n")))
       // two consumers (withNa build, final join) but they linearize —
@@ -914,7 +891,7 @@ object Dedup {
     * (doc_a, doc_b, jaccard). Emits the full q130 shape for the new
     * snapshot. */
   def incrementalPrefixJaccardOf(prevFps: DataFrame, prevPass: DataFrame,
-                                 curDocs: DataFrame, diff: DataFrame,
+                                 curDocs: DataFrame, diff: Delta,
                                  threshold: Double = PrefixJaccardThreshold,
                                  maxDocFreq: Int = MaxShingleDocFreq,
                                  storedDf: Option[DataFrame] = None,
@@ -932,14 +909,14 @@ object Dedup {
     * (the public wrapper's visible plan is Sort-over-ExistingRDD). */
   private[graft] def incrementalPrefixJaccardPlan(
       prevFps: DataFrame, prevPass: DataFrame,
-      curDocs: DataFrame, diff: DataFrame,
+      curDocs: DataFrame, diff: Delta,
       threshold: Double = PrefixJaccardThreshold,
       maxDocFreq: Int = MaxShingleDocFreq,
       storedDf: Option[DataFrame] = None,
       storedSz: Option[DataFrame] = None): DataFrame = {
     val front = prefixMaintFront(prevFps, curDocs, diff, maxDocFreq,
       storedDf)
-    val carried = prefixCarry(prevPass, front.dirtyPrev)
+    val carried = front.dirty.carryPairs(prevPass)
     val fresh = maintFreshPairs(front,
         prevSzOf(prevFps, maxDocFreq, storedSz))
       .select($"doc_a", $"doc_b",
@@ -1000,7 +977,7 @@ object Dedup {
     * q131 shape for the new snapshot. */
   def incrementalPrefixContainmentOf(
       prevFps: DataFrame, prevPass: DataFrame,
-      curDocs: DataFrame, diff: DataFrame,
+      curDocs: DataFrame, diff: Delta,
       threshold: Double = ContainmentThreshold,
       maxDocFreq: Int = MaxShingleDocFreq,
       storedDf: Option[DataFrame] = None,
@@ -1014,14 +991,14 @@ object Dedup {
     * [[incrementalPrefixJaccardPlan]]). */
   private[graft] def incrementalPrefixContainmentPlan(
       prevFps: DataFrame, prevPass: DataFrame,
-      curDocs: DataFrame, diff: DataFrame,
+      curDocs: DataFrame, diff: Delta,
       threshold: Double = ContainmentThreshold,
       maxDocFreq: Int = MaxShingleDocFreq,
       storedDf: Option[DataFrame] = None,
       storedSz: Option[DataFrame] = None): DataFrame = {
     val front = prefixMaintFront(prevFps, curDocs, diff, maxDocFreq,
       storedDf)
-    val carried = prefixCarry(prevPass, front.dirtyPrev)
+    val carried = front.dirty.carryPairs(prevPass)
     val fresh = maintFreshPairs(front,
         prevSzOf(prevFps, maxDocFreq, storedSz))
       .select($"doc_a", $"doc_b",
@@ -1750,10 +1727,9 @@ object Dedup {
     * them never pays them — only q107 pays the containment
     * derivation, only the first of q104/q107/q111 pays the one
     * machinery run both published tails share. */
-  private[operators] final class StoredIndex(docs: DataFrame) {
+  private[operators] final class StoredIndex(docs: DataFrame,
+                                             val diff: Delta) {
     val (fps, bands, cand, verified) = indexState(Corpus.snapshotPrev(docs))
-    /** q84's published diff table — stored state the crawl job lands. */
-    val diff: DataFrame = Corpus.snapshotDiffDerived(docs).localCheckpoint(true)
     val cur: DataFrame = Corpus.snapshotCur(docs)
     /** The stored CONTAINMENT verdicts (q107's fifth table): the q90
       * output over the stored candidates, values included — published
@@ -1872,13 +1848,13 @@ object Dedup {
     * q50/q54 codebook discipline applied to the dedup index:
     * production builds the index once per snapshot publish and every
     * maintenance run LOADS it, so the named query's steady-state cost
-    * is the maintenance, not the build. The diff is stored state too:
-    * q84's job publishes it when the crawl lands, and every
-    * maintenance consumer reads that table. */
+    * is the maintenance, not the build. The diff is the published
+    * document delta ([[Delta.documents]]) every maintainer reads. */
   private[operators] def storedIndexFor(spark: SparkSession, dir: String,
       docs: DataFrame): StoredIndex =
     Published(spark, "dedup.index", dir,
-      Published.inventory(dir, "documents"))(new StoredIndex(docs))
+      Published.inventory(dir, "documents"))(
+      new StoredIndex(docs, Delta.documents(spark, dir)))
 
   // ---------------------------------------------------------------
   // q107 — incremental CONTAINMENT maintenance: the q90 output (subset
@@ -1920,7 +1896,7 @@ object Dedup {
   def incrementalContainmentOf(prevFps: DataFrame, prevBands: DataFrame,
                                prevCand: DataFrame, prevContain: DataFrame,
                                curDocs: DataFrame,
-                               diff: DataFrame): DataFrame = {
+                               diff: Delta): DataFrame = {
     val (carried, freshPairs, fpsNeeded) =
       maintainedCandidates(prevFps, prevBands, prevCand, curDocs, diff)
     containTail(carried, freshPairs, fpsNeeded, prevContain)
@@ -1947,13 +1923,13 @@ object Dedup {
       s" <> ${Corpus.SnapRemovedRes})")
 
   /** The general operator: maintain a stored index against `curDocs`
-    * given a q84-shaped `diff`, and materialize the kept corpus.
+    * given the snapshot delta `diff`, and materialize the kept corpus.
     * `prevVerified` = the stored verified pass-pairs of the prev
     * snapshot ([[indexState]]'s 4th table). */
   def incrementalKeepCorpusOf(prevFps: DataFrame, prevBands: DataFrame,
                               prevCand: DataFrame, prevVerified: DataFrame,
                               curDocs: DataFrame,
-                              diff: DataFrame): DataFrame =
+                              diff: Delta): DataFrame =
     // r17: label-only CC ([[clusterLabels]]) — the keep never reads
     // cluster_size, so [[dedupClustersFrom]]'s size window count and
     // presentation sort are dead work here (q137's shape).
@@ -1970,7 +1946,7 @@ object Dedup {
   private[graft] def maintainedVerifiedPairs(
       prevFps: DataFrame, prevBands: DataFrame,
       prevCand: DataFrame, prevVerified: DataFrame,
-      curDocs: DataFrame, diff: DataFrame): DataFrame = {
+      curDocs: DataFrame, diff: Delta): DataFrame = {
     val (carried, freshPairs, fpsNeeded) =
       maintainedCandidates(prevFps, prevBands, prevCand, curDocs, diff)
     verifiedPairsTail(carried, freshPairs, fpsNeeded, prevVerified)
@@ -2007,15 +1983,12 @@ object Dedup {
     * measure-specific; everything before it is measure-agnostic. */
   private def maintainedCandidates(
       prevFps: DataFrame, prevBands: DataFrame, prevCand: DataFrame,
-      curDocs: DataFrame, diff: DataFrame)
+      curDocs: DataFrame, delta: Delta)
       : (DataFrame, DataFrame, DataFrame) = {
     // the two id sets are broadcast six times below; checkpointing
     // them once makes every broadcast build read a materialized leaf
     // instead of re-filtering the diff in its own job
-    val dirtyOut = diff.filter($"status".isin("removed", "changed"))
-      .select($"doc_id").localCheckpoint(true)
-    val deltaIds = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id").localCheckpoint(true)
+    val diff = delta.map(_.localCheckpoint(true))
     // sign ONLY the delta — the incremental saving lives here. The
     // signing pass keeps its checkpoint: the fp set feeds both the
     // banding and the verification join, and re-running the shingle
@@ -2033,12 +2006,9 @@ object Dedup {
     // delta-sign/band-union chain from scratch (measured: the same
     // maintenance ran 3.4 s lazy vs 1.7 s eager at sf0.1, every extra
     // second pure recomputation under the broadcast jobs).
-    val deltaFps = shingleFpsFrom(
-      curDocs.join(broadcast(deltaIds), Seq("doc_id")))
-      .localCheckpoint(true)
+    val deltaFps = shingleFpsFrom(diff.slice(curDocs)).localCheckpoint(true)
     val deltaBands = lshBands(deltaFps)
-    val keptBands = prevBands.join(broadcast(dirtyOut),
-      Seq("doc_id"), "left_anti")
+    val keptBands = diff.carry(prevBands)
     // allBands stays checkpointed: it feeds the occupancy aggregate,
     // the affected-bucket filter AND a self-join — uncheckpointed, the
     // self-join alone recomputes the whole union twice (measured 2.6×
@@ -2055,7 +2025,7 @@ object Dedup {
     // itself. A diff dirtying most of the corpus breaks the premise
     // everywhere at once — that's the documented rebuild trigger, not
     // a maintenance input (and AQE would re-plan the join anyway).
-    val affected = prevBands.join(broadcast(dirtyOut), Seq("doc_id"))
+    val affected = diff.lost(prevBands)
       .select($"band_id", $"band_val")
       .union(deltaBands.select($"band_id", $"band_val"))
     val regenSrc = allBands
@@ -2066,11 +2036,7 @@ object Dedup {
       .filter($"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
     // carried pairs: clean endpoints, bucket healthy in the NEW index
-    val carried = prevCand
-      .join(broadcast(dirtyOut.withColumnRenamed("doc_id", "doc_a")),
-        Seq("doc_a"), "left_anti")
-      .join(broadcast(dirtyOut.withColumnRenamed("doc_id", "doc_b")),
-        Seq("doc_b"), "left_anti")
+    val carried = diff.carryPairs(prevCand)
       .join(broadcast(oversized), Seq("band_id", "band_val"), "left_anti")
       .select($"doc_a", $"doc_b")
       .distinct()
@@ -2089,8 +2055,7 @@ object Dedup {
     // affected slice, never the corpus
     val endpoints = freshPairs.select($"doc_a".as("doc_id"))
       .union(freshPairs.select($"doc_b".as("doc_id")))
-    val allFps = prevFps.join(broadcast(dirtyOut), Seq("doc_id"), "left_anti")
-      .unionByName(deltaFps)
+    val allFps = diff.carry(prevFps).unionByName(deltaFps)
     val fpsNeeded = allFps.join(broadcast(endpoints), Seq("doc_id"),
       "left_semi")
     (carried, freshPairs, fpsNeeded)
@@ -2696,50 +2661,42 @@ object Dedup {
   // ---------------------------------------------------------------
 
   /** Published stored span state per corpus dir: the prev snapshot's
-    * span table, its published q113 output, and the q84 diff. */
+    * span table and its published q113 output. */
   private def spanStateFor(spark: SparkSession, dir: String,
-      docs: DataFrame): (DataFrame, DataFrame, DataFrame) =
+      docs: DataFrame): (DataFrame, DataFrame) =
     Published(spark, "dedup.spans", dir,
         Published.inventory(dir, "documents")) {
       val prev = Corpus.snapshotPrev(docs)
       (spansOf(spanToksFrom(prev)).localCheckpoint(true),
-        spanDedupFrom(prev).localCheckpoint(true),
-        Corpus.snapshotDiffDerived(docs).localCheckpoint(true))
+        spanDedupFrom(prev).localCheckpoint(true))
     }
 
   def incrementalSpanDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val (prevSpans, prevOut, diff) = spanStateFor(spark, dir, docs)
+    val (prevSpans, prevOut) = spanStateFor(spark, dir, docs)
     incrementalSpanDedupOf(prevSpans, prevOut,
-      Corpus.snapshotCur(docs), diff)
+      Corpus.snapshotCur(docs), Delta.documents(spark, dir))
   }
 
   /** The general operator: `prevSpans`/`prevOut` = the previous
     * snapshot's stored (doc_id, start, fp) span table and published
-    * q113 output, `curDocs` = the new snapshot, `diff` = a q84-shaped
-    * status frame. Carried output rows are read verbatim from
+    * q113 output, `curDocs` = the new snapshot, `diff` = the snapshot
+    * delta. Carried output rows are read verbatim from
     * `prevOut` — maintenance never re-derives a clean, unaffected
     * document's text. */
   def incrementalSpanDedupOf(prevSpans: DataFrame, prevOut: DataFrame,
                              curDocs: DataFrame,
-                             diff: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"doc_id")
-    val toTokenize = diff.filter($"status".isin("added", "changed"))
-      .select($"doc_id")
+                             diff: Delta): DataFrame = {
     // the ONLY text processing in the maintenance pass (two
     // consumers: the span union and the affected-fp set)
-    val freshSpans = spansOf(spanToksFrom(
-        curDocs.join(broadcast(toTokenize), Seq("doc_id"))))
+    val freshSpans = spansOf(spanToksFrom(diff.slice(curDocs)))
       .localCheckpoint(false)
-    val newSpans = prevSpans
-      .join(broadcast(dirty), Seq("doc_id"), "left_anti")
-      .unionByName(freshSpans)
+    val newSpans = diff.carry(prevSpans).unionByName(freshSpans)
     // fps that lost (stored rows of dirty docs) or gained (fresh
     // rows) an occurrence — their counts/canonicals may have moved.
     // Single consumer (the candDocs semi-join): no checkpoint, it
     // computes inline inside candDocs' own materialization
-    val affectedFps = prevSpans.join(broadcast(dirty), Seq("doc_id"))
-      .select($"fp")
+    val affectedFps = diff.lost(prevSpans).select($"fp")
       .unionByName(freshSpans.select($"fp")).distinct()
     // docs whose coverage can change: holders of an affected fp,
     // plus the fresh slice itself (short fresh docs carry no spans
@@ -2747,7 +2704,7 @@ object Dedup {
     val candDocs = newSpans
       .join(broadcast(affectedFps), Seq("fp"), "left_semi")
       .select($"doc_id")
-      .unionByName(toTokenize).distinct()
+      .unionByName(diff.fresh).distinct()
       .localCheckpoint(false)
     // occurrence universe for the rebuild: EVERY occurrence of every
     // fp present in a candidate doc, so the per-fp aggregate sees
@@ -2764,7 +2721,7 @@ object Dedup {
       spanToksFrom(curDocs.join(broadcast(candDocs), Seq("doc_id"))),
       covSets)
     val carried = prevOut.join(
-      broadcast(dirty.unionByName(candDocs).distinct()),
+      broadcast(diff.stale.unionByName(candDocs).distinct()),
       Seq("doc_id"), "left_anti")
     // NO checkpoint ahead of this presentation sort, unlike the pair
     // family (q45/q85/q130/q131): an r17 A/B re-measured both shapes

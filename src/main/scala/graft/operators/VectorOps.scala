@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.delta.Delta
 import graft.state.Published
 import graft.syntax._
 
@@ -658,33 +659,29 @@ object VectorOps {
     concat_ws(",", expr("transform(v, x -> CAST(x AS STRING))"))
 
   /** The q84 diff over the two derived VECTOR snapshots —
-    * [[Corpus.snapshotDiffOf]] reused verbatim (it is keyed by a
-    * `doc_id` column; vec_id rides through under that name and is
-    * renamed back), so presence markers and null-safe digest compare
-    * semantics have one home. */
+    * [[Corpus.snapshotDiffOf]] keyed by vec_id, so presence markers
+    * and null-safe digest compare semantics have one home. */
   private[graft] def vecSnapshotDiff(all: DataFrame): DataFrame = {
-    val prev = vecSnapshotPrev(all).select($"vec_id".as("doc_id"),
+    val prev = vecSnapshotPrev(all).select($"vec_id",
       md5(when($"vec_id" % Corpus.SnapChangedMod === Corpus.SnapChangedRes,
             concat(vecContentStr, lit(":prev")))
           .otherwise(vecContentStr).cast(BinaryType)).as("prev_digest"))
-    val cur = vecSnapshotCur(all).select($"vec_id".as("doc_id"),
+    val cur = vecSnapshotCur(all).select($"vec_id",
       md5(vecContentStr.cast(BinaryType)).as("cur_digest"))
-    Corpus.snapshotDiffOf(prev, cur)
-      .select($"doc_id".as("vec_id"), $"status")
+    Corpus.snapshotDiffOf(prev, cur, "vec_id").select($"vec_id", $"status")
   }
 
   /** Stored vector-index state published per corpus dir (the
     * q88/q89/tfState discipline): production publishes the frozen
     * sample codebook, the q50 assignment table, the q69 N-probe
-    * assignment + verified pair tables, and the diff with the
-    * snapshot; every maintenance run LOADS them, so the named queries
-    * (q91, q95) measure maintenance, not the stored index's build.
-    * One home for all vector stored state, shared by both consumers.
-    * (sample codebook rows, prev q50 assignment, prev q69 N-probe
-    * assignment, prev verified pairs, diff). */
+    * assignment + verified pair tables with the snapshot; every
+    * maintenance run LOADS them (and the published vector delta), so
+    * the named queries (q91, q95) measure maintenance, not the stored
+    * index's build. One home for all vector stored state, shared by
+    * both consumers. (sample codebook rows, prev q50 assignment, prev
+    * q69 N-probe assignment, prev verified pairs). */
   private[graft] def vecIndexState(spark: SparkSession, dir: String)
-      : (Array[(Long, Seq[Double])], DataFrame, DataFrame, DataFrame,
-         DataFrame) =
+      : (Array[(Long, Seq[Double])], DataFrame, DataFrame, DataFrame) =
     Published(spark, "vector.index", dir,
         Published.inventory(dir, "embeddings")) {
       val all = vecs(spark, dir)
@@ -702,35 +699,27 @@ object VectorOps {
         assignCellsProbes(prev, cb, NearDupProbes)
           .select($"vec_id", $"cell_id").localCheckpoint(true),
         ivfNearDupPairsProbes(prev, cb, NearDupProbes)
-          .select($"vec_a", $"vec_b").localCheckpoint(true),
-        vecSnapshotDiff(all).localCheckpoint(true))
+          .select($"vec_a", $"vec_b").localCheckpoint(true))
     }
 
   def incrementalIvfAssign(spark: SparkSession, dir: String): DataFrame = {
-    val (cbRows, prevAssign, _, _, diff) = vecIndexState(spark, dir)
+    val (cbRows, prevAssign, _, _) = vecIndexState(spark, dir)
     val codebook = spark.createDataFrame(cbRows.toIndexedSeq)
       .toDF("centroid_id", "cv")
     incrementalIvfAssignOf(prevAssign, vecSnapshotCur(vecs(spark, dir)),
-      diff, codebook)
+      Delta.embeddings(spark, dir), codebook)
   }
 
   /** The general operator: `prevAssign` = the stored q50 output for
     * the previous snapshot, `curVecs` = the new snapshot as
-    * (vec_id, v, nrm), `diff` = a q84-shaped status frame keyed by
-    * vec_id, `codebook` = the frozen (centroid_id, cv) table. */
+    * (vec_id, v, nrm), `diff` = the vector delta, `codebook` = the
+    * frozen (centroid_id, cv) table. */
   def incrementalIvfAssignOf(prevAssign: DataFrame, curVecs: DataFrame,
-                             diff: DataFrame, codebook: DataFrame): DataFrame = {
-    // dirty = anything whose stored assignment must not survive as-is
-    val dirty = diff.filter($"status" =!= "unchanged").select($"vec_id")
-    val toAssign = diff.filter($"status".isin("added", "changed"))
-      .select($"vec_id")
-    val carried = prevAssign
-      .join(broadcast(dirty), Seq("vec_id"), "left_anti")
-    val fresh = assignCells(
-        curVecs.join(broadcast(toAssign), Seq("vec_id")), codebook)
-      .select($"vec_id", $"cell_id", $"dist2")
-    carried.unionByName(fresh).orderBy($"vec_id")
-  }
+                             diff: Delta, codebook: DataFrame): DataFrame =
+    diff.carry(prevAssign)
+      .unionByName(assignCells(diff.slice(curVecs), codebook)
+        .select($"vec_id", $"cell_id", $"dist2"))
+      .orderBy($"vec_id")
 
   /** The (vec_id, cell_id, dist2) assignment over any (vec_id, v,
     * nrm) frame against an explicit codebook — the receipts/spec
@@ -794,7 +783,7 @@ object VectorOps {
   val Dist2RefitDrift = 0.10
 
   def centroidDriftStats(spark: SparkSession, dir: String): DataFrame = {
-    val (cbRows, _, _, _, _) = vecIndexState(spark, dir)
+    val (cbRows, _, _, _) = vecIndexState(spark, dir)
     val all = vecs(spark, dir)
     val cur = vecSnapshotCur(all).localCheckpoint(false)
     val stored = spark.createDataFrame(cbRows.toIndexedSeq)
@@ -923,20 +912,20 @@ object VectorOps {
   // ---------------------------------------------------------------
 
   def gatedIvfMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val (cbRows, prevAssign, _, _, diff) = vecIndexState(spark, dir)
+    val (cbRows, prevAssign, _, _) = vecIndexState(spark, dir)
     val all = vecs(spark, dir)
     val cur = vecSnapshotCur(all).localCheckpoint(false)
     val stored = spark.createDataFrame(cbRows.toIndexedSeq)
       .toDF("centroid_id", "cv")
-    gatedIvfMaintenanceOf(prevAssign, cur, diff, stored,
-      fittedCentroids(cur).localCheckpoint(false))
+    gatedIvfMaintenanceOf(prevAssign, cur, Delta.embeddings(spark, dir),
+      stored, fittedCentroids(cur).localCheckpoint(false))
   }
 
   /** The general operator: the q105 gate over (`storedCb`, `freshCb`)
     * picks q91 maintenance (carry) or a full fresh-codebook
     * reassignment (refit) of `cur`. */
   def gatedIvfMaintenanceOf(prevAssign: DataFrame, cur: DataFrame,
-                            diff: DataFrame, storedCb: DataFrame,
+                            diff: Delta, storedCb: DataFrame,
                             freshCb: DataFrame): DataFrame = {
     val verdict = centroidDriftStatsOf(cur, storedCb, freshCb)
       .select($"verdict").head().getString(0)
@@ -1086,18 +1075,19 @@ object VectorOps {
   // ---------------------------------------------------------------
 
   def incrementalSemanticKeep(spark: SparkSession, dir: String): DataFrame = {
-    val (cbRows, _, prevAssignN, prevPairs, diff) = vecIndexState(spark, dir)
+    val (cbRows, _, prevAssignN, prevPairs) = vecIndexState(spark, dir)
     incrementalSemanticKeepOf(prevAssignN, prevPairs,
-      vecSnapshotCur(Tables.embeddings(spark, dir)), diff, cbRows)
+      vecSnapshotCur(Tables.embeddings(spark, dir)),
+      Delta.embeddings(spark, dir), cbRows)
   }
 
   /** The general operator: `prevAssignN` = the stored N-probe
     * (vec_id, cell_id) table, `prevPairs` = the stored verified
     * (vec_a, vec_b) set, `curEmb` = the new snapshot as an
-    * embeddings-shaped frame, `diff` = a q84-shaped status frame
-    * keyed by vec_id, `codebook` = the frozen sample codebook. */
+    * embeddings-shaped frame, `diff` = the vector delta, `codebook` =
+    * the frozen sample codebook. */
   def incrementalSemanticKeepOf(prevAssignN: DataFrame, prevPairs: DataFrame,
-                                curEmb: DataFrame, diff: DataFrame,
+                                curEmb: DataFrame, diff: Delta,
                                 codebook: Array[(Long, Seq[Double])])
       : DataFrame =
     semanticKeepCorpusFrom(curEmb,
@@ -1110,7 +1100,7 @@ object VectorOps {
     * plan. */
   private[graft] def incrementalSemanticPairs(
       prevAssignN: DataFrame, prevPairs: DataFrame, curVecsIn: DataFrame,
-      diff: DataFrame, codebook: Array[(Long, Seq[Double])]): DataFrame = {
+      delta: Delta, codebook: Array[(Long, Seq[Double])]): DataFrame = {
     val curVecs = curVecsIn.localCheckpoint(false)
     // id sets checkpoint once for their several broadcasts; the
     // maintenance barriers are EAGER (the q89 discipline: a broadcast
@@ -1120,23 +1110,17 @@ object VectorOps {
     // a cheap row-local pass, so the change is parity-of-shape rather
     // than a measured win — the cost model stays honest if the
     // codebook or probe count ever grows.
-    val dirtyOut = diff.filter($"status".isin("removed", "changed"))
-      .select($"vec_id").localCheckpoint(true)
-    val deltaIds = diff.filter($"status".isin("added", "changed"))
-      .select($"vec_id").localCheckpoint(true)
+    val diff = delta.map(_.localCheckpoint(true))
     // assign ONLY the delta — the incremental saving lives here
-    val deltaAssign = assignCellsProbes(
-        curVecs.join(broadcast(deltaIds), Seq("vec_id")),
+    val deltaAssign = assignCellsProbes(diff.slice(curVecs),
         codebook, NearDupProbes)
       .select($"vec_id", $"cell_id")
       .localCheckpoint(true) // read by the union AND the affected set
-    val keptAssign = prevAssignN
-      .join(broadcast(dirtyOut), Seq("vec_id"), "left_anti")
-    val allAssign = keptAssign.unionByName(deltaAssign)
+    val allAssign = diff.carry(prevAssignN).unionByName(deltaAssign)
       .localCheckpoint(true) // both sides of the regen self-join
     // affected cells: every cell a dirty vector left or a delta
     // vector entered — dirty-sized (≈ probes × |dirty|) by premise
-    val affected = prevAssignN.join(broadcast(dirtyOut), Seq("vec_id"))
+    val affected = diff.lost(prevAssignN)
       .select($"cell_id")
       .union(deltaAssign.select($"cell_id"))
     val regenSrc = allAssign
@@ -1156,11 +1140,7 @@ object VectorOps {
       .select($"vec_a", $"vec_b")
     // clean-endpoint pairs carry: cosine depends only on the two
     // vectors, both unchanged, so the stored verification stands
-    val carried = prevPairs
-      .join(broadcast(dirtyOut.withColumnRenamed("vec_id", "vec_a")),
-        Seq("vec_a"), "left_anti")
-      .join(broadcast(dirtyOut.withColumnRenamed("vec_id", "vec_b")),
-        Seq("vec_b"), "left_anti")
+    val carried = diff.carryPairs(prevPairs)
       .select($"vec_a", $"vec_b") // using-column joins reorder columns
     carried.union(verified).distinct()
   }
@@ -1753,10 +1733,10 @@ object VectorOps {
   // ---------------------------------------------------------------
 
   /** Stored PQ state published per corpus dir: sample-fit codebooks +
-    * the prev snapshot's code table + the diff (shared derivation
-    * with vecIndexState). */
+    * the prev snapshot's code table (shared derivation with
+    * vecIndexState). */
   private def pqIndexState(spark: SparkSession, dir: String)
-      : (Array[(Int, Long, Seq[Double])], DataFrame, DataFrame) =
+      : (Array[(Int, Long, Seq[Double])], DataFrame) =
     Published(spark, "vector.pqIndex", dir,
         Published.inventory(dir, "embeddings")) {
       val all = vecs(spark, dir)
@@ -1771,34 +1751,27 @@ object VectorOps {
       (books,
         pqAssign(subVecs(vecSnapshotPrev(all)), booksDf)
           .select($"vec_id", $"m", $"code", $"dist2")
-          .localCheckpoint(true),
-        vecSnapshotDiff(all).localCheckpoint(true))
+          .localCheckpoint(true))
     }
 
   def incrementalPqCodes(spark: SparkSession, dir: String): DataFrame = {
-    val (books, prevCodes, diff) = pqIndexState(spark, dir)
+    val (books, prevCodes) = pqIndexState(spark, dir)
     val booksDf = spark.createDataFrame(books.toIndexedSeq)
       .toDF("m", "centroid_id", "cv")
     incrementalPqCodesOf(prevCodes,
-      vecSnapshotCur(vecs(spark, dir)), diff, booksDf)
+      vecSnapshotCur(vecs(spark, dir)), Delta.embeddings(spark, dir), booksDf)
   }
 
   /** The general operator: `prevCodes` = the stored q125-shaped code
     * table of the previous snapshot, `curVecs` = the new snapshot as
-    * (vec_id, v, nrm), `diff` = a q84-shaped status frame keyed by
-    * vec_id, `books` = the frozen (m, centroid_id, cv) codebooks. */
+    * (vec_id, v, nrm), `diff` = the vector delta, `books` = the frozen
+    * (m, centroid_id, cv) codebooks. */
   def incrementalPqCodesOf(prevCodes: DataFrame, curVecs: DataFrame,
-                           diff: DataFrame, books: DataFrame): DataFrame = {
-    val dirty = diff.filter($"status" =!= "unchanged").select($"vec_id")
-    val toEncode = diff.filter($"status".isin("added", "changed"))
-      .select($"vec_id")
-    val carried = prevCodes
-      .join(broadcast(dirty), Seq("vec_id"), "left_anti")
-    val fresh = pqAssign(
-        subVecs(curVecs.join(broadcast(toEncode), Seq("vec_id"))), books)
-      .select($"vec_id", $"m", $"code", $"dist2")
-    carried.unionByName(fresh).orderBy($"vec_id", $"m")
-  }
+                           diff: Delta, books: DataFrame): DataFrame =
+    diff.carry(prevCodes)
+      .unionByName(pqAssign(subVecs(diff.slice(curVecs)), books)
+        .select($"vec_id", $"m", $"code", $"dist2"))
+      .orderBy($"vec_id", $"m")
 
   /** q125 oracle: the FULL PQ encode of the new snapshot against
     * codebooks fit on the stable sample — the same fit/encode split

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.delta.Delta
 import graft.syntax._
 
 /** The corpus-dedup operator family under Structured Streaming: exact
@@ -1126,15 +1127,13 @@ object StreamingCorpus {
     val batchIds = batch.select($"doc_id", $"status").localCheckpoint(false)
     // the ONLY text processing: the batch's added/changed slice. Lazy
     // checkpoint — the fold job and the freshtf append both read it.
-    val gained = Corpus.tfFrom(batch
-        .filter($"status".isin("added", "changed"))
+    val gained = Corpus.tfFrom(batch.filter(Delta.isFresh)
         .select($"doc_id", $"text"))
       .localCheckpoint(false)
-    // stored tf rows of the batch's dirtied docs (their OLD counts) —
+    // stored tf rows of the batch's stale docs (their OLD counts) —
     // batch-bounded ids broadcast into the stored table, never the
     // reverse, and never the previous snapshot's text
-    val lost = prevTf.join(broadcast(batchIds.select($"doc_id")),
-      Seq("doc_id"))
+    val lost = Delta(batchIds, "doc_id").lost(prevTf)
     // exact integer fold; two consumers (epoch write + verdict row)
     val newV = Corpus.maintainedVocab(baseV, lost = lost, gained = gained)
       .localCheckpoint(false)
@@ -1166,10 +1165,10 @@ object StreamingCorpus {
     val finalV = vocabAt(spark, root, vocabEpochs(root).max)
     val stored = vocabAt(spark, root, -1L)
     val freshTf = readLog(spark, s"$root/freshtf", tfLogSchema).distinct()
-    val dirty = readLog(spark, s"$root/dirty", dirtyLogSchema)
-      .select($"doc_id").distinct()
+    val diff = Delta(
+      readLog(spark, s"$root/dirty", dirtyLogSchema).distinct(), "doc_id")
     Corpus.gatedLogProbFromParts(prevTf, stored, prevScores,
-      freshTf, dirty, finalV)
+      freshTf, diff, finalV)
   }
 
   /** Drain a diff feed (doc_id, status, text-if-added/changed) through
@@ -1197,9 +1196,9 @@ object StreamingCorpus {
   def gatedLogProbViaStreaming(spark: SparkSession,
                                sfDir: String): DataFrame = {
     import graft.operators.Corpus
-    val (prevTf, prevVocab, _, diff) = Corpus.tfState(spark, sfDir)
+    val (prevTf, prevVocab, _) = Corpus.tfState(spark, sfDir)
     val cur = Corpus.snapshotCur(graft.Tables.documents(spark, sfDir))
-    val feed = diff.filter($"status" =!= "unchanged")
+    val feed = Delta.documents(spark, sfDir).status.filter(Delta.dirty)
       .join(cur.select($"doc_id", $"text"), Seq("doc_id"), "left")
       .select($"doc_id", $"status", $"text")
     driftGateStream(spark, Drain.stageRanged(feed, "doc_id", 4), prevTf,
@@ -1269,8 +1268,7 @@ object StreamingCorpus {
     val spark = batch.sparkSession
     val codebook = spark.createDataFrame(cbRows.toIndexedSeq)
       .toDF("centroid_id", "cv")
-    val arrivals = VectorOps.vecsFrom(batch
-      .filter($"status".isin("added", "changed"))
+    val arrivals = VectorOps.vecsFrom(batch.filter(Delta.isFresh)
       .select($"vec_id", $"embedding"))
     val assigned = VectorOps.assignCells(arrivals, broadcast(codebook))
       .select($"vec_id", $"v", $"nrm", $"cell_id", $"dist2")
@@ -1319,13 +1317,12 @@ object StreamingCorpus {
     import graft.operators.VectorOps
     val arrivals = readLog(spark, s"$root/arrivals", arrivalsLogSchema)
       .dropDuplicates("vec_id").localCheckpoint(false)
-    val dirty = readLog(spark, s"$root/dirty", vecDirtySchema)
-      .dropDuplicates("vec_id").localCheckpoint(false)
-    val cur = prevVecs
-      .join(broadcast(dirty.select($"vec_id")), Seq("vec_id"), "left_anti")
+    val diff = Delta(readLog(spark, s"$root/dirty", vecDirtySchema)
+      .dropDuplicates("vec_id").localCheckpoint(false), "vec_id")
+    val cur = diff.carry(prevVecs)
       .unionByName(arrivals.select($"vec_id", $"v", $"nrm"))
       .localCheckpoint(false)
-    VectorOps.gatedIvfMaintenanceOf(prevAssign, cur, dirty, storedCb,
+    VectorOps.gatedIvfMaintenanceOf(prevAssign, cur, diff, storedCb,
       VectorOps.fittedCentroids(cur).localCheckpoint(false))
   }
 
@@ -1352,13 +1349,12 @@ object StreamingCorpus {
   def gatedIvfViaStreaming(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.VectorOps
     val all = VectorOps.vecsFrom(graft.Tables.embeddings(spark, sfDir))
-    val (cbRows, prevAssign, _, _, _) = VectorOps.vecIndexState(spark, sfDir)
+    val (cbRows, prevAssign, _, _) = VectorOps.vecIndexState(spark, sfDir)
     val baseline = prevAssign
       .agg((sum($"dist2".cast(DecimalType(18, 6))).cast(DoubleType)
         / count(lit(1))).as("m"))
       .head().getDouble(0)
-    val feed = VectorOps.vecSnapshotDiff(all)
-      .filter($"status" =!= "unchanged")
+    val feed = Delta.embeddings(spark, sfDir).status.filter(Delta.dirty)
       .join(graft.Tables.embeddings(spark, sfDir)
         .select($"vec_id", $"embedding"), Seq("vec_id"), "left")
       .select($"vec_id", $"status", $"embedding")

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.delta.Delta
 import graft.operators.{Classify, Corpus, Dedup, Multimodal, TextOps,
   VectorOps, Weather}
 import graft.streaming.{StreamingClean, StreamingCorpus}
@@ -172,25 +173,24 @@ object Receipts {
   /** ~0.25% of vectors dirty: |dirty| × probes ≪ cells. */
   val LowDirtyVecs = Mods((1200L, 3L), (1240L, 7L), (1160L, 5L))
 
-  final case class Snapshot(prev: DataFrame, cur: DataFrame, diff: DataFrame,
+  final case class Snapshot(prev: DataFrame, cur: DataFrame, diff: Delta,
                             stable: DataFrame)
 
   /** A previous and a current crawl of `frame` keyed by `id`, their
-    * (id, status) diff, and the slice no diff touches. `content` is
-    * the digested payload (text, or a vector's printed components). */
+    * delta, and the slice no diff touches. `content` is the digested
+    * payload (text, or a vector's printed components). */
   def snapshot(frame: DataFrame, id: String, content: Column,
                m: Mods): Snapshot = {
     def is(r: (Long, Long)) = col(id) % r._1 === r._2
     val prev = frame.filter(!is(m.add))
     val cur = frame.filter(!is(m.rem)).localCheckpoint(true)
-    val diff = Corpus.snapshotDiffOf(
-        prev.select(col(id).as("doc_id"), md5(when(is(m.chg),
+    val diff = Delta(Corpus.snapshotDiffOf(
+        prev.select(col(id), md5(when(is(m.chg),
           concat(content, lit(":prev"))).otherwise(content)
           .cast(BinaryType)).as("prev_digest")),
-        cur.select(col(id).as("doc_id"),
-          md5(content.cast(BinaryType)).as("cur_digest")))
-      .select($"doc_id".as(id), $"status").localCheckpoint(true)
-    diff.groupBy($"status").count().orderBy($"status").collect()
+        cur.select(col(id), md5(content.cast(BinaryType)).as("cur_digest")),
+        id).select(col(id), $"status").localCheckpoint(true), id)
+    diff.status.groupBy($"status").count().orderBy($"status").collect()
       .foreach(r => println(s"  diff ${r.get(0)}: ${r.get(1)}"))
     Snapshot(prev, cur, diff,
       frame.filter(!is(m.add) && !is(m.rem) && !is(m.chg)))
@@ -250,7 +250,8 @@ object Receipts {
       "q83 ppl buckets" -> (() => Corpus.perplexityBucketsFrom(docs)),
       "q83 ppl buckets (sketch)" -> (() =>
         Corpus.perplexityBucketsSketch(docs)),
-      "q84 snapshot diff" -> (() => Corpus.snapshotDiffDerived(docs)),
+      "q84 snapshot diff" -> (() =>
+        Corpus.snapshotDiffDerived(docs).orderBy($"doc_id")),
       "q85 containment pairs" -> (() => Dedup.containmentPairsFrom(docs)),
       "q86 heavy hitters + CMS" -> (() => Corpus.heavyHittersFrom(docs)),
       "q66 frame sample" -> (() => Multimodal.frameSampleFrom(media)),
@@ -268,10 +269,11 @@ object Receipts {
     * before the incremental plan's extra joins pay for themselves. */
   private def scored(s: Scene)(stored: DataFrame => DataFrame,
       full: DataFrame => DataFrame,
-      incr: (DataFrame, DataFrame, DataFrame) => DataFrame): Seq[Arm] = {
+      incr: (DataFrame, DataFrame, Delta) => DataFrame): Seq[Arm] = {
     val docs = ampDocs(s.docs, s.scale)
     val cur = Corpus.snapshotCur(docs)
-    val diff = Corpus.snapshotDiffDerived(docs).localCheckpoint(true)
+    val diff = Delta(Corpus.snapshotDiffDerived(docs).localCheckpoint(true),
+      "doc_id")
     val prev = stored(Corpus.snapshotPrev(docs)).localCheckpoint(true)
     Seq(Arm("full", () => full(cur)), Arm("incremental",
       () => incr(prev, cur, diff)))
@@ -354,10 +356,10 @@ object Receipts {
         concat($"text", lit(" zz"), $"doc_id")).otherwise($"text")
         .as("text"))
       .localCheckpoint(true)
-    val diff = Corpus.snapshotDiffOf(
+    val diff = Delta(Corpus.snapshotDiffOf(
         prev.select($"doc_id", md5($"text".cast(BinaryType)).as("prev_digest")),
         cur.select($"doc_id", md5($"text".cast(BinaryType)).as("cur_digest")))
-      .localCheckpoint(true)
+      .localCheckpoint(true), "doc_id")
     // all four published tables: q132 reads stored state, so deriving
     // df and kept sizes per call would charge the nightly publish
     val fps = Dedup.shingleFpsFrom(prev).localCheckpoint(true)
@@ -477,7 +479,8 @@ object Receipts {
         .localCheckpoint(false)).localCheckpoint(true)
       val prev = VectorOps.assignCellsThin(VectorOps.vecSnapshotPrev(vecs),
         cb).localCheckpoint(true)
-      val diff = VectorOps.vecSnapshotDiff(vecs).localCheckpoint(true)
+      val diff = Delta(VectorOps.vecSnapshotDiff(vecs).localCheckpoint(true),
+        "vec_id")
       val cur = VectorOps.vecSnapshotCur(vecs)
       Seq(Arm("full", () => VectorOps.assignCellsThin(cur, cb)),
         Arm("incremental", () =>

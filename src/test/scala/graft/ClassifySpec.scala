@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
 import graft.operators.{Classify, Corpus}
 
 class ClassifySpec extends AnyFunSuite {
@@ -134,7 +135,7 @@ class ClassifySpec extends AnyFunSuite {
     val diff = Seq((1L, "changed"), (2L, "unchanged"), (3L, "unchanged"),
       (16L, "unchanged")).toDF("doc_id", "status")
     val out = Classify.incrementalNbClassifyOf(Classify.docTf(prevDocs),
-      meta, trainTf, wc, cdoc, curDocs, diff)
+      meta, trainTf, wc, cdoc, curDocs, Delta(diff, "doc_id"))
     // the 'de' class died with its only member: nothing predicts it,
     // and the maintained output matches the batch fit exactly
     assert(out.filter($"pred_lang" === "de").count() === 0)
@@ -160,7 +161,7 @@ class ClassifySpec extends AnyFunSuite {
     val diff = Seq((1L, "unchanged"), (2L, "unchanged"), (16L, "unchanged"))
       .toDF("doc_id", "status")
     val out = Classify.incrementalNbClassifyOf(poisonedTf, meta, trainTf,
-        wc, cdoc, prevDocs, diff).collect()
+        wc, cdoc, prevDocs, Delta(diff, "doc_id")).collect()
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap
     val batch = Classify.nbClassifyFrom(prevDocs).collect()
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap

@@ -42,7 +42,8 @@ class ClusterPostureSpec extends AnyFunSuite {
     "vector.pqCodebook", "vector.pqIndex",
     "corpus.bigramModel", "corpus.bigramState", "corpus.bpeMerges",
     "corpus.scores", "corpus.tf", "corpus.tfidf", "corpus.logProbScores",
-    "corpus.decontam", "corpus.chunks", "corpus.verdicts")
+    "corpus.decontam", "corpus.chunks", "corpus.verdicts",
+    "delta.documents", "delta.embeddings")
 
   test("every query is posture-invariant under AQE + 64 shuffle partitions") {
     val base = TestSpark.spark

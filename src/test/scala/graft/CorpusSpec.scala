@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
 import graft.operators.{Corpus, Dedup}
 
 /** Corpus-management operators (q58–q62): split stability, true/false
@@ -795,6 +796,22 @@ class CorpusSpec extends AnyFunSuite {
       s"sketch boundaries moved ${exact.size - agree} of ${exact.size} docs")
   }
 
+  test("awaitAll: a failed stage rethrows only after every sibling is done") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val sibling = Future(scala.concurrent.blocking(release.await()))
+    val failed = Future[Unit](throw new IllegalStateException("stage failed"))
+    val call = Future(Corpus.awaitAll(failed, sibling))
+    Thread.sleep(500)
+    assert(!call.isCompleted, "the call ended while a sibling still ran")
+    release.countDown()
+    val e = intercept[IllegalStateException](Await.result(call, 30.seconds))
+    assert(e.getMessage === "stage failed")
+    assert(sibling.isCompleted)
+  }
+
   test("q84 snapshot diff: statuses match the deterministic derivation") {
     val rows = Corpus.snapshotDiff(spark, sf).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -888,7 +905,7 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val curDocs = docsFrame(1L -> "stable text one", 2L -> "stable text two",
       3L -> "rewritten text entirely new", 4L -> "brand new doc")
-    val out = Corpus.incrementalScoresOf(prevScores, curDocs, diff)
+    val out = Corpus.incrementalScoresOf(prevScores, curDocs, Delta(diff, "doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) === -77L && out(2L) === -77L, "unchanged rows recomputed")
     assert(out(3L) === 1L && out(4L) === 1L, "dirty rows not rescored")
@@ -918,7 +935,7 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val curDocs = docsFrame(1L -> "alpha beta",
       2L -> "gamma gamma delta", 4L -> "epsilon")
-    val out = Corpus.incrementalLogProbOf(prevTf, prevVocab, curDocs, diff)
+    val out = Corpus.incrementalLogProbOf(prevTf, prevVocab, curDocs, Delta(diff, "doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) === 6L, "unchanged doc was re-tokenized (poison lost)")
     assert(out(2L) === 3L && out(4L) === 1L, "dirty docs not re-tokenized")
@@ -967,7 +984,7 @@ class CorpusSpec extends AnyFunSuite {
     val curDocs = docsFrame(1L -> "alpha beta",
       2L -> "gamma gamma delta", 4L -> "epsilon")
     val out = Corpus.incrementalTfidfOf(prevTf, prevDf, prevN,
-        curDocs, diff).collect()
+        curDocs, Delta(diff, "doc_id")).collect()
       .map(r => (r.getLong(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     // poison retained: doc 1's alpha row carries tf=5 from the store
@@ -1027,7 +1044,7 @@ class CorpusSpec extends AnyFunSuite {
     val curDocs = docsFrame(1L -> "a b c d e", 2L -> "f g h i j",
       3L -> "a")
     val out = Corpus.gatedLogProbOf(prevTf, prevVocab, prevScores,
-        curDocs, diff).collect()
+        curDocs, Delta(diff, "doc_id")).collect()
     assert(out.forall(_.getString(4) === "carry"))
     val byDoc = out.map(r => r.getLong(0) ->
       (r.getLong(1), r.getDouble(2))).toMap
@@ -1089,7 +1106,7 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val curDocs = docsFrame(1L -> "a b", 2L -> "c c d", 4L -> "e f")
     val out = Corpus.incrementalBigramLogProbOf(prevBg, prevModel,
-        curDocs, diff)
+        curDocs, Delta(diff, "doc_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) === 5L, "unchanged doc was re-tokenized (poison lost)")
     assert(out(2L) === 2L && out(4L) === 1L)
@@ -1129,7 +1146,7 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val curDocs = docsFrame(1L -> "alpha beta", 3L -> "delta")
     val out = Corpus.incrementalHeavyHittersOf(prevVocab, prevCounters,
-      prevTf, curDocs, diff).collect()
+      prevTf, curDocs, Delta(diff, "doc_id")).collect()
     val byTok = out.map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byTok === Map("alpha" -> 1L, "beta" -> 1L, "delta" -> 1L),
       "gamma must leave the vocabulary with its doc")
@@ -1227,7 +1244,7 @@ class CorpusSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val (fps, counts, bench) = Corpus.decontamStateFrom(prevDocs)
     val inc = Corpus.incrementalDecontamOf(fps, counts, bench,
-      curDocs, diff).collect()
+      curDocs, Delta(diff, "doc_id")).collect()
     val full = Corpus.decontaminateFrom(curDocs).collect()
     assert(inc.map(_.toSeq).toSeq === full.map(_.toSeq).toSeq)
     val ids = inc.map(_.getLong(0)).toSet

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
+
 /** Physical-plan shape assertions for the hot paths — the properties
   * that matter at cluster scale, pinned so a refactor cannot silently
   * reintroduce a shuffle or drop a broadcast. (Hinted joins are
@@ -83,9 +85,9 @@ class PlanSpec extends AnyFunSuite {
     val pipes = Seq(
       "q132" -> operators.Dedup.incrementalPrefixJaccardPlan(prevFps,
         operators.Dedup.prefixJaccardPairsFrom(prev,
-          threshold = operators.Dedup.PrefixJaccardThreshold), cur, diff),
+          threshold = operators.Dedup.PrefixJaccardThreshold), cur, Delta(diff, "doc_id")),
       "q133" -> operators.Dedup.incrementalPrefixContainmentPlan(prevFps,
-        operators.Dedup.prefixContainmentPairsFrom(prev), cur, diff))
+        operators.Dedup.prefixContainmentPairsFrom(prev), cur, Delta(diff, "doc_id")))
     for ((q, df) <- pipes) {
       val p = df.queryExecution.executedPlan.toString
       assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
@@ -435,7 +437,7 @@ class PlanSpec extends AnyFunSuite {
       (1L, Seq(1.0f, 0.0f)), (8L, Seq(0.0f, 1.0f)), (30L, Seq(0.5f, 0.5f)))
       .toDF("vec_id", "embedding"))
     val p = VectorOps.incrementalSemanticPairs(prevAssignN, prevPairs,
-      curVecs, diff, cb).queryExecution.executedPlan.toString
+      curVecs, Delta(diff, "vec_id"), cb).queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"pair carry must map-side anti-join the dirty set:\n${p.take(3000)}")
     assert(p.contains("LeftSemi"),

@@ -7,6 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
 import graft.operators.Weather
 import graft.schema.{Schemas, Validator}
 import graft.sources.UpsertWriter
@@ -251,7 +252,7 @@ class PropertySpec extends AnyFunSuite {
       val (fps, counts, bench) = graft.operators.Corpus
         .decontamStateFrom(prev)
       val inc = graft.operators.Corpus
-        .incrementalDecontamOf(fps, counts, bench, cur, diff)
+        .incrementalDecontamOf(fps, counts, bench, cur, Delta(diff, "doc_id"))
         .collect().map(_.toSeq).toSeq
       val full = graft.operators.Corpus.decontaminateFrom(cur)
         .collect().map(_.toSeq).toSeq
@@ -266,7 +267,7 @@ class PropertySpec extends AnyFunSuite {
       val (fps, bands, cand, verified) =
         graft.operators.Dedup.indexState(prev)
       val inc = graft.operators.Dedup
-        .incrementalKeepCorpusOf(fps, bands, cand, verified, cur, diff)
+        .incrementalKeepCorpusOf(fps, bands, cand, verified, cur, Delta(diff, "doc_id"))
         .collect().map(_.toSeq).toSeq
       val full = graft.operators.Dedup.dedupKeepCorpusFrom(cur,
         graft.operators.Dedup.dedupClustersFrom(

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
 import graft.operators.Weather
 import graft.sources.UpsertWriter
 import graft.streaming.{StreamingClean, StreamingWindows}
@@ -645,7 +646,7 @@ class StreamingDriftGateSpec extends AnyFunSuite {
     val diff = Seq(1L -> "unchanged", 2L -> "unchanged",
       3L -> "added", 4L -> "added").toDF("doc_id", "status")
     val batch = Corpus.gatedLogProbOf(prevTf, prevVocab, prevScores,
-      curDocs, diff).collect()
+      curDocs, Delta(diff, "doc_id")).collect()
     assert(drained.toSeq === batch.toSeq)
     assert(drained.forall(
       _.getAs[String]("maintenance_path") == "rescore"))
@@ -709,7 +710,7 @@ class StreamingDriftGateSpec extends AnyFunSuite {
     val diffDirect = Seq(300L -> "added", 400L -> "added",
       7L -> "removed").toDF("vec_id", "status")
     val batch = VectorOps.gatedIvfMaintenanceOf(prevAssign, curDirect,
-      diffDirect, cbDf,
+      Delta(diffDirect, "vec_id"), cbDf,
       VectorOps.fittedCentroids(curDirect).localCheckpoint(false))
       .collect()
     assert(drained.toSeq === batch.toSeq)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.delta.Delta
 import graft.operators.{Corpus, Dedup, JdkImageCodec, JdkWavCodec, Multimodal, TextOps, VectorOps}
 
 class TextDedupSpec extends AnyFunSuite {
@@ -209,7 +210,7 @@ class TextDedupSpec extends AnyFunSuite {
       rows.map(r => (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
     val inc = asRows(Dedup.incrementalPrefixJaccardOf(
-      prevFps, prevPass, cur, diff).collect())
+      prevFps, prevPass, cur, Delta(diff, "doc_id")).collect())
     val full = asRows(Dedup.prefixJaccardPairsFrom(cur,
       threshold = Dedup.PrefixJaccardThreshold).collect())
     assert(full.nonEmpty, "snapshot must keep near-dup pairs")
@@ -227,7 +228,7 @@ class TextDedupSpec extends AnyFunSuite {
     val poisoned = prevPass.withColumn("jaccard",
       when(col("doc_a") === victim._1 && col("doc_b") === victim._2,
         lit(0.987654)).otherwise(col("jaccard")))
-    val got = Dedup.incrementalPrefixJaccardOf(prevFps, poisoned, cur, diff)
+    val got = Dedup.incrementalPrefixJaccardOf(prevFps, poisoned, cur, Delta(diff, "doc_id"))
       .filter(col("doc_a") === victim._1 && col("doc_b") === victim._2)
       .collect()
     assert(got.length === 1 && got.head.getDouble(2) === 0.987654,
@@ -267,7 +268,7 @@ class TextDedupSpec extends AnyFunSuite {
       rows.map(r => (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToLongBits(r.getDouble(2)))).toSeq
     val inc = asRows(Dedup.incrementalPrefixJaccardOf(prevFps, prevPass,
-      cur, diff, threshold = 0.8, maxDocFreq = k).collect())
+      cur, Delta(diff, "doc_id"), threshold = 0.8, maxDocFreq = k).collect())
     val full = asRows(Dedup.prefixJaccardPairsFrom(cur, threshold = 0.8,
       maxDocFreq = k).collect())
     assert(inc === full,
@@ -287,7 +288,7 @@ class TextDedupSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(2)),
         java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq
     val inc = asRows(Dedup.incrementalPrefixContainmentOf(
-      prevFps, prevPass, cur, diff).collect())
+      prevFps, prevPass, cur, Delta(diff, "doc_id")).collect())
     val full = asRows(Dedup.prefixContainmentPairsFrom(cur).collect())
     assert(full.nonEmpty, "snapshot must keep containment pairs")
     assert(inc === full,
@@ -305,7 +306,7 @@ class TextDedupSpec extends AnyFunSuite {
       when(col("doc_a") === victim._1 && col("doc_b") === victim._2,
         lit(0.987654)).otherwise(col("containment_a")))
     val got = Dedup.incrementalPrefixContainmentOf(prevFps, poisoned,
-        cur, diff)
+        cur, Delta(diff, "doc_id"))
       .filter(col("doc_a") === victim._1 && col("doc_b") === victim._2)
       .collect()
     assert(got.length === 1 && got.head.getDouble(2) === 0.987654,
@@ -344,7 +345,7 @@ class TextDedupSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(2)),
         java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq
     val inc = asRows(Dedup.incrementalPrefixContainmentOf(prevFps,
-      prevPass, cur, diff, threshold = 0.8, maxDocFreq = k).collect())
+      prevPass, cur, Delta(diff, "doc_id"), threshold = 0.8, maxDocFreq = k).collect())
     val full = asRows(Dedup.prefixContainmentPairsFrom(cur, threshold = 0.8,
       maxDocFreq = k).collect())
     assert(inc === full,
@@ -1106,7 +1107,7 @@ class TextDedupSpec extends AnyFunSuite {
     val (fps, bands, cand, verified) = Dedup.indexState(prevDocs)
     assert(cand.isEmpty, "all prev buckets are oversized: no pairs stored")
     val kept = Dedup.incrementalKeepCorpusOf(fps, bands, cand, verified,
-      curDocs, diff).collect().map(_.getLong(0)).toSeq
+      curDocs, Delta(diff, "doc_id")).collect().map(_.getLong(0)).toSeq
     assert(kept === Seq(4L), "the recovered bucket must cluster to one keeper")
   }
 
@@ -1123,7 +1124,7 @@ class TextDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "status")
     val (fps, bands, cand, verified) = Dedup.indexState(prevDocs)
     val kept = Dedup.incrementalKeepCorpusOf(fps, bands, cand, verified,
-      curDocs, diff).collect().map(_.getLong(0)).toSeq
+      curDocs, Delta(diff, "doc_id")).collect().map(_.getLong(0)).toSeq
     assert(kept === Seq(5L, 9L), "cluster {5,30} keeps 5; 9 untouched")
   }
 
@@ -1153,7 +1154,7 @@ class TextDedupSpec extends AnyFunSuite {
       (3L, Seq(0.0f, 1.0f)), (4L, Seq(0.1f, 0.9f)))
       .toDF("vec_id", "embedding"))
     val out = VectorOps
-      .incrementalIvfAssignOf(prevAssign, curVecs, diff, codebook)
+      .incrementalIvfAssignOf(prevAssign, curVecs, Delta(diff, "vec_id"), codebook)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(1L) === -77L && out(2L) === -77L, "unchanged rows reassigned")
     assert(out(3L) === 1L && out(4L) === 1L, "dirty rows not reassigned")
@@ -1472,7 +1473,7 @@ class TextDedupSpec extends AnyFunSuite {
     val prevContain = Seq.empty[(Long, Long, Double, Double)]
       .toDF("doc_a", "doc_b", "containment_a", "containment_b")
     val out = Dedup.incrementalContainmentOf(fps, bands, cand,
-      prevContain, curDocs, diff).collect()
+      prevContain, curDocs, Delta(diff, "doc_id")).collect()
     assert(out.length === 63 * 62 / 2,
       s"recovered bucket must yield all clone pairs, got ${out.length}")
     assert(out.forall(r => r.getDouble(2) === 1.0 && r.getDouble(3) === 1.0))
@@ -1534,7 +1535,7 @@ class TextDedupSpec extends AnyFunSuite {
     val cur = VectorOps.vecsFrom(Seq(
       (1L, Seq(1.0f, 0.0f)), (2L, Seq(0.9f, 0.1f)), (4L, Seq(0.1f, 0.9f)))
       .toDF("vec_id", "embedding")).localCheckpoint()
-    val out = VectorOps.gatedIvfMaintenanceOf(prevAssign, cur, diff,
+    val out = VectorOps.gatedIvfMaintenanceOf(prevAssign, cur, Delta(diff, "vec_id"),
         codebook, codebook)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(3)))
       .toMap
@@ -1582,7 +1583,7 @@ class TextDedupSpec extends AnyFunSuite {
     val diff = Seq((5L, "unchanged"), (7L, "unchanged"), (30L, "added"))
       .toDF("doc_id", "status")
     val out = Dedup.incrementalContainmentOf(fps, bands, cand, prevContain,
-        curDocs, diff)
+        curDocs, Delta(diff, "doc_id"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
@@ -1615,7 +1616,7 @@ class TextDedupSpec extends AnyFunSuite {
       (8L, Seq(0.02f, 0.98f), "b"), (30L, Seq(0.03f, 0.97f), "b"))
       .toDF("vec_id", "embedding", "label")
     val kept = VectorOps.incrementalSemanticKeepOf(prevAssignN, prevPairs,
-      curEmb, diff, cb).collect().map(_.getLong(0)).toSeq
+      curEmb, Delta(diff, "vec_id"), cb).collect().map(_.getLong(0)).toSeq
     // (8,9) dies with 9; 30 probes c1/c2, regenerates pair (8,30) →
     // cluster {8,30} keeps 8; carried (1,2) keeps 1
     assert(kept === Seq(1L, 8L))
@@ -1642,7 +1643,7 @@ class TextDedupSpec extends AnyFunSuite {
       (1L, Seq(1.0f, 0.0f), "a"), (8L, Seq(0.02f, 0.98f), "b"),
       (30L, Seq(-1.0f, 0.0f), "c")).toDF("vec_id", "embedding", "label")
     val kept = VectorOps.incrementalSemanticKeepOf(prevAssignN, prevPairs,
-      curEmb, diff, cb).collect().map(_.getLong(0)).toSet
+      curEmb, Delta(diff, "vec_id"), cb).collect().map(_.getLong(0)).toSet
     assert(!kept.contains(8L),
       "the poisoned stored pair was re-verified instead of carried")
     assert(kept === Set(1L, 30L))
@@ -1841,7 +1842,7 @@ class TextDedupSpec extends AnyFunSuite {
     val curDocs = prevDocs.unionByName(
       Seq((4L, s"$shared tail")).toDF("doc_id", "text"))
     val out = Dedup.incrementalSpanDedupOf(prevSpans, prevOut,
-        curDocs, diff).collect()
+        curDocs, Delta(diff, "doc_id")).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getString(3))).toMap
     // doc 4 adds a third occurrence of the shared span → docs 1, 2, 4
     // are candidates and rebuild: canonical (doc 1) intact, both
@@ -1990,7 +1991,7 @@ class TextDedupSpec extends AnyFunSuite {
       .withColumn("dist2",
         when($"vec_id" === unchanged, lit(-77.0)).otherwise($"dist2"))
     val out = VectorOps.incrementalPqCodesOf(poisoned,
-        VectorOps.vecSnapshotCur(all), diff,
+        VectorOps.vecSnapshotCur(all), Delta(diff, "vec_id"),
         books).filter($"vec_id" === unchanged).collect()
     assert(out.nonEmpty && out.forall(_.getDouble(3) === -77.0),
       "unchanged vector was re-encoded (poison lost)")
