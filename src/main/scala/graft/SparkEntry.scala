@@ -104,7 +104,7 @@ object SparkEntry {
     "q82_repeated_spans"    -> (Dedup.repeatedSpans(_, _)),
     "q83_ppl_buckets"       -> (Corpus.perplexityBuckets(_, _)),
     "q84_snapshot_diff"     -> (Corpus.snapshotDiff(_, _)),
-    "q85_containment_pairs" -> (Dedup.containmentPairs(_, _)),
+    "q85_containment_pairs" -> (Dedup.prefixContainmentPairs(_, _)),
     "q86_heavy_hitters"     -> (Corpus.heavyHitters(_, _)),
     "q87_streaming_hh"      -> (graft.streaming.StreamingCorpus.heavyHittersViaStreaming(_, _)),
     "q88_incremental_scores" -> (Corpus.incrementalScores(_, _)),
@@ -391,7 +391,7 @@ object SparkEntry {
     // q130's oracle is q45's quadratic statement verbatim: prefix
     // filtering is exact, so the hash match IS the exactness claim.
     "q130_prefix_jaccard"   -> Dedup.prefixJaccardPairsSql,
-    "q131_prefix_containment" -> Dedup.prefixContainmentPairsSql,
+    "q131_prefix_containment" -> Dedup.containmentPairsSql,
     "q132_incremental_prefixjac" -> Dedup.incrementalPrefixJaccardSql,
     // q133's oracle is the FULL q131/q85 brute force over the new
     // snapshot — maintained == rebuild, bit for bit.
@@ -401,7 +401,7 @@ object SparkEntry {
     "q134_streaming_prefixjac" -> Dedup.prefixJaccardPairsSql,
     // q135: same drained state, containment measure — oracle = q131's
     // (q85's) batch statement.
-    "q135_streaming_prefixcontain" -> Dedup.prefixContainmentPairsSql,
+    "q135_streaming_prefixcontain" -> Dedup.containmentPairsSql,
     // q136/q137's oracles are the q70/q103 keeper chains with q45's
     // brute-force pair statement at q130's threshold swapped in for
     // the LSH chain — exact pairs → exact components → exact keepers,

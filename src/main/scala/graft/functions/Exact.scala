@@ -50,7 +50,6 @@ object Exact {
       .cast(DoubleType)
 
   /** SQL fragments mirroring the above for the DuckDB oracle. */
-  val sqlMoney = "CAST(%s AS DECIMAL(12,2))"
   def sqlDsum(col: String): String =
     s"CAST(SUM(CAST($col AS DECIMAL(12,2))) AS DOUBLE)"
   def sqlDavg(col: String): String =

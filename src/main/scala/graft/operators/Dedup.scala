@@ -107,13 +107,11 @@ object Dedup {
     * d = 25, far under the cutoff: rows are unchanged at every sf. */
   val MaxShingleDocFreq = 256
 
-  /** The shared all-pairs overlap kernel behind q45 (Jaccard) and q85
-    * (containment): (doc_a, doc_b, i, na, nb) for every co-occurring
-    * pair. Set sizes are computed AFTER the frequency cutoff (in both
-    * engines), i.e. overlap measures are over the kept-item universe. */
-  /** The shared kept-universe prelude of every exact pair operator
-    * (q45/q85 via [[pairOverlap]], q130/q131 via [[rarityRanked]]):
-    * the item subtree (shingle scan + hashing) is materialized ONCE,
+  /** The kept-universe prelude of the all-pairs kernel
+    * ([[pairOverlap]], q45) and of the stored kept sizes q132/q133
+    * maintain ([[prevSzOf]], `StoredIndex.prefixSz`). The prefix
+    * kernels build the same universe in [[rarityDocArrays]]. The item
+    * subtree (shingle scan + hashing) is materialized ONCE,
     * eagerly — the hot-set broadcast build and the kept-frame
     * materialization are separate jobs that each re-derived it under
     * the old lazy-only shape (r15 floors: a ~0.35 s clone of q45's
@@ -127,9 +125,7 @@ object Dedup {
     * rather than cache() — a cache() here would pin a CacheManager
     * entry the caller can never unpersist (the handle is
     * function-local); checkpointed blocks are instead released by the
-    * ContextCleaner once the returned plan is unreachable. Being ONE
-    * function is what keeps the prefix operators' universe identical
-    * to their brute-force oracles' by construction. */
+    * ContextCleaner once the returned plan is unreachable. */
   private def keptItems(items: DataFrame, itemCol: String,
                         maxDocFreq: Int): DataFrame = {
     val src = items.localCheckpoint(true)
@@ -139,6 +135,10 @@ object Dedup {
       .localCheckpoint(false)
   }
 
+  /** The all-pairs overlap kernel behind q45: (doc_a, doc_b, i, na,
+    * nb) for every co-occurring pair. Set sizes are computed AFTER the
+    * frequency cutoff (in both engines), i.e. overlap measures are over
+    * the kept-item universe. */
   private[graft] def pairOverlap(
       items: DataFrame, itemCol: String,
       maxDocFreq: Int = MaxShingleDocFreq): DataFrame = {
@@ -156,13 +156,43 @@ object Dedup {
                  .withColumnRenamed("n", "nb"), Seq("doc_b"))
   }
 
+  // ---------------------------------------------------------------
+  // The two pair measures, each scored in ONE place over a sized pair
+  // frame (doc_a, doc_b, i, na, nb) at a caller-given τ: the all-pairs
+  // kernel (q45), the prefix kernels (q85/q131, q130), the maintained
+  // fresh pairs (q132/q133) and every candidate verify (q47/q71/q89,
+  // q90/q107, q134/q135) go through these, so no two kernels can
+  // drift on the score or the threshold compare.
+  // ---------------------------------------------------------------
+
+  /** Jaccard J = i/(na+nb−i), kept at ≥ τ: (doc_a, doc_b, jaccard). */
+  private def jaccardOf(sized: DataFrame,
+                        threshold: Double): DataFrame =
+    sized.select($"doc_a", $"doc_b",
+        ($"i" * lit(1.0) / ($"na" + $"nb" - $"i")).as("jaccard"))
+      .filter($"jaccard" >= threshold)
+
+  /** The two containment scores C(A|B) = i/na and C(B|A) = i/nb. */
+  private val containmentA: Column = $"i" * lit(1.0) / $"na"
+  private val containmentB: Column = $"i" * lit(1.0) / $"nb"
+
+  /** The sized pairs whose greater containment reaches τ, sizes kept:
+    * q140's drop rule reads the exact integer sizes, not the ratios. */
+  private def containedSized(sized: DataFrame,
+                             threshold: Double): DataFrame =
+    sized.filter(greatest(containmentA, containmentB) >= threshold)
+
+  /** Containment, kept where max(C(A|B), C(B|A)) ≥ τ: (doc_a, doc_b,
+    * containment_a, containment_b). */
+  private def containmentOf(sized: DataFrame,
+                            threshold: Double): DataFrame =
+    containedSized(sized, threshold).select($"doc_a", $"doc_b",
+      containmentA.as("containment_a"), containmentB.as("containment_b"))
+
   private[graft] def jaccardPairsOver(
       items: DataFrame, itemCol: String, threshold: Double,
       maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
-    pairOverlap(items, itemCol, maxDocFreq)
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / ($"na" + $"nb" - $"i")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    jaccardOf(pairOverlap(items, itemCol, maxDocFreq), threshold)
       // lazy checkpoint before the presentation sort: orderBy plans a
       // range-exchange whose SAMPLE job otherwise re-executes the whole
       // uncheckpointed pipeline before the real sort job runs it again
@@ -197,11 +227,12 @@ object Dedup {
 
   val jaccardPairsSql: String = jaccardPairsSqlAt(JaccardThreshold)
 
-  /** The q45 statement at an arbitrary threshold and source — q130's
-    * oracle runs it at [[PrefixJaccardThreshold]]; q132's runs it
-    * over the current-snapshot subquery. */
-  def jaccardPairsSqlAt(threshold: Double,
-                        src: String = "documents"): String =
+  /** The brute-force oracle's CTE chain over `src`, shared by every
+    * exact-pair statement (q45/q85 and their prefix, incremental and
+    * keep twins): shingles → fps → hot → kept → sz → inter(doc_a,
+    * doc_b, i) over the kept universe. Each statement appends its
+    * measure tail. */
+  private def exactPairCtes(src: String): String =
     s"""WITH ${shinglesCte(src = src)},
        |$fpsCte,
        |hot AS (SELECT fp FROM fps GROUP BY fp
@@ -212,13 +243,36 @@ object Dedup {
        |inter AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
        |  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** The oracle's Jaccard tail over `inter` and `sz` — the exact
+    * chain's and the LSH chain's (q47) alike. */
+  private def jaccardTailSql(threshold: Double): String =
+    s"""SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
        |FROM inter
        |JOIN sz sa ON sa.doc_id = doc_a
        |JOIN sz sb ON sb.doc_id = doc_b
        |WHERE i * 1.0 / (sa.n + sb.n - i) >= $threshold
        |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** The oracle's containment tail over `inter` and `sz` (q85, q90). */
+  private def containmentTailSql(threshold: Double): String =
+    s"""SELECT doc_a, doc_b, i * 1.0 / sa.n AS containment_a,
+       |  i * 1.0 / sb.n AS containment_b
+       |FROM inter
+       |JOIN sz sa ON sa.doc_id = doc_a
+       |JOIN sz sb ON sb.doc_id = doc_b
+       |WHERE greatest(i * 1.0 / sa.n, i * 1.0 / sb.n)
+       |  >= $threshold
+       |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** The q45 statement at an arbitrary threshold and source — q130's
+    * oracle runs it at [[PrefixJaccardThreshold]]; q132's runs it
+    * over the current-snapshot subquery. */
+  def jaccardPairsSqlAt(threshold: Double,
+                        src: String = "documents"): String =
+    s"""${exactPairCtes(src)}
+       |${jaccardTailSql(threshold)}""".stripMargin
 
   // ---------------------------------------------------------------
   // q85 — shingle containment pairs: C(A|B) = |A∩B| / |A| in both
@@ -232,69 +286,31 @@ object Dedup {
   // problem; LSH-ensemble papers exist precisely because banded
   // MinHash under-recalls high-containment/low-Jaccard pairs).
   //
-  // 100 TB shape: identical to q45 — the shared [[pairOverlap]]
-  // kernel (hot-shingle broadcast anti-join + doc-freq cutoff), and
-  // like q45 this is the GROUND-TRUTH BASELINE, not the hot path: the
-  // pair join is output-sensitive (the receipts' 10× sweep with clone
-  // amplification measures 17-24 s as every doc becomes a 10-family),
-  // so at scale run q90 ([[containmentOverLsh]]) — the same
-  // containment kernel over q47's LSH candidates (accepting banded
-  // MinHash's documented under-recall of high-containment/low-Jaccard
-  // subset pairs) — or tighten the doc-freq cutoff knob.
+  // One kernel: q85 and q131 are the same result, and both names are
+  // served by q131's prefix-filter kernel ([[prefixContainmentPairs]]).
+  // The all-pairs kernel q85 used to run is output-sensitive in Σdf²:
+  // fully forced at 10× clone amplification of sf0.1 (a 250,600-pair
+  // result, local[4] on 4 cores) it took 176.0 s against the prefix
+  // kernel's 49.6 s, and 1.94 vs 1.73 s at sf0.1. It survives only
+  // test-side, as the reference TextDedupSpec's exactness cases
+  // compare against. Its brute-force statement below stays the oracle
+  // of both names.
   // ---------------------------------------------------------------
 
   val ContainmentThreshold = 0.8
 
-  def containmentPairs(spark: SparkSession, dir: String): DataFrame =
-    containmentPairsOver(shingleFps(spark, dir), "fp", ContainmentThreshold)
-
-  def containmentPairsFrom(docs: DataFrame,
-                           threshold: Double = ContainmentThreshold,
-                           maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
-    containmentPairsOver(shingleFpsFrom(docs), "fp", threshold, maxDocFreq)
-
-  private[graft] def containmentPairsOver(
-      items: DataFrame, itemCol: String, threshold: Double,
-      maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
-    pairOverlap(items, itemCol, maxDocFreq)
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / $"na").as("containment_a"),
-        ($"i" * lit(1.0) / $"nb").as("containment_b"))
-      .filter(greatest($"containment_a", $"containment_b") >= threshold)
-      // lazy checkpoint before the presentation sort: orderBy plans a
-      // range-exchange whose SAMPLE job otherwise re-executes the whole
-      // uncheckpointed pipeline before the real sort job runs it again
-      // (measured 2x on q131); the pair table is verdict-sized
-      .localCheckpoint(false)
-      .orderBy($"doc_a", $"doc_b")
-
+  /** The q85/q131 oracle: the brute-force all-pairs containment
+    * statement — the hash match is the prefix kernel's exactness
+    * claim. */
   val containmentPairsSql: String =
     containmentPairsSqlAt(ContainmentThreshold)
 
-  /** The q85 statement at an arbitrary threshold and source — q131's
-    * oracle runs it verbatim; q133's runs it over the
-    * current-snapshot subquery. */
+  /** The q85 statement at an arbitrary threshold and source — q133's
+    * oracle runs it over the current-snapshot subquery. */
   def containmentPairsSqlAt(threshold: Double,
                             src: String = "documents"): String =
-    s"""WITH ${shinglesCte(src = src)},
-       |$fpsCte,
-       |hot AS (SELECT fp FROM fps GROUP BY fp
-       |        HAVING COUNT(*) > $MaxShingleDocFreq),
-       |kept AS (SELECT * FROM fps
-       |         WHERE fp NOT IN (SELECT fp FROM hot)),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-       |  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT doc_a, doc_b, i * 1.0 / sa.n AS containment_a,
-       |  i * 1.0 / sb.n AS containment_b
-       |FROM inter
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE greatest(i * 1.0 / sa.n, i * 1.0 / sb.n)
-       |  >= $threshold
-       |ORDER BY doc_a, doc_b""".stripMargin
+    s"""${exactPairCtes(src)}
+       |${containmentTailSql(threshold)}""".stripMargin
 
   // ---------------------------------------------------------------
   // q130 — EXACT Jaccard pairs via prefix filtering (the AllPairs /
@@ -356,59 +372,14 @@ object Dedup {
       .localCheckpoint(false)
       .orderBy($"doc_a", $"doc_b")
 
-  /** Shared prefix-filter index for q130/q131: (kept items, ranked)
-    * where ranked = (doc_id, item, pos, n) — pos is the item's rarity
-    * rank inside its doc (global df-ascending order), n the doc's
-    * kept-item count. The universe comes from [[keptItems]] — the
-    * SAME function q45/q85 use — so the prefix operators ≡ their
-    * brute-force twins exactly, by construction.
-    * `ranked` is LAZILY checkpointed (r16, VERDICT r15 item 4): the
-    * candidate joins consume it on both sides as concurrent stages,
-    * but the checkpoint pins ONE concrete RDD at construction, so
-    * the concurrent scans share its blocks under the block manager's
-    * per-partition lock instead of duplicating the frequency join +
-    * ranking windows. (The r15 ~2× clone race happened with NO
-    * checkpoint at all — each broadcast build compiled its own copy
-    * of the subtree into a private RDD, which no lock can dedupe;
-    * the eager barrier that fixed it also serialized a full
-    * materialization in front of the self-join.) */
-  private[graft] def rarityRanked(items: DataFrame, itemCol: String,
-                           maxDocFreq: Int): (DataFrame, DataFrame) = {
-    val it = keptItems(items, itemCol, maxDocFreq)
-    // global rarity order: document frequency over the kept universe.
-    // The order only steers PRUNING — the verified output is
-    // order-independent — so no cross-engine parity is needed here.
-    // shuffle_hash, NEVER broadcast: the df table is vocabulary-sized
-    // (the q65 discipline — billions of rows on a web corpus), and
-    // Catalyst's post-aggregate size estimate underprices it badly
-    // enough that AQE picked a broadcast at a mere 200k synthetic
-    // docs and ran the driver out of memory building a 12M-row table
-    val df = it.groupBy(col(itemCol)).agg(count(lit(1)).as("df"))
-      .hint("shuffle_hash")
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy($"doc_id").orderBy($"df".asc, col(itemCol).asc)
-    // the doc-size count rides the SAME ordered spec with a full
-    // frame, so rank and size evaluate in one Window operator over
-    // one sort — a second (unordered) spec would add an operator
-    val wFull = wDoc.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.unboundedFollowing)
-    val ranked = it.join(df, Seq(itemCol))
-      .withColumn("pos", row_number().over(wDoc).cast(LongType))
-      .withColumn("n", count(lit(1)).over(wFull))
-      .select($"doc_id", col(itemCol), $"pos", $"n")
-      .localCheckpoint(false)
-    (it, ranked)
-  }
-
   /** r17 (guide §2.4): the doc-grouped rarity artifact behind
     * q130/q131/q136/q137/q140 — ONE fp-keyed aggregate (raw df), ONE
     * shuffle_hash join attaching df to kept occurrences, ONE doc-keyed
     * aggregate building each doc's rarity-SORTED kept-fp array. The
     * ranked occurrence view (pos, n), the prefix rows, and the verify
     * arrays all derive ROW-LOCALLY from this checkpointed 1-row-per-doc
-    * frame. The old shape ([[rarityRanked]] + [[candidateOverlap]]'s
-    * array build) paid: a hot-set aggregate, a SECOND df aggregate over
+    * frame. The r16 shape (a ranked occurrence view from a Window
+    * over [[keptItems]], + [[candidateOverlap]]'s array build) paid: a hot-set aggregate, a SECOND df aggregate over
     * the kept relation, a Window sort exchange, and a THIRD doc-keyed
     * aggregate for verify arrays — 6 exchanges of the occurrence
     * relation vs 3 here, plan-diffed in plans/r17.
@@ -472,7 +443,7 @@ object Dedup {
     * the old dropped-pair behavior. `fps` must be DISTINCT per doc and
     * `n` its exact count: array_intersect dedupes while n counts rows,
     * so non-distinct input would make i inconsistent with na/nb (see
-    * [[verifyCandidates]]). */
+    * [[verifyJaccard]]). */
   private def candidateOverlapArrs(cand: DataFrame,
                                    arrs: DataFrame): DataFrame =
     cand
@@ -523,7 +494,8 @@ object Dedup {
   /** α = ⌈τ·n⌉ = (n·p + q − 1) div q, exact over longs (n·p ≤ 2^31·10^4
     * stays far under 2^63). The n < 2^26 premise of the tauFrac
     * consistency argument is structural, not guarded at runtime: n is
-    * a DOCUMENT's distinct-shingle count (rarityRanked's window), so
+    * a DOCUMENT's kept-shingle count (`size(sfps)` in
+    * [[rarityDocArrays]]), so
     * crossing it takes a single ~67M-distinct-shingle document —
     * ~400 MB of unique text in one row, far past the point a corpus
     * would have chunked it (q72) and the row itself strained the
@@ -573,11 +545,9 @@ object Dedup {
         first($"na").as("na"), first($"nb").as("nb"))
       .filter($"bound" >= iMin)
       .select($"doc_a", $"doc_b")
-    candidateOverlapArrs(cand,
-      docArr.select($"doc_id", transform($"sfps", _("item")).as("fps"), $"n"))
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / ($"na" + $"nb" - $"i")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    jaccardOf(candidateOverlapArrs(cand,
+      docArr.select($"doc_id", transform($"sfps", _("item")).as("fps"), $"n")),
+      threshold)
   }
 
   /** q130 oracle: q45's statement at q130's threshold — prefix
@@ -591,7 +561,7 @@ object Dedup {
   // asymmetric twin of q130, and the direct answer to the recall gap
   // the q90 notes document (banded MinHash under-recalls the
   // high-containment/low-Jaccard subset pairs containment exists
-  // for; q90's fix until now was "run q85's quadratic baseline").
+  // for). It serves q85 too: the two names are one result.
   //
   // The asymmetric lemma: greatest(C(A|B), C(B|A)) ≥ τ means the
   // overlap i ≥ ⌈τ·min(|A|,|B|)⌉, so the SMALLER doc's prefix (first
@@ -600,7 +570,8 @@ object Dedup {
   // prefix (there is no length filter here: a 10-shingle doc inside
   // a 10 000-shingle doc is precisely the pair this operator exists
   // to catch). The positional bound still applies at every shared
-  // fp. Exact: oracle = q85's brute-force SQL, bit-for-bit.
+  // fp. Exact: oracle = the brute-force [[containmentPairsSql]],
+  // bit-for-bit.
   //
   // 100 TB shape: the probe side is prefix-sized (rarity-ordered, so
   // hot fps never enter it) joined against the full occurrence list;
@@ -609,6 +580,7 @@ object Dedup {
   // hot-shingle cutoff required for boundedness.
   // ---------------------------------------------------------------
 
+  /** q85 and q131. */
   def prefixContainmentPairs(spark: SparkSession, dir: String): DataFrame =
     prefixContainmentPairsOver(shingleFps(spark, dir), "fp",
       ContainmentThreshold)
@@ -618,8 +590,9 @@ object Dedup {
       .localCheckpoint(false)
       .orderBy($"doc_a", $"doc_b")
 
-  /** q131 over any documents-shaped frame — the spec entry (exactness
-    * pinned against [[containmentPairsFrom]]). */
+  /** q85/q131 over any documents-shaped frame — the spec and receipt
+    * entry (exactness pinned against TextDedupSpec's all-pairs
+    * reference). */
   def prefixContainmentPairsFrom(
       docs: DataFrame,
       threshold: Double = ContainmentThreshold,
@@ -629,24 +602,29 @@ object Dedup {
       .localCheckpoint(false)
       .orderBy($"doc_a", $"doc_b")
 
-  /** The UNSORTED q131 pipeline (see [[prefixJaccardPairsOver]]). */
+  /** The UNSORTED q85/q131 pipeline (see [[prefixJaccardPairsOver]]). */
   private[graft] def prefixContainmentPairsOver(
       items: DataFrame, itemCol: String, threshold: Double,
       maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
-    prefixContainmentSizedOver(items, itemCol, threshold, maxDocFreq)
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / $"na").as("containment_a"),
-        ($"i" * lit(1.0) / $"nb").as("containment_b"))
+    containmentOf(prefixContainmentOverlap(items, itemCol, threshold,
+      maxDocFreq), threshold)
 
-  /** The q131 pipeline stopped at the sized pair frame (doc_a, doc_b,
+  /** The same pipeline stopped at the sized pair frame (doc_a, doc_b,
     * i, na, nb) — same candidates, same verify, same threshold
-    * predicate (the ratio projection above is a pure re-expression of
-    * the filter's own operands, so q131's output is unchanged by this
-    * split); q140's drop rule wants the exact integer sizes, not
+    * predicate; q140's drop rule wants the exact integer sizes, not
     * their double ratios. */
   private[graft] def prefixContainmentSizedOver(
       items: DataFrame, itemCol: String, threshold: Double,
-      maxDocFreq: Int = MaxShingleDocFreq): DataFrame = {
+      maxDocFreq: Int = MaxShingleDocFreq): DataFrame =
+    containedSized(prefixContainmentOverlap(items, itemCol, threshold,
+      maxDocFreq), threshold)
+
+  /** The prefix kernel's verified candidates, unthresholded: (doc_a,
+    * doc_b, i, na, nb) for every pair that survives the prefix and
+    * positional filters at τ. */
+  private def prefixContainmentOverlap(
+      items: DataFrame, itemCol: String, threshold: Double,
+      maxDocFreq: Int): DataFrame = {
     // r17: one doc-grouped rarity artifact (see [[rarityDocArrays]]);
     // the full-list probe side is the posexplode view of the same
     // checkpointed array frame — no Window sort, no re-aggregation.
@@ -675,14 +653,7 @@ object Dedup {
       .select($"doc_a", $"doc_b")
     candidateOverlapArrs(cand,
       docArr.select($"doc_id", transform($"sfps", _("item")).as("fps"), $"n"))
-      .filter(greatest($"i" * lit(1.0) / $"na",
-        $"i" * lit(1.0) / $"nb") >= threshold)
   }
-
-  /** q131 oracle: q85's brute-force statement VERBATIM (both run at
-    * [[ContainmentThreshold]]) — the hash match is the exactness
-    * claim, as with q130. */
-  val prefixContainmentPairsSql: String = containmentPairsSql
 
   // ---------------------------------------------------------------
   // q132 — incremental prefix-Jaccard maintenance: the q130 verdict
@@ -917,11 +888,8 @@ object Dedup {
     val front = prefixMaintFront(prevFps, curDocs, diff, maxDocFreq,
       storedDf)
     val carried = front.dirty.carryPairs(prevPass)
-    val fresh = maintFreshPairs(front,
-        prevSzOf(prevFps, maxDocFreq, storedSz))
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / ($"na" + $"nb" - $"i")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
+    val fresh = jaccardOf(maintFreshPairs(front,
+      prevSzOf(prevFps, maxDocFreq, storedSz)), threshold)
     carried.unionByName(fresh)
       // the doc_b anti-join put its key first; restore the q130
       // column order so the maintained table is drop-in
@@ -999,12 +967,8 @@ object Dedup {
     val front = prefixMaintFront(prevFps, curDocs, diff, maxDocFreq,
       storedDf)
     val carried = front.dirty.carryPairs(prevPass)
-    val fresh = maintFreshPairs(front,
-        prevSzOf(prevFps, maxDocFreq, storedSz))
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / $"na").as("containment_a"),
-        ($"i" * lit(1.0) / $"nb").as("containment_b"))
-      .filter(greatest($"containment_a", $"containment_b") >= threshold)
+    val fresh = containmentOf(maintFreshPairs(front,
+      prevSzOf(prevFps, maxDocFreq, storedSz)), threshold)
     carried.unionByName(fresh)
       .select($"doc_a", $"doc_b", $"containment_a", $"containment_b")
   }
@@ -1189,7 +1153,7 @@ object Dedup {
       .filter($"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
       .distinct()
-    verifyCandidates(cand, shf)
+    verifyJaccard(cand, shf, JaccardThreshold).orderBy($"doc_a", $"doc_b")
   }
 
   /** Candidates-only overlap core: (doc_a, doc_b, i, na, nb) for each
@@ -1222,78 +1186,49 @@ object Dedup {
 
   /** Candidates-only Jaccard verification: true hashed-shingle Jaccard
     * for each (doc_a, doc_b) candidate against the full (doc_id, fp)
-    * relation, kept at ≥ [[JaccardThreshold]]. Shared by the batch q47
-    * tail and the streaming q71 drain — the code being ONE function is
-    * what makes streaming-vs-batch verification parity structural
-    * rather than coincidental.
+    * relation, kept at ≥ τ. Unsorted; a caller that presents the
+    * pairs adds its own `orderBy`. Shared by the batch q47 tail, q89's
+    * maintenance, the streaming q71 drain (at [[JaccardThreshold]])
+    * and the q134 drain (at [[PrefixJaccardThreshold]]) — the code
+    * being ONE function is what makes streaming-vs-batch verification
+    * parity structural rather than coincidental.
     *
-    * Input requirement (here and in [[verifyJaccardAt]] /
-    * [[verifyContainment]], ADVICE r17): `shf` must be DISTINCT
-    * (doc_id, fp) — the array verify kernel intersects deduped arrays
-    * while sizing with count(1), so duplicate occurrence rows would
-    * make i inconsistent with na/nb. Every caller passes
-    * [[shingleFpsFrom]]-shaped relations, which are distinct by
-    * construction. */
-  private[graft] def verifyCandidates(cand: DataFrame,
-                                      shf: DataFrame): DataFrame =
-    verifyCandidatesUnsorted(cand, shf).orderBy($"doc_a", $"doc_b")
+    * Input requirement (here and in [[verifyContainment]], ADVICE
+    * r17): `shf` must be DISTINCT (doc_id, fp) — the array verify
+    * kernel intersects deduped arrays while sizing with count(1), so
+    * duplicate occurrence rows would make i inconsistent with na/nb.
+    * Every caller passes [[shingleFpsFrom]]-shaped relations, which
+    * are distinct by construction. */
+  private[graft] def verifyJaccard(cand: DataFrame, shf: DataFrame,
+                                   threshold: Double): DataFrame =
+    jaccardOf(candidateOverlap(cand, shf), threshold)
 
-  /** [[verifyCandidates]] without the presentation sort — for callers
-    * that immediately aggregate or cluster the pairs (q89's
-    * maintenance): a range-exchange sort costs an extra sampling job
-    * per materialization and its order is destroyed downstream. */
-  private[graft] def verifyCandidatesUnsorted(cand: DataFrame,
-                                              shf: DataFrame): DataFrame =
-    verifyJaccardAt(cand, shf, JaccardThreshold)
-
-  /** Jaccard verification at an arbitrary threshold — q134's drain
-    * verifies the streamed candidate log at q130's τ against the
-    * final kept universe (same shape as [[verifyCandidatesUnsorted]],
-    * parameterized). */
-  private[graft] def verifyJaccardAt(cand: DataFrame, shf: DataFrame,
-                                     threshold: Double): DataFrame =
-    candidateOverlap(cand, shf)
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / ($"na" + $"nb" - $"i")).as("jaccard"))
-      .filter($"jaccard" >= threshold)
-
-  /** Candidates-only CONTAINMENT verification — q85's asymmetric
-    * measure over a candidate set instead of all pairs. */
-  private[graft] def verifyContainment(cand: DataFrame,
-                                       shf: DataFrame): DataFrame =
-    verifyContainmentUnsorted(cand, shf).orderBy($"doc_a", $"doc_b")
-
-  /** [[verifyContainment]] without the presentation sort — q107's
-    * maintenance unions it with carried verdicts before its own final
-    * sort (the verifyCandidatesUnsorted discipline). */
-  private[graft] def verifyContainmentUnsorted(cand: DataFrame,
-                                               shf: DataFrame): DataFrame =
-    candidateOverlap(cand, shf)
-      .select($"doc_a", $"doc_b",
-        ($"i" * lit(1.0) / $"na").as("containment_a"),
-        ($"i" * lit(1.0) / $"nb").as("containment_b"))
-      .filter(greatest($"containment_a", $"containment_b")
-        >= ContainmentThreshold)
+  /** Candidates-only CONTAINMENT verification — the asymmetric measure
+    * over a candidate set instead of all pairs (q90/q107, q135).
+    * Unsorted, like [[verifyJaccard]]. */
+  private[graft] def verifyContainment(cand: DataFrame, shf: DataFrame,
+                                       threshold: Double): DataFrame =
+    containmentOf(candidateOverlap(cand, shf), threshold)
 
   // ---------------------------------------------------------------
   // q90 — containment over LSH candidates: the production-scale twin
   // of q85 (VERDICT r8 item 1). Same containment kernel, but run over
-  // q47's banded-LSH candidate pairs instead of the all-pairs join —
-  // the bucketed shape that survives 100 TB (candidates ∝ same-bucket
-  // pairs, verification linear in candidate fp occurrences) where
-  // q85's exact baseline pays Σ occurrences².
+  // q47's banded-LSH candidate pairs instead of an exact candidate
+  // set — the bucketed shape that survives 100 TB (candidates ∝
+  // same-bucket pairs, verification linear in candidate fp
+  // occurrences).
   //
   // Documented recall trade, inherent to banded MinHash: a band match
   // happens with probability ≈ J^BandSize, so a HIGH-containment /
   // LOW-Jaccard pair (a short doc wholly inside a much longer one —
   // exactly the quote-and-extend case containment exists for) can sit
   // below the band threshold and never become a candidate. That gap is
-  // the LSH-ensemble literature's subject; q85 stays the ground truth,
-  // and TextDedupSpec measures q90's recall against it on the fixture
-  // (subset property + recall floor). A deployment wanting the missed
-  // tail EXACTLY runs q131 ([[prefixContainmentPairs]]) — the
-  // asymmetric prefix-filter kernel that catches every subset pair
-  // with no all-pairs join and no hot-shingle cutoff.
+  // the LSH-ensemble literature's subject; exact q85/q131
+  // ([[prefixContainmentPairs]]) is the ground truth, and TextDedupSpec
+  // measures q90's recall against it on the fixture (subset property
+  // + recall floor). A deployment wanting the missed tail EXACTLY runs
+  // that asymmetric prefix-filter kernel, which catches every subset
+  // pair with no all-pairs join.
   //
   // Sizes (na/nb) are computed over the FULL fp relation (the q47
   // verification universe); q85's baseline sizes are post-doc-freq-
@@ -1315,7 +1250,8 @@ object Dedup {
                              eagerBands: Boolean = false): DataFrame = {
     val bands = lshBands(shf).localCheckpoint(eagerBands)
     val cand = bandCandidates(bands).select($"doc_a", $"doc_b").distinct()
-    verifyContainment(cand, shf)
+    verifyContainment(cand, shf, ContainmentThreshold)
+      .orderBy($"doc_a", $"doc_b")
   }
 
   // ---------------------------------------------------------------
@@ -1702,8 +1638,9 @@ object Dedup {
     val fps = shingleFpsFrom(docs).localCheckpoint(true)
     val bands = lshBands(fps).localCheckpoint(true)
     val cand = bandCandidates(bands).localCheckpoint(true)
-    val verified = verifyCandidates(
-      cand.select($"doc_a", $"doc_b").distinct(), fps)
+    val verified = verifyJaccard(
+      cand.select($"doc_a", $"doc_b").distinct(), fps, JaccardThreshold)
+      .orderBy($"doc_a", $"doc_b")
       .localCheckpoint(true)
     (fps, bands, cand, verified)
   }
@@ -1736,7 +1673,8 @@ object Dedup {
       * next to the Jaccard pass-pairs so a subset-pair refresh
       * maintains instead of recomputing. */
     lazy val contain: DataFrame = verifyContainment(
-        cand.select($"doc_a", $"doc_b").distinct(), fps)
+        cand.select($"doc_a", $"doc_b").distinct(), fps, ContainmentThreshold)
+      .orderBy($"doc_a", $"doc_b")
       .localCheckpoint(true)
     /** One maintenance-machinery run shared by both published tails
       * (carried / fresh-pair / endpoint-fps triple, each side already
@@ -1913,7 +1851,8 @@ object Dedup {
                           prevContain: DataFrame): DataFrame =
     prevContain
       .join(broadcast(carried), Seq("doc_a", "doc_b"), "left_semi")
-      .unionByName(verifyContainmentUnsorted(freshPairs, fpsNeeded))
+      .unionByName(verifyContainment(freshPairs, fpsNeeded,
+        ContainmentThreshold))
 
   /** q107 oracle: the FULL q90 recompute over the new snapshot — the
     * maintained verdict table must land byte-identically on
@@ -1965,7 +1904,7 @@ object Dedup {
     carried
       .join(broadcast(prevVerified.select($"doc_a", $"doc_b")),
         Seq("doc_a", "doc_b"), "left_semi")
-      .unionByName(verifyCandidatesUnsorted(freshPairs, fpsNeeded)
+      .unionByName(verifyJaccard(freshPairs, fpsNeeded, JaccardThreshold)
         .select($"doc_a", $"doc_b"))
 
   /** The index-maintenance candidate machinery shared by the Jaccard
@@ -2098,12 +2037,7 @@ object Dedup {
 
   def lshNearDupPairsSqlFrom(src: String): String =
     s"""${lshCandCtes(src)}
-       |SELECT doc_a, doc_b, i * 1.0 / (sa.n + sb.n - i) AS jaccard
-       |FROM inter
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE i * 1.0 / (sa.n + sb.n - i) >= $JaccardThreshold
-       |ORDER BY doc_a, doc_b""".stripMargin
+       |${jaccardTailSql(JaccardThreshold)}""".stripMargin
 
   /** q90 oracle: the q47 candidate CTE chain with q85's containment
     * tail — containment restricted to the LSH-candidate set. */
@@ -2113,14 +2047,7 @@ object Dedup {
     * q107's full-recompute oracle runs it over the current snapshot. */
   def containmentOverLshSqlFrom(src: String): String =
     s"""${lshCandCtes(src)}
-       |SELECT doc_a, doc_b, i * 1.0 / sa.n AS containment_a,
-       |  i * 1.0 / sb.n AS containment_b
-       |FROM inter
-       |JOIN sz sa ON sa.doc_id = doc_a
-       |JOIN sz sb ON sb.doc_id = doc_b
-       |WHERE greatest(i * 1.0 / sa.n, i * 1.0 / sb.n)
-       |  >= $ContainmentThreshold
-       |ORDER BY doc_a, doc_b""".stripMargin
+       |${containmentTailSql(ContainmentThreshold)}""".stripMargin
 
   // ---------------------------------------------------------------
   // q48 — SimHash: 128-bit md5-based signature reduced to a 32-symbol
@@ -3133,24 +3060,14 @@ object Dedup {
       s"(SELECT * FROM documents WHERE doc_id % " +
         s"${Corpus.SnapRemovedMod} <> ${Corpus.SnapRemovedRes})")
 
-  /** q140 oracle: q85's brute-force CTEs (verbatim) re-tailed with
+  /** q140 oracle: the brute-force CTE chain ([[exactPairCtes]]) with
     * the same integer-size drop rule — prefix filtering is exact, so
     * the composed keep must hash-match the quadratic baseline's. */
   lazy val containmentKeepCorpusSql: String =
     containmentKeepCorpusSqlFrom("documents")
 
   def containmentKeepCorpusSqlFrom(src: String): String =
-    s"""WITH ${shinglesCte(src = src)},
-       |$fpsCte,
-       |hot AS (SELECT fp FROM fps GROUP BY fp
-       |        HAVING COUNT(*) > $MaxShingleDocFreq),
-       |kept AS (SELECT * FROM fps
-       |         WHERE fp NOT IN (SELECT fp FROM hot)),
-       |sz AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-       |  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+    s"""${exactPairCtes(src)},
        |pairs AS (
        |  SELECT doc_a, doc_b, i, sa.n AS na, sb.n AS nb
        |  FROM inter

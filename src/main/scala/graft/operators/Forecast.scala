@@ -56,20 +56,6 @@ object Forecast {
   private def scaled(c: Column): Column =
     floor(c * QScale + lit(0.5))
 
-  /** Per-(site, hour) training frame with seasonal lags + Fourier
-    * terms over the gold PV series (kept for spec parity). */
-  private[graft] def trainingFrame(features: DataFrame): DataFrame = {
-    val w = Window.partitionBy($"site").orderBy($"ts_utc")
-    features
-      .select($"site", $"ts_utc", $"pv_est_mwh".as("y"))
-      .withColumn("lag24", lag($"y", 24).over(w))
-      .withColumn("lag48", lag($"y", 48).over(w))
-      .withColumn("hod", hour($"ts_utc").cast(DoubleType))
-      .withColumn("sin_h", sin($"hod" * (2 * math.Pi / 24)))
-      .withColumn("cos_h", cos($"hod" * (2 * math.Pi / 24)))
-      .filter($"lag24".isNotNull && $"lag48".isNotNull)
-  }
-
   /** Solve (A + ridge·I)·β = b for SPD A by UNROLLABLE Cholesky — no
     * pivoting, no data-dependent branching, every accumulation
     * left-associated — so the DuckDB oracle can replay the IDENTICAL

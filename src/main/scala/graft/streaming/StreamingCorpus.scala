@@ -114,7 +114,7 @@ object StreamingCorpus {
   //   (b) the stores ARE the product — the same bands/fps tables the
   //       batch path computes, queryable mid-stream for audits;
   //   (c) every per-batch transformation is the BATCH operator
-  //       (lshBands, verifyCandidates, clusterLabels /
+  //       (lshBands, verifyJaccard, clusterLabels /
   //       dedupKeepCorpusFrom) applied to micro-batch frames, so
   //       streaming-vs-batch parity is structural, not reimplemented.
   // At 100 TB the append-only logs shard by their join keys (bands by
@@ -209,7 +209,8 @@ object StreamingCorpus {
       .join(broadcast(oversized), Seq("band_id", "band_val"), "left_anti")
       .select($"doc_a", $"doc_b").distinct()
     val fps = spark.read.parquet(s"$root/fps").distinct()
-    val verified = Dedup.verifyCandidates(cand, fps)
+    val verified = Dedup.verifyJaccard(cand, fps, Dedup.JaccardThreshold)
+      .orderBy($"doc_a", $"doc_b")
     // r17: label-only CC — the keep never reads cluster_size (q137's
     // shape; see dedupKeepCorpusFrom callers).
     val clusters = Dedup.clusterLabels(
@@ -259,7 +260,7 @@ object StreamingCorpus {
   // fan-out at the cutoff; finally-hot fps may record extra
   // candidates early, which drain-time verification (true Jaccard
   // over the FINAL kept universe, [[graft.operators.Dedup
-  // .verifyJaccardAt]]) prunes — over-capture is filtered, never
+  // .verifyJaccard]]) prunes — over-capture is filtered, never
   // invented.
   //
   // State is the q71 append-only-log discipline SHARDED BY fp
@@ -276,8 +277,10 @@ object StreamingCorpus {
   // so per-batch cost tracks the batch's content (its size + its fps'
   // posting mass + the touched buckets' df slice, which is bounded by
   // vocabulary), not stream length. The `xpair` receipt
-  // (`tools.Receipts`) is the evidence; the r16 full-recount shape is
-  // kept below as its A/B baseline.
+  // (`tools.Receipts`) drains 16 batches this way against one batch
+  // q130 over the same docs; SCALE.md keeps the historical A/B against
+  // the retired r16 full-recount shape (a whole-log re-read and df
+  // recount per batch).
   //
   // Replay idempotence is DOC-granular: Structured Streaming
   // redelivers whole files, so the guard is a broadcast anti-join
@@ -395,35 +398,6 @@ object StreamingCorpus {
     graft.sources.UpsertWriter.publishPartitions(spark, newDf, s"$root/df", "b")
   }
 
-  /** The r16 full-recount batch shape, kept VERBATIM as the `xpair`
-    * receipt's A/B baseline: re-reads the whole accumulated
-    * log and recomputes df per micro-batch — per-batch cost grows
-    * with stream length (the defect the maintained path fixes).
-    * Writes the same sharded log layout so the two drains compare. */
-  private[graft] def processPrefixPairBatchRecount(batch: DataFrame,
-                                                   root: String): Unit = {
-    import graft.operators.Dedup
-    val spark = batch.sparkSession
-    val newFps = Dedup.shingleFpsFrom(batch.select($"doc_id", $"text"))
-      .withColumn("b", fpBucket($"fp"))
-      .localCheckpoint(false)
-    val all = readLog(spark, s"$root/fps", fpsLogSchema)
-      .union(newFps).distinct()
-      .localCheckpoint(false) // df + both probe sides share it
-    val hot = all.groupBy($"fp").agg(count(lit(1)).as("df"))
-      .filter($"df" > Dedup.MaxShingleDocFreq).select($"fp")
-      .localCheckpoint(false)
-    val keptNew = newFps.join(broadcast(hot), Seq("fp"), "left_anti")
-    val keptAll = all.join(broadcast(hot), Seq("fp"), "left_anti")
-    val newPairs = keptNew.as("x").join(keptAll.as("y"), Seq("fp"))
-      .filter($"x.doc_id" =!= $"y.doc_id")
-      .select(least($"x.doc_id", $"y.doc_id").as("doc_a"),
-        greatest($"x.doc_id", $"y.doc_id").as("doc_b"))
-      .distinct()
-    newPairs.write.mode("append").parquet(s"$root/cand")
-    newFps.write.mode("append").partitionBy("b").parquet(s"$root/fps")
-  }
-
   /** The maintained df table (fp, df) — spec/receipt accessor: on a
     * clean (crash-free) run it must equal the drain's recount from
     * the log, which is what keeps it safe to probe with. */
@@ -456,7 +430,7 @@ object StreamingCorpus {
                                         root: String): DataFrame = {
     import graft.operators.Dedup
     val (kept, cand) = drainedPairState(spark, root)
-    Dedup.verifyJaccardAt(cand, kept, Dedup.PrefixJaccardThreshold)
+    Dedup.verifyJaccard(cand, kept, Dedup.PrefixJaccardThreshold)
       .localCheckpoint(false) // the q130 sort-sample discipline
       .orderBy($"doc_a", $"doc_b")
   }
@@ -467,7 +441,7 @@ object StreamingCorpus {
                                    root: String): DataFrame = {
     import graft.operators.Dedup
     val (kept, cand) = drainedPairState(spark, root)
-    Dedup.verifyContainmentUnsorted(cand, kept)
+    Dedup.verifyContainment(cand, kept, Dedup.ContainmentThreshold)
       .localCheckpoint(false)
       .orderBy($"doc_a", $"doc_b")
   }

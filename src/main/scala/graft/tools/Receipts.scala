@@ -252,7 +252,7 @@ object Receipts {
         Corpus.perplexityBucketsSketch(docs)),
       "q84 snapshot diff" -> (() =>
         Corpus.snapshotDiffDerived(docs).orderBy($"doc_id")),
-      "q85 containment pairs" -> (() => Dedup.containmentPairsFrom(docs)),
+      "q85 containment pairs" -> (() => Dedup.prefixContainmentPairsFrom(docs)),
       "q86 heavy hitters + CMS" -> (() => Corpus.heavyHittersFrom(docs)),
       "q66 frame sample" -> (() => Multimodal.frameSampleFrom(media)),
       "q67 media resize" -> (() => Multimodal.mediaResizeFrom(media)),
@@ -561,14 +561,6 @@ object Receipts {
           docs, threshold = 0.8, maxDocFreq = Int.MaxValue)),
         Arm("q45 brute, no cutoff", () => Dedup.jaccardPairsFrom(docs,
           threshold = 0.8, maxDocFreq = Int.MaxValue)))
-    }),
-    Row("prefixcont", 25, agree = true, passes = 2, { s =>
-      val docs = boilerplateCorpus(s)
-      Seq(Arm("q85 brute, cutoff 256", () => Dedup.containmentPairsFrom(docs)),
-        Arm("q131 prefix, no cutoff", () => Dedup.prefixContainmentPairsFrom(
-          docs, maxDocFreq = Int.MaxValue)),
-        Arm("q85 brute, no cutoff", () => Dedup.containmentPairsFrom(docs,
-          maxDocFreq = Int.MaxValue)))
     })) ++
     // the q132 dirty-fraction sweep: ~5%, ~20%, ~50% of docs changed
     Seq(20L -> "5", 5L -> "20", 2L -> "50").map { case (m, pct) =>
@@ -615,25 +607,26 @@ object Receipts {
         Arm("stream, 1 batch", () => StreamingCorpus.pqEncodeStream(
           s.spark, staged, books, cents)))
     }),
-    // q134/q135 exact streaming pairs over 16 equal micro-batches (2
-    // per scale below 8): the maintained path stays flat in the batch
-    // index, the full-recount baseline grows with the accumulated log
+    // q134 exact streaming pairs over 16 equal micro-batches (2 per
+    // scale below 8) against one batch q130 over the same docs: the
+    // drain must agree, and its first- and second-half batch times show
+    // whether per-batch cost stays flat in the batch index
     Row("xpair", 10, agree = true, passes = 3, { s =>
       val n = math.min(16, 2 * s.scale)
       val docs = ampDocs(Tables.documents(s.spark, s.dir), s.scale,
         tokenDisjoint = true).localCheckpoint(true)
       val batches = (0 until n).map(k =>
         docs.filter($"doc_id" % n === k).localCheckpoint(true))
-      def drain(label: String, process: (DataFrame, String) => Unit) =
-        Arm(label, { () =>
+      Seq(Arm("batch q130", () => Dedup.prefixJaccardPairsFrom(docs,
+          threshold = Dedup.PrefixJaccardThreshold)),
+        Arm("maintained", { () =>
           val root = StreamingClean.trackedTempDir("graft-xpair-")
-          val ts = batches.map(b => secs(process(b, root))._2)
-          println(f"    $label: first-half batches ${ts.take(n / 2).sum}%.2f s" +
+          val ts = batches.map(b =>
+            secs(StreamingCorpus.processPrefixPairBatch(b, root))._2)
+          println(f"    maintained: first-half batches ${ts.take(n / 2).sum}%.2f s" +
             f", second-half ${ts.drop(n / 2).sum}%.2f s")
           StreamingCorpus.resolvePrefixPairs(s.spark, root)
-        })
-      Seq(drain("recount", StreamingCorpus.processPrefixPairBatchRecount),
-        drain("maintained", StreamingCorpus.processPrefixPairBatch))
+        }))
     }),
     // q62 on a 10,000·scale path graph (diameter n): the propagation
     // tier must escalate to the star tier; one component, min-id label

@@ -273,9 +273,30 @@ class ForecastSpec extends AnyFunSuite {
   }
 
   test("training frame: lags align (lag24 equals the value 24 rows back)") {
-    val t = Forecast.trainingFrame(Weather.goldFeatures(spark, sf))
-      .filter(col("site") === "click").orderBy("ts_utc").collect()
-    assert(t.nonEmpty)
+    // the frame q30 fits from: per site, a training row at history
+    // position k carries the quantized y_pv of positions k−24 and k−48
+    val hist = Forecast.history(spark, sf)
+    val qy = hist.select(col("site"), col("ts_utc"),
+        Forecast.quant(col("y_pv")).as("q"))
+      .orderBy("site", "ts_utc").collect().toSeq.groupBy(_.getString(0))
+      .view.mapValues { rs =>
+        (rs.map(_.get(1)).zipWithIndex.toMap,
+          rs.map(r => if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+      }.toMap
+    val train = Forecast.buildTrain(hist)
+      .select("site", "ts_utc", "lag24_pv", "lag48_pv").collect()
+    assert(train.map(_.getString(0)).distinct.length === qy.size,
+      "every site must keep training rows")
+    def back(r: org.apache.spark.sql.Row, rows: Int) = {
+      val (pos, q) = qy(r.getString(0))
+      q(pos(r.get(1)) - rows)
+    }
+    train.foreach { r =>
+      assert(Some(r.getDouble(2)) === back(r, 24), s"lag24_pv at $r")
+      assert(Some(r.getDouble(3)) === back(r, 48), s"lag48_pv at $r")
+    }
+    // sensitivity: a one-row shift would not pass unnoticed
+    assert(train.exists(r => Some(r.getDouble(2)) != back(r, 23)))
   }
 
   test("MLlib LinearRegression(solver=normal) matches Forecast.solve " +

@@ -9,6 +9,21 @@ import graft.operators.{Corpus, Dedup, JdkImageCodec, JdkWavCodec, Multimodal, T
 class TextDedupSpec extends AnyFunSuite {
   import TestSpark._
 
+  /** The all-pairs containment kernel q85 once ran, kept here only as
+    * the exactness reference for the prefix kernel that now serves
+    * q85/q131: [[Dedup.pairOverlap]] scored with the containment
+    * measure written out independently of the engine's. */
+  private def bruteContainment(docs: org.apache.spark.sql.DataFrame,
+      threshold: Double = Dedup.ContainmentThreshold) = {
+    val (ca, cb) = (col("i") * lit(1.0) / col("na"),
+      col("i") * lit(1.0) / col("nb"))
+    Dedup.pairOverlap(Dedup.shingleFpsFrom(docs), "fp")
+      .filter(greatest(ca, cb) >= threshold)
+      .select(col("doc_a"), col("doc_b"),
+        ca.as("containment_a"), cb.as("containment_b"))
+      .orderBy("doc_a", "doc_b")
+  }
+
   test("token stats: totals consistent (distinct <= tokens, lengths add up)") {
     val rows = TextOps.tokenStats(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -160,7 +175,7 @@ class TextDedupSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSeq
     val docs = Tables.documents(spark, sf)
     assert(asRows(Dedup.prefixContainmentPairsFrom(docs)) ===
-           asRows(Dedup.containmentPairsFrom(docs)),
+           asRows(bruteContainment(docs)),
       "prefix containment must reproduce brute force exactly on the fixture")
     // base docs + TRUNCATED clones: a short doc wholly inside a much
     // longer one — near-1 containment, low Jaccard. This is the pair
@@ -181,7 +196,7 @@ class TextDedupSpec extends AnyFunSuite {
             vocab(rnd.nextInt(vocab.size))).mkString(" ")))
       }).toDF("doc_id", "text")
     for (t <- Seq(0.8, 0.5)) {
-      val brute = asRows(Dedup.containmentPairsFrom(subsetDocs, threshold = t))
+      val brute = asRows(bruteContainment(subsetDocs, threshold = t))
       assert(brute.nonEmpty, s"subset corpus must produce pairs at t=$t")
       assert(asRows(Dedup.prefixContainmentPairsFrom(subsetDocs,
         threshold = t)) === brute,
@@ -1658,7 +1673,7 @@ class TextDedupSpec extends AnyFunSuite {
       (1L, "a b c d"),
       (2L, "a b c d e f g h i j k l"),
       (3L, "unrelated text with no overlap at all")).toDF("doc_id", "text")
-    val cont = Dedup.containmentPairsFrom(docs).collect()
+    val cont = Dedup.prefixContainmentPairsFrom(docs).collect()
     assert(cont.length === 1)
     val r = cont.head
     assert((r.getLong(0), r.getLong(1)) === (1L, 2L))
@@ -1669,7 +1684,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("q90 containment-over-LSH is a subset of exact q85 with " +
        "identical scores; fixture recall measured") {
-    val exact = Dedup.containmentPairs(spark, sf).collect()
+    val exact = Dedup.prefixContainmentPairs(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     val lsh = Dedup.containmentOverLsh(spark, sf).collect()
@@ -1704,7 +1719,7 @@ class TextDedupSpec extends AnyFunSuite {
       (1L, "a b c d"),
       (2L, "a b c d e f g h i j k l"),
       (3L, "unrelated text with no overlap at all")).toDF("doc_id", "text")
-    assert(Dedup.containmentPairsFrom(docs).collect().length === 1)
+    assert(Dedup.prefixContainmentPairsFrom(docs).collect().length === 1)
     val lsh = Dedup.containmentOverLshFrom(Dedup.shingleFpsFrom(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(!lsh.contains((1L, 2L)),
@@ -1713,7 +1728,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("q85 on the fixture: asymmetric scores consistent with q45's " +
        "symmetric view") {
-    val cont = Dedup.containmentPairs(spark, sf).collect()
+    val cont = Dedup.prefixContainmentPairs(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
     assert(cont.nonEmpty)
