@@ -379,8 +379,9 @@ object Dedup {
     * ranked occurrence view (pos, n), the prefix rows, and the verify
     * arrays all derive ROW-LOCALLY from this checkpointed 1-row-per-doc
     * frame. The r16 shape (a ranked occurrence view from a Window
-    * over [[keptItems]], + [[candidateOverlap]]'s array build) paid: a hot-set aggregate, a SECOND df aggregate over
-    * the kept relation, a Window sort exchange, and a THIRD doc-keyed
+    * over [[keptItems]], + [[candidateOverlap]]'s array build) paid: a
+    * hot-set aggregate, a SECOND df aggregate over the kept relation,
+    * a Window sort exchange, and a THIRD doc-keyed
     * aggregate for verify arrays — 6 exchanges of the occurrence
     * relation vs 3 here, plan-diffed in plans/r17.
     *
@@ -619,9 +620,9 @@ object Dedup {
     containedSized(prefixContainmentOverlap(items, itemCol, threshold,
       maxDocFreq), threshold)
 
-  /** The prefix kernel's verified candidates, unthresholded: (doc_a,
-    * doc_b, i, na, nb) for every pair that survives the prefix and
-    * positional filters at τ. */
+  /** The prefix kernel's candidates with their exact overlap, before
+    * the τ filter: (doc_a, doc_b, i, na, nb) for every pair that
+    * survives the prefix and positional filters at τ. */
   private def prefixContainmentOverlap(
       items: DataFrame, itemCol: String, threshold: Double,
       maxDocFreq: Int): DataFrame = {

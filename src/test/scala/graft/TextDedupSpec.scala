@@ -9,10 +9,10 @@ import graft.operators.{Corpus, Dedup, JdkImageCodec, JdkWavCodec, Multimodal, T
 class TextDedupSpec extends AnyFunSuite {
   import TestSpark._
 
-  /** The all-pairs containment kernel q85 once ran, kept here only as
-    * the exactness reference for the prefix kernel that now serves
-    * q85/q131: [[Dedup.pairOverlap]] scored with the containment
-    * measure written out independently of the engine's. */
+  /** All-pairs containment: the exactness reference for the prefix
+    * kernel that serves q85/q131. [[Dedup.pairOverlap]] scored with
+    * the containment measure written out independently of the
+    * engine's. */
   private def bruteContainment(docs: org.apache.spark.sql.DataFrame,
       threshold: Double = Dedup.ContainmentThreshold) = {
     val (ca, cb) = (col("i") * lit(1.0) / col("na"),
