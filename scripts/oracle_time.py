@@ -6,10 +6,11 @@ engine never depends on this); the driver box has duckdb for the oracle.
 Usage:  python3 scripts/oracle_time.py <sfDir> <verifyOutDir> [query ...]
 
 Reads <verifyOutDir>/oracle_sql.json (written by graft.Verify), runs each
-named query (default: all) against views over <sfDir>/*.parquet with 32
-threads, prints best-of-3 seconds per query and the total.
+named query (default: all) against views over <sfDir>/*.parquet with one
+thread per core of the host (the cores graft.Bench runs on), prints
+best-of-3 seconds per query and the total.
 """
-import json, sys, time
+import json, os, sys, time
 from pathlib import Path
 
 import duckdb
@@ -25,7 +26,7 @@ def main():
     if not names:
         names = sorted(sqls)
     con = duckdb.connect()
-    con.execute("SET threads TO 32")
+    con.execute(f"SET threads TO {os.cpu_count()}")
     for t in TABLES:
         p = Path(sf_dir, f"{t}.parquet")
         if p.exists():

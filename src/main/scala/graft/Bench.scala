@@ -3,16 +3,20 @@ package graft
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{DecimalNode, ObjectNode}
 
+import graft.state.Published
+import graft.streaming.StreamingClean.rmTree
+
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with total + per-query
   * wall-clock seconds.
   *
-  * Every query is forced with `.count()` (full plan execution, no
-  * result materialization to the driver beyond the count). A tiny
-  * warmup action first separates session/codegen startup cost from the
-  * per-query numbers. q34 (streaming + disk merge), q35 (payload
-  * round-trip construction), q38 (end-to-end warehouse publish), and
-  * q68 (streaming state store) are excluded: they benchmark sinks and
+  * Every query is forced by [[Force.resultHash]] over its full result,
+  * the result the DuckDB oracle computes (gridperf `analytics` and the
+  * scale receipts force the same way). A tiny warmup action first
+  * separates session/codegen startup cost from the per-query numbers.
+  * q34 (streaming + disk merge), q35 (payload round-trip
+  * construction), q38 (end-to-end warehouse publish), and q68
+  * (streaming state store) are excluded: they benchmark sinks and
   * store publishes, not query execution — correctness still runs in
   * Verify/CORRECTNESS for all four (hash-gated for q34/q38/q68;
   * rows-only for q35, whose payload build is deliberately not
@@ -92,13 +96,12 @@ object Bench {
     // /tmp and point the queries at the result.
     val queryDir = {
       val srcDir = new java.io.File(sfDir).getAbsoluteFile
-      // invalidation key: source identity + file inventory + mtimes +
-      // sizes + table list — regenerated fixtures, a different dir
-      // with the same basename, or a new table all force a rewrite
-      val fingerprint = (srcDir.getPath +: Tables.all.map { t =>
-        val f = new java.io.File(srcDir, s"$t.parquet")
-        s"$t:${f.exists()}:${f.lastModified()}:${f.length()}"
-      }).mkString("\n")
+      // invalidation key: source identity + each table's file
+      // inventory (paths, mtimes, sizes) — regenerated fixtures or a
+      // different dir with the same basename force a rewrite
+      val fingerprint = (srcDir.getPath +:
+        Tables.all.map(Published.inventory(srcDir.getPath, _)))
+        .mkString("\n")
       val dest = new java.io.File(
         s"/tmp/graft_wh_${srcDir.getName}_${Integer.toHexString(fingerprint.hashCode)}")
       val marker = new java.io.File(dest, "_READY")
@@ -114,10 +117,6 @@ object Bench {
         // basename (regenerated fixtures) and orphaned staging dirs
         // from crashed runs are pruned so /tmp doesn't accumulate
         // dead copies forever.
-        def rmTree(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rmTree))
-          f.delete()
-        }
         val stage = new java.io.File(
           s"${dest.getPath}.tmp_${ProcessHandle.current().pid()}_${System.nanoTime()}")
         val n = spark.sparkContext.defaultParallelism
@@ -142,9 +141,9 @@ object Bench {
           val winnerOk = marker.exists() &&
             new String(java.nio.file.Files.readAllBytes(marker.toPath),
               "UTF-8") == fingerprint
-          if (winnerOk) rmTree(stage)
+          if (winnerOk) rmTree(stage.getPath)
           else {
-            rmTree(dest)
+            rmTree(dest.getPath)
             if (!stage.renameTo(dest))
               throw new java.io.IOException(
                 s"warehouse publish failed: $stage -> $dest")
@@ -160,7 +159,7 @@ object Bench {
           // the live warehouse of a concurrent run against
           // regenerated fixtures — deleting it mid-scan would fail
           // that run. Older than 6h it's a dead copy either way.
-          if (isSibling && f.lastModified() < staleAge) rmTree(f)
+          if (isSibling && f.lastModified() < staleAge) rmTree(f.getPath)
         })
       }
       dest.toString
@@ -177,13 +176,10 @@ object Bench {
     // fixture dir too, since the re-layout reads it but a re-layout
     // cache hit skips that read.
     locally {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
       val buf = new Array[Byte](1 << 20)
       var bytes = 0L
       (Set(queryDir, sfDir)).foreach { d =>
-        walk(new java.io.File(d)).foreach { f =>
+        Published.walk(new java.io.File(d)).foreach { f =>
           val in = new java.io.FileInputStream(f)
           try {
             var n = in.read(buf)
@@ -204,12 +200,11 @@ object Bench {
           // queries may cache intermediates (shingles, LSH bands);
           // clear between queries so storage doesn't accumulate
           spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val ok = try { fn(spark, queryDir).count(); true }
-                   catch { case e: Throwable =>
-                     System.err.println(s"[bench] $name failed: ${e.getMessage}")
-                     false }
-          val dt = (System.nanoTime() - t0) / 1e9
+          val (ok, dt) = Force.secs(
+            try { Force.resultHash(fn(spark, queryDir)); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false })
           name -> (if (ok) dt else -1.0)
       }.toMap
     // Host-contention diagnostics: the driver box is shared, and both
@@ -344,14 +339,13 @@ object Bench {
 
   // the artifact documents its own gate math (VERDICT r12 item 7):
   // the denominator for value_oracle_subset is the DuckDB total over
-  // the same timed oracle SQLs at the same sf. The engine cannot run
-  // DuckDB itself (driver-side only), so the hint carries the last
-  // judge-measured numbers with their provenance (VERDICT r13
-  // item 2: BOTH the full-suite total and the total excluding the
-  // three DuckDB-hostile r13 queries, so the headline is honest
-  // about what carries it).
+  // the same timed oracle SQLs at the same sf, on the same host. The
+  // engine cannot run DuckDB itself (driver-side only), so the hint
+  // carries the last measured numbers with their provenance: BOTH the
+  // full-suite total and the total excluding the three DuckDB-hostile
+  // queries, so the headline is honest about what carries it.
   private val duckdbHint: JsonNode = mapper.readTree(
-    """{"value":461.1,"unit":"sec","source":"judge r16 best-of-3 per query over the full 122-query timed subset (451.1 s, sf0.1, 32 threads, one coherent rerun incl. the CTE trio) + builder r17 best-of-3 for the new q136/q137 (3.03/3.14) and q140/q141/q142 (0.45/2.90/0.50 via scripts/oracle_time.py), 127 timed queries","ex_new_trio_value":129.2,"ex_new_trio_note":"excluding q126/q128/q129, whose DuckDB oracles (unrolled BPE merge rounds, recursive-CTE reachability) pay 30.1/121.0/180.7 s where Spark pays ~1.4/2.7/0.3 s"}""")
+    """{"value":600.4,"unit":"sec","source":"scripts/oracle_time.py, 2026-10-20, sf0.1 on a 4-core 15 GB host (DuckDB threads = cores = 4, the host graft.Bench ran on): best-of-3 per query over 124 timed queries (125.3 s) + q126/q128/q129 timed once (121.0/91.2/262.9 s), 127 timed queries","ex_new_trio_value":125.3,"ex_new_trio_note":"excluding q126/q128/q129, whose DuckDB oracles (unrolled BPE merge rounds, recursive-CTE reachability) pay 121.0/91.2/262.9 s, each timed once"}""")
 
   /** Oracle-twinned queries that failed (-1) in `results`: a failure
     * would silently shrink the subset numerator while the DuckDB

@@ -1641,7 +1641,6 @@ object Dedup {
     val cand = bandCandidates(bands).localCheckpoint(true)
     val verified = verifyJaccard(
       cand.select($"doc_a", $"doc_b").distinct(), fps, JaccardThreshold)
-      .orderBy($"doc_a", $"doc_b")
       .localCheckpoint(true)
     (fps, bands, cand, verified)
   }
@@ -1675,7 +1674,6 @@ object Dedup {
       * maintains instead of recomputing. */
     lazy val contain: DataFrame = verifyContainment(
         cand.select($"doc_a", $"doc_b").distinct(), fps, ContainmentThreshold)
-      .orderBy($"doc_a", $"doc_b")
       .localCheckpoint(true)
     /** One maintenance-machinery run shared by both published tails
       * (carried / fresh-pair / endpoint-fps triple, each side already

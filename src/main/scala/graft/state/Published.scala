@@ -101,14 +101,15 @@ object Published {
     * file SIZES keeps its fingerprint. Fine for the fixtures; a store
     * needing airtight invalidation would hash parquet footers
     * (content-addressed) instead of stat() metadata. */
-  def inventory(dir: String, table: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f)
+  def inventory(dir: String, table: String): String =
     walk(new java.io.File(dir, s"$table.parquet")).sortBy(_.getPath)
       .map(f => s"${f.getPath}:${f.lastModified}:${f.length}")
       .mkString("\n")
-  }
+
+  /** Every file under `f` (`f` itself when it is a file). */
+  private[graft] def walk(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    else Seq(f)
 
   /** (name, dir, fingerprint) of every entry `spark` has built. */
   private[graft] def entries(spark: SparkSession): Seq[(String, String, String)] = {

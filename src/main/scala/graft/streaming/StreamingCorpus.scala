@@ -210,7 +210,6 @@ object StreamingCorpus {
       .select($"doc_a", $"doc_b").distinct()
     val fps = spark.read.parquet(s"$root/fps").distinct()
     val verified = Dedup.verifyJaccard(cand, fps, Dedup.JaccardThreshold)
-      .orderBy($"doc_a", $"doc_b")
     // r17: label-only CC — the keep never reads cluster_size (q137's
     // shape; see dedupKeepCorpusFrom callers).
     val clusters = Dedup.clusterLabels(

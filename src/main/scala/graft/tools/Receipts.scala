@@ -9,7 +9,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{SparkEntry, Tables}
+import graft.Force.{resultHash, secs}
 import graft.delta.Delta
 import graft.operators.{Classify, Corpus, Dedup, Multimodal, TextOps,
   VectorOps, Weather}
@@ -25,12 +26,14 @@ import graft.syntax._
   * uncharged warm-up pass, then interleaved passes, so co-load hits
   * every arm alike; each arm reports its minimum, its spread
   * (max/min) and the Spark jobs of its fastest pass. Every arm is
-  * forced by [[resultHash]] over its full result — never `.count()`,
-  * which lets Catalyst prune the measured work — and, where the row
-  * says its arms must agree, the hashes must be equal.
+  * forced by [[graft.Force.resultHash]] over its full result — never
+  * `.count()`, which lets Catalyst prune the measured work — and, where
+  * the row says its arms must agree, the hashes must be equal.
   *
   * Usage: runMain graft.tools.Receipts <row>[,<row>...] <sfDir> [scale]
   * (scale defaults to the row's own; an unknown name lists the rows).
+  * A row may also be any driver query name: the query alone, timed by
+  * the same protocol.
   */
 object Receipts {
 
@@ -56,43 +59,9 @@ object Receipts {
                           spread: Double, jobs: Int, jobSum: Double)
 
   // ---------------------------------------------------------------
-  // shared helpers: one timer, one forcing function, one job counter,
-  // one amplifier per input kind, one snapshot builder
+  // shared helpers: one job counter, one amplifier per input kind,
+  // one snapshot builder
   // ---------------------------------------------------------------
-
-  /** `f`'s value and its wall in seconds. */
-  def secs[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** The forcing function: an order-independent hash of the full
-    * result, "rows:sum of per-row xxhash64" — the semantics of
-    * gridperf's `Checks.resultHash`. Doubles are rounded to 6 places
-    * (and -0.0 folded into 0.0) and map entries sorted, so neither
-    * partial-aggregate order nor map iteration order moves it. */
-  def resultHash(df: DataFrame): String = {
-    val renamed = df.toDF(df.columns.indices.map(i => s"c$i"): _*)
-    val cols = renamed.schema.fields.toSeq
-      .map(f => normalize(col(f.name), f.dataType))
-    val row = renamed
-      .select(xxhash64(cols: _*).cast(DecimalType(38, 0)).as("h"))
-      .agg(count(lit(1)), sum(col("h"))).head()
-    s"${row.getLong(0)}:${Option(row.get(1)).getOrElse(0)}"
-  }
-
-  private def normalize(c: Column, t: DataType): Column = t match {
-    case DoubleType | FloatType => round(c.cast(DoubleType), 6) + lit(0.0)
-    case ArrayType(et, _) => transform(c, normalize(_, et))
-    case MapType(kt, vt, _) =>
-      array_sort(transform(map_entries(c), e => struct(
-        normalize(e.getField("key"), kt).as("k"),
-        normalize(e.getField("value"), vt).as("v"))))
-    case StructType(fields) => struct(fields.toSeq
-      .map(f => normalize(c.getField(f.name), f.dataType).as(f.name)): _*)
-    case _ => c
-  }
 
   /** The job counter: every Spark job submitted while `f` runs, with
     * its wall in ms, broadcast and subquery jobs included. Job ids are
@@ -651,13 +620,22 @@ object Receipts {
         Arm("keep", () => Dedup.dedupKeepCorpusFrom(docs, clusters)))
     }),
     // the text-scoring family's per-job floor, as driver queries over
-    // the fixture itself (scale unused): jobs × per-job cost vs wall
+    // the fixture itself: jobs × per-job cost vs wall
     Row("floors", 1, agree = false, passes = 3, s =>
       Seq("q114_nb_classifier", "q116_incremental_nb",
         "q109_incremental_bigram", "q83_ppl_buckets", "q74_unigram_logprob",
-        "q65_tfidf_topterms").map(q =>
-        Arm(q, () => graft.SparkEntry.queries(q)(s.spark, s.dir))))
+        "q65_tfidf_topterms").map(queryArm(s, _)))
   )
+
+  /** A driver query as an arm over the fixture itself (scale unused). */
+  private def queryArm(s: Scene, q: String): Arm =
+    Arm(q, () => SparkEntry.queries(q)(s.spark, s.dir))
+
+  /** The row named `name`: a table row, or any driver query
+    * (`SparkEntry.queries`) as a one-arm row, the `floors` arm shape. */
+  def row(name: String): Option[Row] =
+    Rows.find(_.name == name).orElse(SparkEntry.queries.get(name).map(_ =>
+      Row(name, 1, agree = false, passes = 3, s => Seq(queryArm(s, name)))))
 
   /** Run one row: build its scene, warm every arm once (the hashes of
     * that pass are the agreement check), then `passes` interleaved
@@ -705,11 +683,11 @@ object Receipts {
   }
 
   def main(args: Array[String]): Unit = {
-    val byName = Rows.map(r => r.name -> r).toMap
-    val picked = args.headOption.toSeq.flatMap(_.split(',')).map(byName.get)
+    val picked = args.headOption.toSeq.flatMap(_.split(',')).map(row)
     if (args.length < 2 || picked.contains(None)) {
       System.err.println("usage: Receipts <row>[,<row>...] <sfDir> [scale]" +
-        "\nrows: " + Rows.map(r => s"${r.name} (${r.scale}x)").mkString(", "))
+        "\nrows: " + Rows.map(r => s"${r.name} (${r.scale}x)").mkString(", ") +
+        ", or any driver query name (one arm, 3 passes)")
       sys.exit(2)
     }
     val spark = graft.Session.local("graft-receipts")

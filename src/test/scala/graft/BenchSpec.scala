@@ -41,7 +41,7 @@ class BenchSpec extends AnyFunSuite {
       "\"loadavg_at_pass_start\":[0.50,0.25,1.00]",
       "\"quiesce_wait_s\":[0,12,5]", "\"pass_spread\":1.01")
       .foreach(field => assert(line.contains(field), field))
-    assert(full.get("duckdb_subset_hint").get("value").asDouble === 461.1)
+    assert(full.get("duckdb_subset_hint").get("value").asDouble === 600.4)
     val posture = full.get("posture")
     assert(!posture.get("aqe").asBoolean &&
       posture.get("shuffle_partitions").asInt === 8 &&
@@ -57,5 +57,18 @@ class BenchSpec extends AnyFunSuite {
         "duckdb_subset_hint", "sf", "posture", "pass_spread", "skipped_n",
         "detail"))
     }
+  }
+
+  test("source scan: one resultHash, in graft/Force.scala, and no " +
+       ".count() in Bench.scala") {
+    val defs = SourceScan.files.collect {
+      case (f, src) if SourceScan.code(src).contains("def resultHash") => f.getPath
+    }
+    assert(defs.size === 1 && defs.head.endsWith("graft/Force.scala"),
+      "force timed queries with graft.Force.resultHash: " + defs.mkString(", "))
+    val bench = SourceScan.files.collectFirst {
+      case (f, src) if f.getPath.endsWith("graft/Bench.scala") => src
+    }.get
+    assert(!bench.contains(".count()"), "Bench forces the full result")
   }
 }

@@ -86,19 +86,12 @@ class DeltaSpec extends AnyFunSuite {
   }
 
   test("the status vocabulary appears in main code only in the seam") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f).filter(_.getName.endsWith(".scala"))
     val literals = Seq("\"unchanged\"", "\"added\"", "\"changed\"",
       "\"removed\"")
-    val offenders = walk(root)
-      .filterNot(_.getPath.endsWith("graft/delta/Delta.scala"))
-      .filter { f =>
-        val src = java.nio.file.Files.readString(f.toPath)
-        literals.exists(src.contains)
-      }
+    val offenders = SourceScan.files.collect {
+      case (f, src) if !f.getPath.endsWith("graft/delta/Delta.scala") &&
+        literals.exists(src.contains) => f
+    }
     assert(offenders.isEmpty,
       s"read snapshot statuses through graft.delta.Delta: " +
         offenders.mkString(", "))

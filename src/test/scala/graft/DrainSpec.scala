@@ -88,17 +88,10 @@ class DrainSpec extends AnyFunSuite {
   }
 
   test("writeStream and checkpointLocation appear only in Drain.scala") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f).filter(_.getName.endsWith(".scala"))
-    val offenders = walk(root)
-      .filterNot(_.getPath.endsWith("graft/streaming/Drain.scala"))
-      .filter { f =>
-        val src = java.nio.file.Files.readString(f.toPath)
-        src.contains("writeStream") || src.contains("\"checkpointLocation\"")
-      }
+    val offenders = SourceScan.files.collect {
+      case (f, src) if !f.getPath.endsWith("graft/streaming/Drain.scala") &&
+        (src.contains("writeStream") || src.contains("\"checkpointLocation\"")) => f
+    }
     assert(offenders.isEmpty,
       s"start streaming queries through graft.streaming.Drain: " +
         offenders.mkString(", "))

@@ -727,4 +727,29 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"),
       s"found an unbroadcast cartesian:\n${p.take(3000)}")
   }
+
+  test("q89 stored index: the stored-verdict build has no global sort " +
+       "and no range exchange — its only readers are semi-joins") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val builds = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint" &&
+            qe.analyzed.output.map(_.name) == Seq("doc_a", "doc_b", "jaccard"))
+          builds.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      operators.Dedup.indexState(Tables.documents(spark, sf))
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (builds.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(builds.size === 1, "one stored-verdict checkpoint")
+    val p = builds.peek()
+    val globalSort = "Sort \\[[^\n]*\\], true".r
+    assert(!p.contains("rangepartitioning") && globalSort.findFirstIn(p).isEmpty,
+      s"stored verdicts are read only by semi-joins:\n${p.take(3000)}")
+  }
 }

@@ -125,16 +125,10 @@ class PublishedSpec extends AnyFunSuite {
   }
 
   test("no hand-rolled TrieMap memo outside graft/state") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f).filter(_.getName.endsWith(".scala"))
-    val offenders = walk(root)
-      .filterNot(_.getPath.contains("graft/state/"))
-      .filter { f =>
-        java.nio.file.Files.readString(f.toPath).contains("concurrent.TrieMap")
-      }
+    val offenders = SourceScan.files.collect {
+      case (f, src) if !f.getPath.contains("graft/state/") &&
+        src.contains("concurrent.TrieMap") => f
+    }
     assert(offenders.isEmpty,
       s"use graft.state.Published instead of a TrieMap memo: " +
         offenders.mkString(", "))

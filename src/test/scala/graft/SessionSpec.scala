@@ -1,23 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every main starts Spark through `graft.Session`, so the posture the
   * benchmark measures is the one the oracle checks. */
 class SessionSpec extends AnyFunSuite {
 
-  private val root = new java.io.File("src/main/scala")
-  private def walk(f: java.io.File): Seq[java.io.File] =
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-    else Seq(f).filter(_.getName.endsWith(".scala"))
-  private lazy val files = {
-    assert(root.isDirectory, s"run from the project root: $root")
-    walk(root).map(f => f -> Files.readString(f.toPath))
-  }
-  private def code(src: String): String =
-    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+  import SourceScan.{code, files}
 
   test("source scan: SparkSession.builder only in Session.scala, and no " +
        "re-layout, warmup or DuckDB-hint switch under src/main/scala") {

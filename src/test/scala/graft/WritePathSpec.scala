@@ -134,12 +134,7 @@ class WritePathSpec extends AnyFunSuite {
 
   test("source scan: no dynamic partition overwrite and no store read " +
        "without a declared schema under src/main/scala") {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root: $root")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else Seq(f).filter(_.getName.endsWith(".scala"))
-    val files = walk(root).map(f => f -> Files.readString(f.toPath))
+    val files = SourceScan.files
     val dynamic = files.collect { case (f, src) if src.contains("partitionOverwriteMode") => f }
     assert(dynamic.isEmpty, s"publish partitions with UpsertWriter.publishPartitions: " +
       dynamic.mkString(", "))
